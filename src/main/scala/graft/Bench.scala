@@ -90,6 +90,7 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val loadStart = osBean.getSystemLoadAverage
+    val startedMs = System.currentTimeMillis()
     // GC + JIT wall-clock attribution: round-8's driver run showed two
     // dedup queries COMPUTING 1.6-3.1x their gate cpu-seconds in suite
     // context while replaying at gate cost in isolation — cpu growth that
@@ -253,16 +254,25 @@ object Bench {
     val gcJitJson = gcJitLog.map { case (n, runs) =>
       "\"" + n + "\":\"" + runs.mkString("; ") + "\"" }.mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"cpu":$fullCpu,"gcjit":$gcJitJson,"env":$envJson,"remeasured":${remeasureLog.mkString("{", ",", "}")},"subfloor":$subfloorJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"cpu":$fullCpu,"gcjit":$gcJitJson,"env":$envJson,"remeasured":${remeasureLog.mkString("{", ",", "}")},"subfloor":$subfloorJson,"sf":"$sfDir","started_ms":$startedMs}"""
     // a FILTERED run (isolation / spot-check, possibly at a different SF)
     // must not clobber the committed full-suite artifact
     if (nameFilter.isEmpty) try {
+      // every full run keeps its own run-stamped copy, so a later run
+      // replacing BENCH_FULL.json (the latest run's map) loses no evidence.
       // Files.writeString THROWS on I/O failure (PrintWriter only sets a
       // silent error flag — a full disk would leave a truncated artifact
-      // with no warning)
-      val out = java.nio.file.Path.of(
-        sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), "BENCH_FULL.json")
-      java.nio.file.Files.writeString(out, fullJson + "\n")
+      // with no warning); the fixed name is replaced by an atomic move, so
+      // two runs ending together leave one whole file, never a torn one
+      import java.nio.file.{Files, Path, StandardCopyOption}
+      // default: the checkout sbt runs from (a forked run's working dir)
+      val repo = sys.env.getOrElse("SPARK_GRAFT_REPO", sys.props("user.dir"))
+      val stamped = Path.of(repo, s"BENCH_FULL_$startedMs.json")
+      Files.writeString(stamped, fullJson + "\n")
+      val tmp = Path.of(repo, s".BENCH_FULL.json.tmp-$startedMs")
+      Files.copy(stamped, tmp, StandardCopyOption.REPLACE_EXISTING)
+      Files.move(tmp, Path.of(repo, "BENCH_FULL.json"),
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}") }
     // Shutdown + gate warnings all print BEFORE the summary line so the

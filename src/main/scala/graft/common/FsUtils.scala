@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-`FileSystem` path utilities replacing the reference's `S3Path`
@@ -105,10 +105,10 @@ object FsUtils {
     * reads are O(1) on any store and deliberately not counted. */
   val listingOps = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Re-run a metadata listing that raced a concurrent writer: Hadoop's
-    * listing iterators stat each entry lazily, so a tmp/commit file
-    * vanishing between readdir and stat (another writer finishing its
-    * atomic rename) throws mid-iteration. The re-list observes a
+  /** Re-run a metadata listing that raced a concurrent writer: a
+    * tmp/commit file vanishing between readdir and stat (another writer
+    * finishing its atomic rename), or a subdirectory vanishing before a
+    * recursive walk lists it, throws mid-listing. The re-list observes a
     * consistent later state — bounded, and only metadata work. */
   private def relisting[T](body: => T): T = {
     var i = 0
@@ -116,7 +116,7 @@ object FsUtils {
       try return body
       catch {
         // the vanishing-file race itself surfaces as FileNotFoundException
-        // (an IOException, NOT a RuntimeException) from the lazy stat —
+        // (an IOException, NOT a RuntimeException) from the stat —
         // catching only RuntimeException would never engage the retry for
         // the exact case this wrapper exists for
         case e @ (_: RuntimeException | _: java.io.IOException) =>
@@ -127,6 +127,23 @@ object FsUtils {
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** Every file under `p` (or `p` itself when it is a file) in the order
+    * `FileSystem.listFiles(p, recursive = true)` yields them: depth-first,
+    * a directory's entries in listing order. On the local FS this walks
+    * plain `listStatus` calls, because `listFiles` wraps each file in a
+    * `LocatedFileStatus` whose permission read forks an `ls -ld` per file
+    * (without Hadoop's native IO). Other stores keep `listFiles`: S3A
+    * answers it with one flat paginated listing, not one per directory. */
+  private def walkFiles(f: FileSystem, p: Path, out: FileStatus => Unit): Unit =
+    if (f.getUri.getScheme == "file")
+      f.listStatus(p).foreach { st =>
+        if (st.isFile) out(st) else walkFiles(f, st.getPath, out)
+      }
+    else {
+      val it = f.listFiles(p, true)
+      while (it.hasNext) { val st = it.next(); if (st.isFile) out(st) }
+    }
 
   /** Recursively list file paths under a prefix with a suffix filter —
     * the engine's analogue of the reference's paginated S3 listing
@@ -140,12 +157,10 @@ object FsUtils {
     if (!f.exists(p)) Nil
     else {
       val out = ArrayBuffer[String]()
-      val it = f.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
+      walkFiles(f, p, { st =>
         val s = st.getPath.toString
-        if (st.isFile && (suffix.isEmpty || s.endsWith(suffix))) out += s
-      }
+        if (suffix.isEmpty || s.endsWith(suffix)) out += s
+      })
       out.toSeq
     }
   }
@@ -160,13 +175,11 @@ object FsUtils {
     if (!f.exists(p)) Nil
     else {
       val out = ArrayBuffer[(String, Long)]()
-      val it = f.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
+      walkFiles(f, p, { st =>
         val name = st.getPath.getName
-        if (st.isFile && !name.startsWith("_") && !name.startsWith("."))
+        if (!name.startsWith("_") && !name.startsWith("."))
           out += ((st.getPath.toString, st.getLen))
-      }
+      })
       out.toSeq
     }
   }

@@ -4,6 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.functions._
 
 import graft.common.FsUtils
@@ -60,6 +62,18 @@ import graft.common.FsUtils
   * per-dir scans — schema drift across appends behaves like the
   * reference's MergeSchema (batch_delta.py:27,40), and each scan keeps its
   * own partition discovery, pruning and pushdown.
+  *
+  * Read cost model: a data dir is written once under a fresh name and
+  * never modified, so resolving its scan — listing its files and
+  * inferring the schema from their footers, one Spark job — is done once
+  * per session while the dir belongs to the head snapshot. Every later
+  * read of that head (`read`, `readWhere`, the DML and merge reads)
+  * wraps the resolved relation in a new logical relation with fresh
+  * attribute ids, so self-joins and `exceptAll` of two reads plan as two
+  * scans. Each head resolution drops the relations of dirs that left the
+  * head, so reuse is bounded by the live snapshot; reads of older
+  * versions resolve fresh, and stats-pruned file-subset scans are built
+  * per read.
   */
 final class ManagedTable(spark: SparkSession, val path: String) {
 
@@ -259,9 +273,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
 
   /** The current snapshot's manifest: on the hint path, O(1) log reads
     * plus at most [[ManagedTable.checkpointInterval]]-1 delta replays —
-    * constant in table size and commit count. */
-  private def lastManifest(): Option[Manifest] =
-    currentVersion.flatMap(manifestAt)
+    * constant in table size and commit count. Scopes the session's reused
+    * data-dir relations to its entries ([[ManagedTable.retainHeadScans]]). */
+  private def lastManifest(): Option[Manifest] = {
+    val m = currentVersion.flatMap(manifestAt)
+    ManagedTable.retainHeadScans(spark, path, m.fold(Seq.empty[Entry])(_.entries))
+    m
+  }
 
   /** (version, commitTimestampMillis) pairs, ascending. */
   def history(): Seq[(Long, Long)] = manifests().map(m => (m.version, m.timestamp))
@@ -346,16 +364,19 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     if (ts.isEmpty) df else df.drop(ts.toIndexedSeq: _*)
   }
 
+  /** One entry's whole-dir scan, reusing the entry's resolved relation
+    * while it belongs to the head snapshot ([[ManagedTable.headScan]]). */
+  private def scan(e: Entry): DataFrame =
+    ManagedTable.headScan(spark, path, e) {
+      e.base.fold(spark.read)(b => spark.read.option("basePath", b)).parquet(e.dir)
+    }
+
   private def readEntries(entries: Seq[Entry],
                           renames: Seq[(String, String)] = Nil): DataFrame =
     entries match {
       case Nil => spark.emptyDataFrame
-      case es => dropTombstones(es.map { e =>
-        applyRenames(
-          e.base.fold(spark.read)(b => spark.read.option("basePath", b))
-            .parquet(e.dir),
-          renames)
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
+      case es => dropTombstones(es.map(e => applyRenames(scan(e), renames))
+        .reduce(_.unionByName(_, allowMissingColumns = true)))
     }
 
   // ------------------------------------------------------- deletion vectors
@@ -378,10 +399,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     entries match {
       case Nil => spark.emptyDataFrame
       case es => dropTombstones(es.map { e =>
-        applyRenames(
-          e.base.fold(spark.read)(b => spark.read.option("basePath", b))
-            .parquet(e.dir),
-          renames)
+        applyRenames(scan(e), renames)
           .withColumn(DvFile, col("_metadata.file_path"))
           .withColumn(DvPos, col("_metadata.row_index"))
       }.reduce(_.unionByName(_, allowMissingColumns = true)))
@@ -1212,9 +1230,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         n.stripPrefix(prefix).toIntOption.exists(v => prefix + v == n) })
       return None
     // ONE logical snapshot relation serves key discovery, the presence
-    // guard and the rewrite slice: each readEntries construction re-lists
-    // and re-infers schemas per entry, so building the snapshot read three
-    // times tripled the fixed metadata cost of every pruned DML call.
+    // guard and the rewrite slice.
     val baseRead =
       if (cur.dvs.isEmpty) readEntries(cur.entries, cur.renames)
       else readEntriesWithMeta(cur.entries, cur.renames)
@@ -1505,8 +1521,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         else {
           val blooms = spark.read.parquet(bd)
           val bloomedTypes = {
-            val schema = e.base.fold(spark.read)(b =>
-              spark.read.option("basePath", b)).parquet(e.dir).schema
+            val schema = scan(e).schema
             blooms.schema.fieldNames.filter(_.startsWith("bloom_"))
               .map(_.stripPrefix("bloom_")).flatMap(c =>
                 schema.fields.find(_.name.equalsIgnoreCase(c))
@@ -1614,16 +1629,15 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       val dfs = pruneEntries(m.entries, condition, withCounts = false).map {
         case (e, sel, _, _) if sel.forall(_.nonEmpty) =>
           // Some(kept files) -> pruned scan; None -> full-dir scan
-          // (no/weak stats: Spark enumerates the dir itself)
-          val scan = bucketFilter(applyRenames(
-            sel.fold(spark.read.option("basePath", e.base.getOrElse(e.dir))
-                .parquet(e.dir)) { files =>
+          // (no/weak stats: the entry's reused whole-dir relation)
+          val entryScan = bucketFilter(applyRenames(
+            sel.fold(scan(e)) { files =>
               spark.read.option("basePath", e.base.getOrElse(e.dir))
                 .parquet(files: _*)
             },
             m.renames))
-          if (m.dvs.isEmpty) scan
-          else scan.withColumn(DvFile, col("_metadata.file_path"))
+          if (m.dvs.isEmpty) entryScan
+          else entryScan.withColumn(DvFile, col("_metadata.file_path"))
             .withColumn(DvPos, col("_metadata.row_index"))
         case (e, _, _, _) =>
           // fully-pruned entry: keep its SCHEMA as a zero-row slice —
@@ -2034,9 +2048,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       renames.foldLeft(phys) { case (n, (f, t)) =>
         if (n.equalsIgnoreCase(f)) t else n }
     val finalSchema = read().schema
-    def selectItems(dir: String, base: Option[String]): String = {
-      val phys = base.fold(spark.read)(b =>
-        spark.read.option("basePath", b)).parquet(dir).schema
+    def selectItems(e: Entry): String = {
+      val phys = scan(e).schema
       val physByLogical = phys.fieldNames
         .map(p => logicalName(p).toLowerCase -> p).toMap
       finalSchema.map { f =>
@@ -2049,9 +2062,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val selects = m.map(_.entries).getOrElse(Nil) match {
       case Nil => Seq(s"SELECT *$meta FROM parquet.`$path`")
       case es => es.map {
-        case Entry(d, None) =>
-          s"SELECT ${selectItems(d, None)}$meta FROM parquet.`$d`"
-        case Entry(d, Some(b)) =>
+        case e @ Entry(d, None) =>
+          s"SELECT ${selectItems(e)}$meta FROM parquet.`$d`"
+        case e @ Entry(d, Some(b)) =>
           // decode `pcol=value` path segments below the base into predicates
           val rel = normPath(d).stripPrefix(normPath(b)).stripPrefix("/")
           val preds = rel.split("/").toSeq.map { seg =>
@@ -2064,7 +2077,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
               s"CAST($c AS STRING) = '$lit'"
             }
           }
-          s"SELECT ${selectItems(d, Some(b))}$meta FROM parquet.`$b` " +
+          s"SELECT ${selectItems(e)}$meta FROM parquet.`$b` " +
             s"WHERE ${preds.mkString(" AND ")}"
       }
     }
@@ -2347,6 +2360,82 @@ object ManagedTable {
     * production — one volatile read per chain step. */
   private[table] val chainWalkHook =
     new java.util.concurrent.atomic.AtomicReference[Long => Unit](_ => ())
+
+  // --------------------------------------------- head-scoped scan reuse
+  // See "Read cost model" in the class doc. Entries outside the head
+  // (time travel to older versions) always resolve fresh.
+
+  /** One table's reusable relations: `head` is the entry set of the head
+    * manifest last resolved, and `rels` only ever holds members of it. */
+  private final class HeadScans {
+    var head: Set[Entry] = Set.empty
+    val rels = scala.collection.mutable.HashMap.empty[Entry, BaseRelation]
+  }
+
+  /** Tables whose head relations are kept, least recently used dropped
+    * first: a JVM that touches many tables (a test suite, a long-lived
+    * service) keeps the heads of the latest ones only, whatever the number
+    * of sessions. A relation holds its own Hadoop `Configuration` copy. */
+  private[table] val MaxScannedTables = 64
+
+  /** Keyed by (session, table path): a relation plans with the conf of the
+    * session that resolved it, so it is never shared across sessions. It
+    * also references that session, so the entries of a session whose
+    * context has stopped are dropped at the next head resolution rather
+    * than left to the eviction order. Guarded by its own lock. */
+  private val headScans =
+    new java.util.LinkedHashMap[(SparkSession, String), HeadScans](16, 0.75f, true) {
+      override def removeEldestEntry(
+          eldest: java.util.Map.Entry[(SparkSession, String), HeadScans]): Boolean =
+        size > MaxScannedTables
+    }
+
+  /** Whole-dir relations resolved by table reads, reused ones excluded —
+    * the counter specs use to pin reuse, like [[FsUtils.listingOps]]. */
+  private[table] val dirResolutions = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Make `head` the table's live entry set, dropping every other relation
+    * (and the table itself when it has no head). */
+  private[table] def retainHeadScans(spark: SparkSession, path: String,
+                                     head: Seq[Entry]): Unit =
+    headScans.synchronized {
+      headScans.keySet.removeIf(_._1.sparkContext.isStopped)
+      if (head.isEmpty) headScans.remove((spark, path))
+      else {
+        val t = headScans.computeIfAbsent((spark, path), _ => new HeadScans)
+        t.head = head.toSet
+        t.rels.filterInPlace((e, _) => t.head(e))
+      }
+    }
+
+  private def scansOf(spark: SparkSession, path: String): Option[HeadScans] =
+    Option(headScans.get((spark, path)))
+
+  /** `e`'s whole-dir scan as a new logical relation (fresh attribute ids,
+    * so self-joins and `exceptAll` of two reads resolve as with two
+    * separate scans) over the head's resolved relation, resolving it with
+    * `resolve` when absent. Only an entry of the current head is kept. */
+  private[table] def headScan(spark: SparkSession, path: String, e: Entry)(
+      resolve: => DataFrame): DataFrame =
+    headScans.synchronized(scansOf(spark, path).flatMap(_.rels.get(e))) match {
+      case Some(rel) => spark.baseRelationToDataFrame(rel)
+      case None =>
+        dirResolutions.incrementAndGet()
+        val df = resolve
+        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+          .queryExecution.analyzed match {
+            case lr: LogicalRelation => headScans.synchronized {
+              scansOf(spark, path).filter(_.head(e)).foreach(_.rels(e) = lr.relation)
+            }
+            case _ => // a DataSource V2 scan (parquet dropped from
+                      // spark.sql.sources.useV1SourceList) stays unshared
+          }
+        df
+    }
+
+  /** Relations currently kept for the table at `path` (spec access). */
+  private[table] def headScanCount(spark: SparkSession, path: String): Int =
+    headScans.synchronized(scansOf(spark, path).fold(0)(_.rels.size))
 
   /** Commits between FULL (self-contained) manifests in the log: every
     * Nth version is written full, the rest as O(changed dirs) action

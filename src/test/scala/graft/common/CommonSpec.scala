@@ -2,6 +2,8 @@ package graft.common
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
@@ -64,6 +66,57 @@ class FsUtilsSpec extends SparkSuite {
     } finally pool.shutdown()
     // a later put-if-absent still loses
     assert(!FsUtils.writeTextIfAbsent(spark, target, "late"))
+  }
+
+  // on the local FS listFiles walks listStatus instead of calling
+  // FileSystem.listFiles (whose LocatedFileStatus forks a permission read
+  // per file); the walk must yield the same paths in the same order
+  private def hadoopListFiles(prefix: String, suffix: String = ""): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(prefix)
+    val f = p.getFileSystem(FsUtils.hadoopConf(spark))
+    if (!f.exists(p)) Nil
+    else {
+      val it = f.listFiles(p, true)
+      val out = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile && st.getPath.toString.endsWith(suffix)) out += st.getPath.toString
+      }
+      out.result()
+    }
+  }
+
+  test("listFiles walks a nested prefix in FileSystem.listFiles order") {
+    val w = tmp()
+    Seq("b/x.json", "a/deep/er/y.json", "a/z.txt", "top.json", "c/d/e.json",
+      "a/deep/w.json", "c/q.txt").foreach(f => FsUtils.writeText(spark, s"$w/$f", f))
+    assert(FsUtils.listFiles(spark, w) === hadoopListFiles(w))
+    assert(FsUtils.listFiles(spark, w, ".json") === hadoopListFiles(w, ".json"))
+    assert(FsUtils.listFiles(spark, w, ".json").size === 5)
+    // listFilesWithSize: same order, marker files out, lengths intact
+    FsUtils.writeText(spark, s"$w/a/_SUCCESS", "")
+    assert(FsUtils.listFilesWithSize(spark, w).map(_._1) ===
+      hadoopListFiles(w).filterNot(_.endsWith("_SUCCESS")))
+    assert(FsUtils.listFilesWithSize(spark, w).forall { case (p, n) =>
+      n === p.stripPrefix("file:").stripPrefix(s"$w/").length })
+  }
+
+  test("listFiles of a single file, an absent prefix and a dir of .crc sidecars") {
+    val w = tmp()
+    FsUtils.writeText(spark, s"$w/one.json", "1")
+    assert(FsUtils.listFiles(spark, s"$w/one.json") === hadoopListFiles(s"$w/one.json"))
+    assert(FsUtils.listFiles(spark, s"$w/one.json").size === 1)
+    assert(FsUtils.listFiles(spark, s"$w/absent") === Nil)
+    assert(FsUtils.listFilesWithSize(spark, s"$w/absent") === Nil)
+    // parquet through the local checksum FS leaves .crc sidecars that
+    // both listings hide
+    spark.range(4).repartition(2).write.parquet(s"$w/pq")
+    assert(Files.list(java.nio.file.Paths.get(s"$w/pq")).iterator()
+      .asScala.exists(_.getFileName.toString.endsWith(".crc")))
+    assert(FsUtils.listFiles(spark, s"$w/pq") === hadoopListFiles(s"$w/pq"))
+    assert(!FsUtils.listFiles(spark, s"$w/pq").exists(_.endsWith(".crc")))
+    assert(FsUtils.listFilesWithSize(spark, s"$w/pq").map(_._1) ===
+      hadoopListFiles(s"$w/pq", ".parquet"))
   }
 
   test("copy of a missing source raises FileNotFoundException") {

@@ -378,6 +378,114 @@ class ManagedTableSpec extends SparkSuite {
     assert(FsUtils.listingOps.get() === again)
   }
 
+  // ---- head-scoped scan reuse: each data dir of the head resolves once
+
+  private def headEntries(t: ManagedTable): Int =
+    t.manifestAt(t.currentVersion.get).get.entries.size
+
+  test("repeated reads of an unchanged head resolve no data dir again") {
+    val root = tmp() + "/t"
+    val t = ManagedTable(spark, root)
+    t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    t.append(Seq((3, "c")).toDF("id", "v"))
+    assert(t.read().count() === 3)
+    val before = ManagedTable.dirResolutions.get()
+    assert(t.read().count() === 3)
+    assert(t.readWhere("id = 3").count() === 1)
+    // a new handle on the same path shares the session's relations
+    assert(ManagedTable(spark, root).read().count() === 3)
+    assert(ManagedTable.dirResolutions.get() === before)
+    // an append resolves only its own new dir; the carried ones are reused
+    t.append(Seq((4, "d")).toDF("id", "v"))
+    assert(t.read().count() === 4)
+    assert(ManagedTable.dirResolutions.get() === before + 1)
+    assert(ManagedTable.headScanCount(spark, root) === headEntries(t))
+    // once an overwrite retires them, time travel to the old version
+    // resolves its three dirs fresh each time and keeps none of them
+    t.write(Seq((9, "z")).toDF("id", "v"))
+    assert(t.read().count() === 1)
+    val atHead = ManagedTable.dirResolutions.get()
+    assert(t.readVersion(2).count() === 4)
+    assert(t.readVersion(2).count() === 4)
+    assert(ManagedTable.dirResolutions.get() === atHead + 6)
+    assert(ManagedTable.headScanCount(spark, root) === 1)
+  }
+
+  test("merge, optimize, restore and vacuum: the next read sees exactly the new head") {
+    val root = tmp() + "/t"
+    val t = ManagedTable(spark, root)
+    def rows: Seq[(Int, String)] =
+      t.read().as[(Int, String)].collect().sortBy(_._1).toSeq
+    def bounded(): Unit =
+      assert(ManagedTable.headScanCount(spark, root) <= headEntries(t))
+    t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))             // v0
+    t.append(Seq((3, "c")).toDF("id", "v"))                      // v1
+    val v1 = Seq((1, "a"), (2, "b"), (3, "c"))
+    assert(rows === v1)
+    bounded()
+    t.merge(Seq((1, "A"), (4, "d")).toDF("id", "v"),
+      "source.id == updates.id")                                  // v2
+    val v2 = Seq((1, "A"), (2, "b"), (3, "c"), (4, "d"))
+    assert(rows === v2)
+    assert(t.readWhere("id = 1").as[(Int, String)].collect().toSeq === Seq((1, "A")))
+    bounded()
+    t.optimize()                                                  // v3
+    assert(rows === v2)
+    assert(headEntries(t) === 1)
+    bounded()
+    t.restore(1)                                                  // v4
+    assert(rows === v1)
+    assert(t.readWhere("id = 1").as[(Int, String)].collect().toSeq === Seq((1, "a")))
+    bounded()
+    t.vacuum(0, enforceRetention = false)
+    assert(rows === v1)
+    bounded()
+  }
+
+  test("a table deleted and recreated at the same path reads the new rows") {
+    val root = tmp() + "/t"
+    ManagedTable(spark, root).write(Seq((1, "old")).toDF("id", "v"))
+    assert(ManagedTable(spark, root).read().count() === 1)
+    graft.common.FsUtils.deleteFiles(spark, Seq(root))
+    val t = ManagedTable(spark, root)
+    assert(!t.exists)
+    assert(t.read().isEmpty)
+    assert(ManagedTable.headScanCount(spark, root) === 0)
+    t.write(Seq((2, "new"), (3, "new")).toDF("id", "v"))
+    assert(t.read().as[(Int, String)].collect().sortBy(_._1).toSeq ===
+      Seq((2, "new"), (3, "new")))
+  }
+
+  test("head relations are kept for a bounded number of tables") {
+    val src = ManagedTable(spark, tmp() + "/src")
+    src.write(Seq((1, "a")).toDF("id", "v"))
+    src.read()
+    assert(ManagedTable.headScanCount(spark, src.path) === 1)
+    // zero-copy clones: each is a new table path over the same data dir
+    val clones = (0 to ManagedTable.MaxScannedTables)
+      .map(i => src.cloneTo(s"${src.path}-c$i"))
+    clones.foreach(_.read())
+    assert(ManagedTable.headScanCount(spark, src.path) === 0)
+    assert(ManagedTable.headScanCount(spark, clones.last.path) === 1)
+    // an evicted table resolves again on its next read and stays correct
+    assert(src.read().count() === 1)
+    assert(ManagedTable.headScanCount(spark, src.path) === 1)
+  }
+
+  test("two reads of one head self-join like two separate scans") {
+    val t = ManagedTable(spark, tmp() + "/t")
+    t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    t.append(Seq((3, "c")).toDF("id", "v"))
+    val l = t.read()
+    val r = t.read()
+    val joined = l.as("l").join(r.as("r"), $"l.id" === $"r.id" + 1)
+      .select($"l.id", $"r.id").as[(Int, Int)].collect().sortBy(_._1).toSeq
+    assert(joined === Seq((2, 1), (3, 2)))
+    // the same relation on both sides still diffs to nothing
+    assert(l.exceptAll(r).isEmpty)
+    assert(l.union(r).count() === 6)
+  }
+
   test("txn markers carry forward cumulatively; lastTxn answers from the head") {
     import graft.common.FsUtils
     val dir = tmp() + "/t"
