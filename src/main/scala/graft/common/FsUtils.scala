@@ -28,12 +28,32 @@ object FsUtils {
     finally in.close()
   }
 
+  /** Create or replace `path` with `text`. On the local FS this writes
+    * through `java.nio`: Hadoop's local output stream forks a `chmod` per
+    * created file (without native IO) and leaves a `.<name>.crc` sidecar.
+    * A sidecar left by an earlier Hadoop write of the same file is deleted,
+    * or `ChecksumFileSystem` would check the new bytes against it. Other
+    * stores keep the Hadoop path. */
   def writeText(spark: SparkSession, path: String, text: String): Unit = {
     val p = new Path(path)
-    val out = fs(path, hadoopConf(spark)).create(p, true)
-    try out.write(text.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val f = fs(path, hadoopConf(spark))
+    if (f.getUri.getScheme == "file") {
+      import java.nio.file.{Files, Paths}
+      val local = Paths.get(p.toUri.getPath).toAbsolutePath
+      Files.createDirectories(local.getParent)
+      Files.write(local, text.getBytes(StandardCharsets.UTF_8))
+      dropStaleCrc(p)
+    } else {
+      val out = f.create(p, true)
+      try out.write(text.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+    }
   }
+
+  /** Delete the local `.<name>.crc` checksum sidecar of `p`, if any. */
+  private def dropStaleCrc(p: Path): Unit =
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
+      new Path(p.getParent, s".${p.getName}.crc").toUri.getPath))
 
   /** Write-then-rename so readers never observe a half-written file — the
     * commit primitive for manifest logs. (Rename is atomic on HDFS and
@@ -43,11 +63,6 @@ object FsUtils {
     val tmp = s"$path.tmp-${java.util.UUID.randomUUID}"
     writeText(spark, tmp, text)
     val f = fs(path, hadoopConf(spark))
-    // the local ChecksumFileSystem writes a `.<name>.crc` sidecar next to
-    // the tmp file; the NIO move below relocates only the data file, so
-    // reap the sidecar or every atomic write leaks one crc forever
-    val tmpP = new Path(tmp)
-    val crc = new Path(tmpP.getParent, s".${tmpP.getName}.crc")
     if (f.getUri.getScheme == "file") {
       // atomic REPLACE: plain Hadoop rename won't overwrite an existing
       // destination on the local FS, so use rename(2) semantics directly
@@ -55,7 +70,8 @@ object FsUtils {
       Files.move(Paths.get(new Path(tmp).toUri.getPath),
         Paths.get(new Path(path).toUri.getPath),
         StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-      if (f.exists(crc)) f.delete(crc, false)
+      // the replaced file may carry a sidecar from a Hadoop-stream write
+      dropStaleCrc(new Path(path))
     } else {
       // HDFS-likes: FileContext rename carries an explicit atomic
       // OVERWRITE option (FileSystem.rename's no-overwrite contract

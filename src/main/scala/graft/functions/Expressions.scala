@@ -132,6 +132,25 @@ object TextKernels {
     new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size())))
   }
 
+  /** Count of the most frequent word trigram — semantics on
+    * [[MaxTrigramCount]]. */
+  def maxTrigramCount(toks: ArrayData): Int = {
+    val num = toks.numElements()
+    if (num < 3) return 0
+    val sep = UTF8String.fromString(" ")
+    val counts = new java.util.HashMap[UTF8String, Integer]()
+    var best = 0
+    var i = 0
+    while (i + 3 <= num) {
+      val tri = UTF8String.concatWs(sep,
+        toks.getUTF8String(i), toks.getUTF8String(i + 1), toks.getUTF8String(i + 2))
+      val c = counts.merge(tri, 1, (a: Integer, b: Integer) => a + b)
+      if (c > best) best = c
+      i += 1
+    }
+    best
+  }
+
   /** k-component MinHash signature — semantics on [[MinHashSig]]. */
   def minhashSig(shingles: ArrayData, k: Int, p: Long): ArrayData = {
     val mins = Array.fill[Long](k)(p)
@@ -284,6 +303,30 @@ case class WordShingles(child: Expression, n: Int)
       s"${ev.value} = graft.functions.TextKernels.wordShingles($a, $n);")
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
+    copy(child = newChild)
+}
+
+/** Occurrences of the most frequent word trigram in a token array
+  * (non-distinct: repetition is the point), 0 below 3 tokens — equals the
+  * max over `count(*) GROUP BY concat_ws(" ", slice(toks, i, 3))` of the
+  * exploded windows. One hash-map pass per row, so a per-document
+  * repetition statistic needs no explode, shuffle or join. Generates code
+  * (static [[TextKernels]] call) so it shares the tokenize projection's
+  * whole-stage span with [[LowerTokens]]. */
+case class MaxTrigramCount(child: Expression)
+    extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = child.nullable
+
+  override protected def nullSafeEval(input: Any): Any =
+    TextKernels.maxTrigramCount(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.TextKernels.maxTrigramCount($a);")
+
+  override protected def withNewChildInternal(newChild: Expression): MaxTrigramCount =
     copy(child = newChild)
 }
 

@@ -14,6 +14,9 @@ object GraftFunctions {
   def wordShingles(tokens: Column, n: Int): Column =
     col(WordShingles(expr(tokens), n))
 
+  def maxTrigramCount(tokens: Column): Column =
+    col(MaxTrigramCount(expr(tokens)))
+
   def minhashSig(shingles: Column, k: Int, p: Long): Column =
     col(MinHashSig(expr(shingles), k, p))
 

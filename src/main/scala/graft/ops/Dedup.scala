@@ -710,22 +710,26 @@ object Dedup {
   // Cluster assignment (the actual dedup step)
   // ------------------------------------------------------------------
 
+  /** Edge-count ceiling for the driver-side union-find fast path (~150 MB
+    * of longs); larger graphs use distributed label propagation. */
+  val MaxDriverEdges: Long = 5L * 1000 * 1000
+
   /** Connected components over a near-dup pair graph: every document gets a
     * `cluster_id` = the minimum doc id reachable through pair edges (its own
     * id when it has no near-dups). Keeping `id == cluster_id` rows IS the
     * deduplicated corpus.
     *
-    * Iterative min-label propagation (the standard large-graph CC shape):
-    * each round joins labels to edges and takes the elementwise min, until
-    * a fixpoint. Near-dup graphs are overwhelmingly tiny disjoint cliques,
-    * so the iteration count is the longest chain length (few), and only
-    * documents that appear in a pair enter the loop — the untouched corpus
-    * is appended label=self afterwards with no shuffle.
+    * The edges are read with ONE bounded collect ([[driverEdges]]: at most
+    * [[MaxDriverEdges]] + 1 rows, two jobs whatever the pair set's
+    * partition count): within the bound, union-find on the driver labels
+    * the paired nodes and the labels return as a local relation that the
+    * corpus join broadcasts; past it, iterative min-label propagation
+    * ([[propagateLabels]], the standard large-graph CC shape) runs
+    * distributed and evaluates the pair set once more. Near-dup graphs are
+    * overwhelmingly tiny disjoint cliques, and only documents that appear in
+    * a pair get a label — the untouched corpus labels itself in the final
+    * left join.
     */
-  /** Edge-count ceiling for the driver-side union-find fast path (~150 MB
-    * of longs); larger graphs use distributed label propagation. */
-  val MaxDriverEdges: Long = 5L * 1000 * 1000
-
   def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // both label paths operate on LONG node ids (the driver union-find
@@ -741,10 +745,15 @@ object Dedup {
         org.apache.spark.sql.types.ByteType).contains(idType),
       s"dedupClusters needs an integral id column; $idCol is $idType — " +
         "assign a dense long surrogate id first")
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst")).persistTracked()
-    val labels =
-      if (edges.count() <= MaxDriverEdges) unionFindLabels(spark, edges)
-      else propagateLabels(edges)
+    val edges = pairs.select(col("id_a").cast("long").as("src"),
+      col("id_b").cast("long").as("dst"))
+    // ONE bounded collect decides the path and feeds union-find; only a
+    // graph past the bound pays for the distributed loop (which persists
+    // its own edges)
+    val labels = driverEdges(edges) match {
+      case Some(es) => unionFindLabels(spark, es)
+      case None => propagateLabels(edges)
+    }
     // paired nodes are a small fraction of the corpus; unpaired docs label
     // themselves without touching the join's build side
     df.select(col(idCol).as("id"))
@@ -752,15 +761,30 @@ object Dedup {
       .select(col("id").as(idCol), coalesce(col("label"), col("id")).as("cluster_id"))
   }
 
+  /** The edges as driver-side pairs, or None past [[MaxDriverEdges]].
+    *
+    * A root `limit(n).collect()` plans as `CollectLimit`, which scans one
+    * partition, then 4x as many per round: 1 + log4(partitions) jobs (5 on
+    * 200 partitions). The `coalesce(1)` above the limit plans it as a
+    * global limit instead: every partition keeps at most n rows in parallel
+    * (one shuffle map stage), one task takes n, so the collect is two jobs
+    * on any partition count and holds at most n + 1 rows. Past the bound
+    * the rows are dropped here, before the distributed fallback runs. */
+  private def driverEdges(edges: DataFrame): Option[Array[(Long, Long)]] = {
+    val rows = edges.limit(MaxDriverEdges.toInt + 1).coalesce(1).collect()
+    if (rows.length > MaxDriverEdges) None
+    else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
+  }
+
   /** Fast path: the pair list is bounded metadata (edge ≤ [[MaxDriverEdges]]),
     * so classic union-find with path compression on the driver beats an
     * iterative join loop by orders of magnitude at local scale and still
-    * only collects the EDGES — never corpus rows. */
+    * only collects the EDGES — never corpus rows. The labels come back as a
+    * local relation, whose size Catalyst knows, so the corpus join plans as
+    * a broadcast instead of a shuffle. */
   private def unionFindLabels(spark: org.apache.spark.sql.SparkSession,
-                              edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+                              es: Array[(Long, Long)]): DataFrame = {
+    import org.apache.spark.sql.Row
     val parent = scala.collection.mutable.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -774,9 +798,9 @@ object Dedup {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val nodes = es.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val mapping = nodes.map(n => (n, find(n)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(mapping.toSeq.map(Row.fromTuple), 1),
+    val rows = new java.util.ArrayList[Row](nodes.length)
+    nodes.foreach(n => rows.add(Row(n, find(n))))
+    spark.createDataFrame(rows,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType))))
@@ -881,14 +905,14 @@ object Dedup {
     * triples — the 8-byte gram hash crosses the exchange, never the gram
     * text; a 64-bit collision merges two gram classes, odds ~n²/2⁶⁵,
     * acceptable for dedup and absent at oracle scale); first-occurrence
-    * resolution is one aggregation + an equi-join on that same hash, so
-    * both sides share one partitioning; covered-token counting is a
+    * resolution is one `min(struct(id, pos))` window partitioned by that
+    * hash, so the stream is built and shuffled once; covered-token counting is a
     * per-doc interval-union fold over the sorted duplicated-window start
     * positions (one integer per window crosses the shuffle — never the
     * k-fold position expansion). A boilerplate gram repeated across the
     * corpus concentrates
-    * ONE aggregation key (compact: min-struct of two longs) — the join
-    * fan-back stays one row per occurrence, so there is no quadratic
+    * ONE window key, whose rows wait in the window's spillable buffer —
+    * the output stays one row per occurrence, so there is no quadratic
     * pair blowup anywhere (unlike candidate-pair dedup, this op never
     * builds pairs).
     *
@@ -945,9 +969,13 @@ object Dedup {
     * window — covered positions are derived per-doc by the callers, so the
     * exchange never carries the k-fold position expansion. */
   private def nonFirstStarts(grams: DataFrame): DataFrame = {
-    val firsts = grams.groupBy(col("g"))
-      .agg(min(struct(col("id"), col("pos"))).as("first"))
-    grams.join(firsts, "g")
+    // a window over the gram key reads the gram stream ONCE (an aggregate
+    // joined back to the stream would build and shuffle it twice); each
+    // key's rows sit in the window's spillable buffer, so a boilerplate
+    // gram repeated across the corpus stays one hot key that can spill
+    val first = min(struct(col("id"), col("pos")))
+      .over(org.apache.spark.sql.expressions.Window.partitionBy(col("g")))
+    grams.withColumn("first", first)
       .where(!(col("id") === col("first.id") && col("pos") === col("first.pos")))
       .select(col("id"), col("pos"))
   }
@@ -959,7 +987,9 @@ object Dedup {
     * for the cleaned text so result rows stay sketch-sized.
     *
     * Scale shape: identical gram/first-occurrence plan as
-    * [[duplicatedSpans]] (no pair blowup); the per-doc covered-position
+    * [[duplicatedSpans]] (no pair blowup): the k-gram stream is exploded
+    * once per call and resolved by one window over the gram hash, then
+    * joined back to the tokens by doc id; the per-doc covered-position
     * set rides one `collect_set` whose size is bounded by the document's
     * own token count — per-row state proportional to the row itself, the
     * same bound the text column already imposes — and the excision is a

@@ -1078,27 +1078,20 @@ object TextOps {
   /** Gopher-style repetition signal: the fraction of a document's word
     * trigrams taken by its single most frequent trigram (non-distinct
     * counts — repetition is the point). High ratios mark boilerplate /
-    * TEMPLATE spam for corpus filtering. One explode + one aggregation;
-    * docs with fewer than 3 tokens report zero trigrams. */
+    * TEMPLATE spam for corpus filtering. A per-row projection, map-only:
+    * the document is tokenized once and [[graft.functions.MaxTrigramCount]]
+    * counts its trigrams in one hash-map pass, so there is no explode,
+    * shuffle or join. Null text and docs with fewer than 3 tokens report
+    * zero trigrams. */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String = "text"): DataFrame = {
-    val toks = tokens(col(textCol))
-    val tris = when(size(toks) < 3, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(toks) - 2),
-        i => concat_ws(" ", slice(toks, i, lit(3)))))
-    val withTris = df.withColumn("__tris", tris)
-    val counts = withTris.select(col(idCol), explode(col("__tris")).as("tri"))
-      .groupBy(col(idCol), col("tri"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col(idCol))
-      .agg(max(col("n")).cast("int").as("max_tri"),
-        sum(col("n")).cast("int").as("n_tri"))
-    withTris.select(col(idCol))
-      .join(counts, Seq(idCol), "left")
+    val toks = col("__toks")
+    df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
-        coalesce(col("max_tri"), lit(0)).as("max_tri"),
-        coalesce(col("n_tri"), lit(0)).as("n_tri"),
-        round(coalesce(col("max_tri"), lit(0)).cast("double") /
-          greatest(coalesce(col("n_tri"), lit(0)), lit(1)), 4).as("rep_ratio"))
+        coalesce(graft.functions.GraftFunctions.maxTrigramCount(toks), lit(0)).as("max_tri"),
+        greatest(coalesce(size(toks), lit(0)) - 2, lit(0)).as("n_tri"))
+      .select(col(idCol), col("max_tri"), col("n_tri"),
+        round(col("max_tri").cast("double") / greatest(col("n_tri"), lit(1)), 4)
+          .as("rep_ratio"))
   }
 
   /** Benchmark-contamination screen (the decontamination step run before

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 
 import graft.common.FsUtils
@@ -66,7 +67,13 @@ import graft.common.FsUtils
   * Read cost model: a data dir is written once under a fresh name and
   * never modified, so resolving its scan — listing its files and
   * inferring the schema from their footers, one Spark job — is done once
-  * per session while the dir belongs to the head snapshot. Every later
+  * per session while the dir belongs to the head snapshot. A dir this
+  * session has just written and committed skips the inference job: the
+  * commit registers it with the schema it was written with, which is the
+  * schema the footers hold (unpartitioned dirs of plain parquet types
+  * only; a partitioned or bucketed dir, whose partition columns are typed
+  * from the dir names, and any schema with field metadata, char/varchar,
+  * collations or other types keep inference). Every later
   * read of that head (`read`, `readWhere`, the DML and merge reads)
   * wraps the resolved relation in a new logical relation with fresh
   * attribute ids, so self-joins and `exceptAll` of two reads plan as two
@@ -775,7 +782,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // clean_write replaces the table's data AND schema mapping: the batch
     // is the new logical truth, so renames reset (old manifests keep
     // their own renames — time travel is unaffected)
-    ManagedTable.currentOp.withValue("write") {
+    ManagedTable.inOp("write") {
       commitEntries(Entry(writeData(df, partitionBy), None) :: Nil,
         renames = Some(Nil), txn = txn)
     }
@@ -812,12 +819,14 @@ final class ManagedTable(spark: SparkSession, val path: String) {
              txn: Map[String, Long] = Map.empty): Long = {
     validateBatch(df)
     requireFreshNames(df, "append")
-    val dir = writeData(df, partitionBy)
-    withCommitRetry("append") {
-      val prev = lastManifest()
-      commitAgainst(prev.map(_.version),
-        prev.map(_.entries).getOrElse(Nil) :+ Entry(dir, None),
-        prev.map(_.dvs).getOrElse(Nil), txn = txn)
+    ManagedTable.inOp("append") {
+      val dir = writeData(df, partitionBy)
+      withCommitRetry("append") {
+        val prev = lastManifest()
+        commitAgainst(prev.map(_.version),
+          prev.map(_.entries).getOrElse(Nil) :+ Entry(dir, None),
+          prev.map(_.dvs).getOrElse(Nil), txn = txn)
+      }
     }
   }
 
@@ -1829,7 +1838,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   def restore(v: Long): Long = {
     val m = resolveVersion(v) // vacuumed target → loud, cause-naming error
     // the restored snapshot's column mapping travels with its data
-    ManagedTable.currentOp.withValue("restore") {
+    ManagedTable.inOp("restore") {
       commitEntries(m.entries, m.dvs, Some(m.renames))
     }
   }
@@ -1850,7 +1859,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val m = lastManifest()
     // CAS at the target's version 0: of two racing clones to one path,
     // exactly one wins and the other fails loudly
-    ManagedTable.currentOp.withValue("clone") {
+    ManagedTable.inOp("clone") {
       target.commitAgainst(None, m.map(_.entries).getOrElse(Nil),
         m.map(_.dvs).getOrElse(Nil), Some(m.map(_.renames).getOrElse(Nil)))
     }
@@ -2135,6 +2144,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     }
     val w = toWrite.write.mode("overwrite")
     (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(dir)
+    // partition columns would be typed by inference from the dir names,
+    // so only an unpartitioned dir's schema is known without reading it
+    if (parts.isEmpty) ManagedTable.noteWritten(dir, toWrite.schema)
     dir
   }
 
@@ -2233,7 +2245,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val won = FsUtils.writeTextIfAbsent(spark, s"$logDir/$v.json", body)
     // refresh the _last_checkpoint hint AFTER the manifest is durable —
     // readers probing forward from it must always find the named version
-    if (won) writeVersionHint(v)
+    if (won) {
+      writeVersionHint(v)
+      ManagedTable.seedHeadScans(spark, path, entries)
+    }
     won
   }
 
@@ -2294,7 +2309,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   /** Bounded re-run loop around a read-modify-write operation body whose
     * commit is a [[commitAgainst]] CAS. */
   private def withCommitRetry[T](op: String)(body: => T): T =
-    ManagedTable.currentOp.withValue(op) {
+    ManagedTable.inOp(op) {
       var last: ManagedTable.ConcurrentWriteException = null
       var attempt = 0
       while (attempt < ManagedTable.MaxCommitAttempts) {
@@ -2433,6 +2448,23 @@ object ManagedTable {
         df
     }
 
+  /** After a commit lands `head`: make it the live entry set and resolve
+    * each whole dir the committing operation wrote with the schema it was
+    * written with ([[noteWritten]]), so the next read of the dir runs no
+    * footer-inference job. Counted in [[dirResolutions]] like any other
+    * resolution; dirs without a known schema resolve on first read. */
+  private[table] def seedHeadScans(spark: SparkSession, path: String,
+                                   head: Seq[Entry]): Unit = {
+    retainHeadScans(spark, path, head)
+    Option(writtenSchemas.get).foreach { known =>
+      head.foreach { e =>
+        known.remove(e.dir).filter(_ => e.base.isEmpty).foreach { schema =>
+          headScan(spark, path, e)(spark.read.schema(schema).parquet(e.dir))
+        }
+      }
+    }
+  }
+
   /** Relations currently kept for the table at `path` (spec access). */
   private[table] def headScanCount(spark: SparkSession, path: String): Int =
     headScans.synchronized(scansOf(spark, path).fold(0)(_.rels.size))
@@ -2455,6 +2487,47 @@ object ManagedTable {
     * (`DESCRIBE HISTORY`'s operation column). Thread-local so concurrent
     * writers on one JVM each record their own op. */
   private val currentOp = new scala.util.DynamicVariable[String]("commit")
+
+  /** The schema each data dir written by the in-flight operation was
+    * written with, by dir; null outside an operation. A plain thread-local
+    * scoped by [[inOp]] (not inherited by threads the op starts), so no
+    * entry outlives the operation that wrote the dir. */
+  private val writtenSchemas =
+    new ThreadLocal[scala.collection.mutable.Map[String, StructType]]
+
+  /** Run one table operation: stamps `op` into its commits and collects
+    * the schemas of the dirs it writes for [[seedHeadScans]]. A nested
+    * operation shares the outermost one's schemas. */
+  private[table] def inOp[T](op: String)(body: => T): T =
+    currentOp.withValue(op) {
+      if (writtenSchemas.get != null) body
+      else {
+        writtenSchemas.set(scala.collection.mutable.HashMap.empty)
+        try body finally writtenSchemas.remove()
+      }
+    }
+
+  /** Record that `dir` was just written from a frame of `schema`, when a
+    * read of its footers would infer exactly that schema back. */
+  private[table] def noteWritten(dir: String, schema: StructType): Unit =
+    Option(writtenSchemas.get).filter(_ => footerRoundTrips(schema))
+      .foreach(_(dir) = schema)
+
+  /** Types whose Spark schema a parquet write stores in the footer and
+    * inference reads back unchanged. Anything else — char/varchar, a
+    * collation, variant, UDTs, field metadata — keeps inference. */
+  private def footerRoundTrips(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType |
+         FloatType | DoubleType | BinaryType | DateType | TimestampType |
+         TimestampNTZType | _: DecimalType => true
+    case s: StringType =>
+      s == StringType && !s.isInstanceOf[CharType] && !s.isInstanceOf[VarcharType]
+    case ArrayType(e, _) => footerRoundTrips(e)
+    case MapType(k, v, _) => footerRoundTrips(k) && footerRoundTrips(v)
+    case StructType(fs) =>
+      fs.forall(f => f.metadata == Metadata.empty && footerRoundTrips(f.dataType))
+    case _ => false
+  }
 
   /** Tombstone prefix for dropped columns: a drop is a rename to a name
     * reads always exclude, so old data dirs keep their files untouched

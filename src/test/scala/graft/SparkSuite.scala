@@ -22,6 +22,25 @@ trait SparkSuite extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   val sf0: String = "/root/testdata/sf0.001"
   val sf1: String = "/root/testdata/sf0.01"
 
+  /** `body`'s result and the number of Spark jobs started while it ran,
+    * counted by a listener — the spec-side job counter, like
+    * `ManagedTable.dirResolutions` for scans. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Resolve a ManagedTable data dir by its version-hint prefix (dir names
     * are `d<v>-<random>`; exactly one per version in single-writer tests). */
   def dataDirOf(root: String, v: Int): String = {

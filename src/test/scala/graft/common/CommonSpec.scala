@@ -119,6 +119,35 @@ class FsUtilsSpec extends SparkSuite {
       hadoopListFiles(s"$w/pq", ".parquet"))
   }
 
+  test("local text writes leave no .crc sidecar and drop a stale one") {
+    val w = tmp()
+    def crcs(): Seq[String] = Files.list(java.nio.file.Paths.get(w)).iterator()
+      .asScala.map(_.getFileName.toString).filter(_.endsWith(".crc")).toSeq
+    // a file written through Hadoop's checksum FS carries a sidecar
+    def hadoopWrite(name: String, text: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(s"$w/$name")
+      val out = p.getFileSystem(FsUtils.hadoopConf(spark)).create(p, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    hadoopWrite("plain.json", "old bytes, longer than the new ones")
+    hadoopWrite("atomic.json", "old bytes, longer than the new ones")
+    assert(crcs().toSet === Set(".plain.json.crc", ".atomic.json.crc"))
+    // replacing either drops its sidecar, and the checksum FS reads the
+    // new bytes (against a stale sidecar it would fail the read)
+    FsUtils.writeText(spark, s"$w/plain.json", "new")
+    FsUtils.writeTextAtomic(spark, s"$w/atomic.json", "new")
+    assert(FsUtils.writeTextIfAbsent(spark, s"$w/once.json", "1"))
+    assert(!FsUtils.writeTextIfAbsent(spark, s"$w/once.json", "2"))
+    FsUtils.writeText(spark, s"$w/nested/dir/deep.json", "deep")
+    assert(crcs() === Nil)
+    assert(FsUtils.readText(spark, s"$w/plain.json") === "new")
+    assert(FsUtils.readText(spark, s"$w/atomic.json") === "new")
+    assert(FsUtils.readText(spark, s"$w/once.json") === "1")
+    assert(FsUtils.readText(spark, s"$w/nested/dir/deep.json") === "deep")
+    assert(FsUtils.listFiles(spark, w).map(_.split('/').last).sorted ===
+      Seq("atomic.json", "deep.json", "once.json", "plain.json"))
+  }
+
   test("copy of a missing source raises FileNotFoundException") {
     val w = tmp()
     intercept[java.io.FileNotFoundException] {

@@ -158,6 +158,39 @@ class ExpressionsSpec extends SparkSuite {
     }
   }
 
+  test("MaxTrigramCount equals the explode/count formulation, also under forced codegen") {
+    val strs = Seq("a b c a b c a b c", "one two", "", "x x x x x x",
+      "the cat sat on the mat the cat sat", "déjà vu déjà vu déjà vu 東京",
+      "Paella, déjà-vu & 東京 2024!") ++
+      (0 until 60).map(i => (0 until i).map(j => s"w${(j * 7 + i) % 5}").mkString(" "))
+    val df = (strs.map(Option(_)) :+ None).toDF("s")
+      .withColumn("id", monotonically_increasing_id())
+    val toks = TextOps.tokens(col("s"))
+    val tris = when(size(toks) < 3, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(1), size(toks) - 2),
+        i => concat_ws(" ", slice(toks, i, lit(3)))))
+    val want = df.select(col("id"), explode(tris).as("tri"))
+      .groupBy("id", "tri").count()
+      .groupBy("id").agg(max("count").cast("int").as("m"))
+      .as[(Long, Int)].collect().toMap
+    val confs = Seq(
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val got = df.select(col("id"), col("s").isNull.as("null_text"),
+          GraftFunctions.maxTrigramCount(toks).as("m"))
+        .as[(Long, Boolean, Option[Int])].collect()
+      got.foreach { case (id, nullText, m) =>
+        assert(m === (if (nullText) None else Some(want.getOrElse(id, 0))), s"row $id")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("MinHashSig equals the md5/conv permutation formula") {
     def h32(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c.cast("binary")), 1, 8), 16, 10).cast("long")

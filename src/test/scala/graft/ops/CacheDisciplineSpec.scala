@@ -73,10 +73,16 @@ class CacheDisciplineSpec extends SparkSuite {
     assertReleased("pagerank") {
       Graph.pagerank(docs, "doc_id", iters = 2).count()
     }
-    assertReleased("dedupClusters") {
-      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-      Dedup.dedupClusters(docs, "doc_id", pairs).count()
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    // the distributed label path persists its edges and label rounds ...
+    assertReleased("propagateLabels") {
+      Dedup.propagateLabels(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))).count()
     }
+    // ... while dedupClusters' union-find path, taken below MaxDriverEdges,
+    // collects the edges once and caches nothing at all
+    assert(Dedup.dedupClusters(docs, "doc_id", pairs).count() === 200)
+    assert(Caches.trackedCount === 0 && cachedPlans === 0,
+      "dedupClusters cached a stage on its union-find path")
   }
 
   test("release is scoped per SparkSession — concurrent pipelines don't clobber") {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -362,4 +363,84 @@ class DedupSpec extends SparkSuite {
   }
 
   private def round6(x: Double): Double = math.round(x * 1e6) / 1e6
+
+  test("dedupClusters collects its edges once and broadcasts its labels") {
+    // a random forest of small components, materialized over 1, 3 and 200
+    // partitions like the operator outputs a curation wave checkpoints
+    val rnd = new scala.util.Random(7)
+    val raw = (0 until 120).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+      .filter { case (a, b) => a < b }
+    val docs = spark.range(0, 250).select(col("id").as("doc_id"))
+    for (parts <- Seq(1, 3, 200)) {
+      val pairs = raw.toDF("id_a", "id_b").repartition(parts).localCheckpoint()
+      val (clusters, jobs) = jobsDuring(Dedup.dedupClusters(docs, "doc_id", pairs))
+      // persist + count + collect took 4 jobs on every partition count; a
+      // root limit-collect would take 1 + log4(partitions), 5 on 200
+      assert(jobs <= 2, s"$jobs jobs before the result was executed on $parts partitions")
+      // the labels are a local relation with statistics: the corpus join
+      // plans as a broadcast and never shuffles the corpus
+      val plan = clusters.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"), plan)
+      assert(!plan.contains("hashpartitioning"), plan)
+      val got = clusters.as[(Long, Long)].collect().sortBy(_._1).toSeq
+      val labels = Dedup.propagateLabels(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+        .as[(Long, Long)].collect().toMap
+      assert(got === (0L until 250L).map(i => i -> labels.getOrElse(i, i)), s"$parts partitions")
+      Caches.release(spark)
+    }
+  }
+
+  /** The aggregate + join-back first-occurrence formulation that
+    * `exciseDuplicatedSpans` replaced with one window, kept as its
+    * reference (the gram stream is built twice here). */
+  private def exciseByJoin(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
+    val toks = df.select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
+    val grams = toks.select(col("id"),
+        explode(expr(
+          s"""CASE WHEN size(toks) < $k THEN array()
+             |ELSE transform(sequence(0, size(toks) - $k),
+             |  i -> struct(i AS pos,
+             |    xxhash64(concat_ws(' ', slice(toks, i + 1, $k))) AS g))
+             |END""".stripMargin)).as("e"))
+      .select(col("id"), col("e.pos").as("pos"), col("e.g").as("g"))
+    val firsts = grams.groupBy(col("g"))
+      .agg(min(struct(col("id"), col("pos"))).as("first"))
+    val covered = grams.join(firsts, "g")
+      .where(!(col("id") === col("first.id") && col("pos") === col("first.pos")))
+      .select(col("id"), col("pos"))
+      .groupBy(col("id")).agg(collect_set(col("pos")).as("ps"))
+      .select(col("id"), expr(
+        s"array_distinct(flatten(transform(ps, p -> sequence(p, p + ${k - 1}))))")
+        .as("cov"))
+    toks.join(covered, Seq("id"), "left")
+      .select(col("id").as(idCol), size(col("toks")).as("n_tokens"),
+        expr("filter(toks, (t, i) -> NOT array_contains(" +
+          "coalesce(cov, cast(array() as array<int>)), i))").as("kept"))
+      .select(col(idCol), col("n_tokens"), size(col("kept")).as("n_kept"),
+        md5(concat_ws(" ", col("kept")).cast("binary")).as("fp_clean"))
+  }
+
+  test("exciseDuplicatedSpans is unchanged on a corpus with a gram repeated across many docs") {
+    val rnd = new scala.util.Random(31)
+    val boiler = "subscribe to our newsletter for the latest news and offers today"
+    val texts = (0 until 60).map { i =>
+      val body = Seq.fill(5 + rnd.nextInt(25))(s"w${rnd.nextInt(40)}")
+      val (pre, post) = body.splitAt(rnd.nextInt(body.size + 1))
+      val mid = if (i % 3 == 0) Seq.empty[String] else boiler.split(" ").toSeq
+      (pre ++ mid ++ post ++ (if (i % 7 == 0) mid else Nil)).mkString(" ")
+    } ++ Seq("short doc", "", "Déjà vu: subscribe to our newsletter for the latest news and offers today!")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def rows(df: DataFrame) = df.as[(Long, Int, Int, String)].collect().sortBy(_._1).toSeq
+    for (k <- Seq(3, 8)) {
+      val got = Dedup.exciseDuplicatedSpans(docs, "doc_id", "text", k)
+      assert(rows(got) === rows(exciseByJoin(docs, "doc_id", "text", k)), s"k=$k")
+      // the k-gram stream is exploded once per call
+      val plan = got.queryExecution.optimizedPlan
+      assert(plan.collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }
+        .size === 1, plan)
+    }
+    // the boilerplate's first copy stays, every later copy is excised
+    val byId = rows(Dedup.exciseDuplicatedSpans(docs, "doc_id", "text")).map(r => r._1 -> r).toMap
+    assert(texts.indices.count(i => byId(i.toLong)._3 < byId(i.toLong)._2) >= 30)
+  }
 }

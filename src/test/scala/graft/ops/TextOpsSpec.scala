@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.SparkSuite
 
@@ -560,5 +563,57 @@ class TextOpsSpec extends SparkSuite {
       assert(got(n)(i) === expected,
         s"n=$n q=$q: got ${got(n)(i)} expected $expected")
     }
+  }
+
+  /** The explode → group (id, tri) → group id → left join formulation
+    * `repetitionStats` replaced, kept as its reference. */
+  private def repetitionByExplode(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val toks = TextOps.tokens(col(textCol))
+    val tris = when(size(toks) < 3, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(1), size(toks) - 2),
+        i => concat_ws(" ", slice(toks, i, lit(3)))))
+    val withTris = df.withColumn("__tris", tris)
+    val counts = withTris.select(col(idCol), explode(col("__tris")).as("tri"))
+      .groupBy(col(idCol), col("tri"))
+      .agg(count(lit(1)).as("n"))
+      .groupBy(col(idCol))
+      .agg(max(col("n")).cast("int").as("max_tri"),
+        sum(col("n")).cast("int").as("n_tri"))
+    withTris.select(col(idCol))
+      .join(counts, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("max_tri"), lit(0)).as("max_tri"),
+        coalesce(col("n_tri"), lit(0)).as("n_tri"),
+        round(coalesce(col("max_tri"), lit(0)).cast("double") /
+          greatest(coalesce(col("n_tri"), lit(0)), lit(1)), 4).as("rep_ratio"))
+  }
+
+  test("repetitionStats per row equals the explode/aggregate formulation on random docs") {
+    // a small vocabulary forces repeated trigrams; non-ascii words and
+    // punctuation go through the tokenizer's unicode fallback
+    val vocab = Seq("the", "a", "cat", "Sat", "on", "mat", "déjà", "vu",
+      "東京", "İstanbul", "x", "don't", "!!", "--", "42")
+    val genText: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.choose(0, 2).flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab))).map(w => Some(w.mkString(" "))),
+      1 -> Gen.choose(3, 12).map(n => Some(Seq.fill(n)("spam").mkString(" "))),
+      5 -> Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab))).map(w => Some(w.mkString(" "))))
+    val texts = Gen.listOfN(300, genText).apply(Gen.Parameters.default, Seed(20261019L)).get
+    val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
+      Seq((1000L, Some("")), (1001L, Some("one two")), (1002L, Some("a a a a a a")),
+        (1003L, Some("東京 東京 東京 東京")), (1004L, None)))
+      .toDF("doc_id", "text")
+    val got = TextOps.repetitionStats(docs, "doc_id", "text")
+    val want = repetitionByExplode(docs, "doc_id", "text")
+    assert(got.schema === want.schema)
+    def rows(df: DataFrame) = df.as[(Long, Int, Int, Double)].collect().sortBy(_._1).toSeq
+    assert(rows(got) === rows(want))
+    val byId = rows(got).map(r => r._1 -> r).toMap
+    assert(byId(1002L) === ((1002L, 4, 4, 1.0)))  // all-identical trigrams
+    assert(byId(1001L) === ((1001L, 0, 0, 0.0)))  // fewer than 3 tokens
+    assert(byId(1004L) === ((1004L, 0, 0, 0.0)))  // null text
+    // map-only: no exchange and no join in the plan
+    val plan = got.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
   }
 }

@@ -472,6 +472,49 @@ class ManagedTableSpec extends SparkSuite {
     assert(ManagedTable.headScanCount(spark, src.path) === 1)
   }
 
+  test("a freshly committed dir reads with no inference job and the inferred schema") {
+    val root = tmp() + "/t"
+    val t = ManagedTable(spark, root)
+    val typed = spark.sql("""SELECT id,
+        TIMESTAMP '2024-05-01 12:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,
+        CAST(id AS DECIMAL(12, 3)) AS amount,
+        CAST(concat('b', id) AS BINARY) AS raw,
+        array(id, id + 1) AS xs,
+        map(concat('k', id), id) AS kv,
+        named_struct('a', id, 'b', named_struct('c', array(concat('s', id)))) AS st
+      FROM range(3)""")
+    def inferred(v: Int) = spark.read.parquet(dataDirOf(root, v)).schema
+    // every read of a fresh head below runs 0 jobs; the parent code ran
+    // one footer-inference job per new dir
+    t.write(typed)
+    val (r0, j0) = jobsDuring(t.read())
+    assert(j0 === 0)
+    assert(r0.schema === inferred(0))
+    assert(r0.count() === 3)
+    t.append(typed.where("id = 2"))
+    val (r1, j1) = jobsDuring(t.read())
+    assert(j1 === 0)
+    assert(inferred(1) === inferred(0))
+    assert(r1.schema === inferred(0))
+    assert(r1.where("id = 2").count() === 2)
+    // a renamed column: the dir written after the rename carries the new
+    // physical name, and the union of both dirs reads with no job either
+    t.renameColumn("amount", "price")
+    t.append(typed.withColumnRenamed("amount", "price").where("id = 1"))
+    val (r3, j3) = jobsDuring(t.read())
+    assert(j3 === 0)
+    assert(inferred(3).fieldNames.contains("price"))
+    assert(r3.schema === inferred(3))
+    assert(r3.where("price = 1").count() === 2)
+    // a partitioned write keeps inference: its partition column is typed
+    // from the dir names
+    t.append(typed.withColumnRenamed("amount", "price").where("id = 0"),
+      partitionBy = Seq("id"))
+    val (r4, j4) = jobsDuring(t.read())
+    assert(j4 >= 1)
+    assert(r4.count() === 6)
+  }
+
   test("two reads of one head self-join like two separate scans") {
     val t = ManagedTable(spark, tmp() + "/t")
     t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))
