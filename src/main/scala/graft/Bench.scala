@@ -3,40 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors))
-    System.setProperty("derby.system.home",
-      graft.common.Scratch.dir("spark", s"derby-${ProcessHandle.current().pid()}"))
-    // Embedded-Derby fixtures: detect a lock-wait deadlock in 2s and time
-    // out waits at 10s instead of the 20s/60s defaults — the retry loop
-    // (Upsert.withRetries) converges the victim; these bound the STALL.
-    System.setProperty("derby.locks.deadlockTimeout", "2")
-    System.setProperty("derby.locks.waitTimeout", "10")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Codegen cache sized for the SUITE, not the default 100 entries:
-      // 254 queries x ~30 generated classes cycle the default cache many
-      // times over between the warmup sweep and the timed pass, so heavy
-      // multi-stage plans (the dedup family) re-janino-compile COLD in
-      // the timed section — measured 102.9 cpu-s cold vs 12.5 cpu-s warm
-      // for x_dedup_prefix at sf0.1. Eviction order also made those cpu
-      // numbers swing round-to-round (r8's 141.8c driver-run mystery).
-      // Static conf: must be set before the first session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Spark 4's codegen cache keys on (CLASSLOADER, source), and every
-      // streaming query runs on a cloned session whose ArtifactManager
-      // supplies a fresh classloader — so identical per-batch plans
-      // re-janino-compiled on every drain (Probe streamjit, round 10:
-      // s_stream_neardup_index +72 new classes per repeat, hotspotJit
-      // 10.8 s; with shared loaders +0 and 6.9 s). No session here adds
-      // artifacts, so isolation buys nothing and costs the entire
-      // streaming-warmup benefit.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.common.Scratch.dir("spark", s"warehouse-${ProcessHandle.current().pid()}"))
-      .getOrCreate()
+    val cpus = LocalSession.cpus
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Steady-state warmup: the first execution of each pipeline shape pays
     // one-time JIT + janino codegen + engine init (measured: ~7s for the
@@ -70,9 +38,9 @@ object Bench {
       // upsert rows only: streaming generated classes now SURVIVE across
       // drains (shared-classloader codegen cache, round 10), so a second
       // execution is what pushes them through HotSpot tier-up —
-      // first-execution jit was 11.4 s vs 2.7 s on the repeat (Probe
-      // streamjit). The Derby/DialectLite upserts compile a large
-      // engine-private class surface nothing else in the suite touches
+      // first-execution jit was 11.4 s vs 2.7 s on the repeat (round 10).
+      // The Derby/DialectLite upserts compile a large engine-private
+      // class surface nothing else in the suite touches
       // (r10 BENCH_FULL: l_jdbc_upsert jit=3.5 s of a 3.5 s wall), so
       // they get the same treatment. Other batch queries re-exercise
       // shared paths all suite long and don't need it.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: print the formatted physical plan of one SparkEntry query.
   * Usage: runMain graft.Explain <queryName> [sfDir] [exec]
   *
@@ -9,24 +8,13 @@ import org.apache.spark.sql.SparkSession
   * detail block) and runtime-chosen join strategies; the pre-execution
   * form prints `isFinalPlan=false` with no codegen grouping. */
 object Explain {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    // `exec` is a flag wherever it appears, never the data dir
+    val exec = argv.contains("exec")
+    val args = argv.filterNot(_ == "exec")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val exec = args.contains("exec")
-    System.setProperty("derby.system.home",
-      graft.common.Scratch.dir("spark", s"derby-${ProcessHandle.current().pid()}"))
-    // Embedded-Derby fixtures: detect a lock-wait deadlock in 2s and time
-    // out waits at 10s instead of the 20s/60s defaults — the retry loop
-    // (Upsert.withRetries) converges the victim; these bound the STALL.
-    System.setProperty("derby.locks.deadlockTimeout", "2")
-    System.setProperty("derby.locks.waitTimeout", "10")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.common.Scratch.dir("spark", s"warehouse-${ProcessHandle.current().pid()}"))
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (exec) df.write.format("noop").mode("overwrite").save()

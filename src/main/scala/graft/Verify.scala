@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,25 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: regex filter for iterating on single queries
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors))
-    System.setProperty("derby.system.home",
-      graft.common.Scratch.dir("spark", s"derby-${ProcessHandle.current().pid()}"))
-    // Embedded-Derby fixtures: detect a lock-wait deadlock in 2s and time
-    // out waits at 10s instead of the 20s/60s defaults — the retry loop
-    // (Upsert.withRetries) converges the victim; these bound the STALL.
-    System.setProperty("derby.locks.deadlockTimeout", "2")
-    System.setProperty("derby.locks.waitTimeout", "10")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shared classloader so the (loader, source)-keyed codegen cache
-      // reuses per-batch plans across streaming drains (see Bench.scala)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.common.Scratch.dir("spark", s"warehouse-${ProcessHandle.current().pid()}"))
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -40,21 +22,9 @@ object Verify {
       graft.ops.Caches.release() // drop tracked internal persists
       spark.catalog.clearCache() // belt-and-braces for caller-persisted frames
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
   }
 }

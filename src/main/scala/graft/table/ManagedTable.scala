@@ -1,7 +1,5 @@
 package graft.table
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -40,6 +38,10 @@ import graft.common.FsUtils
   * referencing ONE hive partition subdir of an earlier data dir — written
   * by partition-pruned merges; `base` is passed as the scan's `basePath`
   * so the partition column survives the subdir read.
+  *
+  * [[MetadataCodec]] is the one home of the format of every metadata
+  * file the table writes: both log record forms, vacuum's checkpoint
+  * shadows, `_properties.json` and the version hints.
   *
   * This gives Delta's essential operations at Delta's cost model:
   *   - APPEND writes only the new rows' files and a manifest referencing
@@ -87,73 +89,15 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   private def logDir = s"$path/_graft_log"
   private def dataDir(v: Long) = s"$path/d$v"
 
-  import ManagedTable.{DeltaRecord, Entry, Manifest}
-
-  /** Parse one log file's JSON body. Two formats share the log
-    * (round-11 delta-encoded log, VERDICT r10 #1):
-    *
-    *   - FULL (a checkpoint): carries `"dirs"` — the complete snapshot,
-    *     self-contained exactly like every pre-round-11 manifest (old
-    *     logs read unchanged);
-    *   - DELTA (an action manifest): carries `"parent"` plus the
-    *     add/remove ACTIONS against the parent snapshot — O(changed
-    *     dirs) bytes per commit, the cost model an append-heavy 100 TB
-    *     table needs (a full dir list per micro-batch commit is O(dirs²)
-    *     cumulative metadata writes over a year).
-    *
-    * Every [[ManagedTable.checkpointInterval]]-th commit is written FULL,
-    * so resolution replays at most interval-1 deltas onto the nearest
-    * checkpoint — head reads stay O(1) log I/O in the cadence sense. */
-  private def parseLog(v: Long, text: String): Either[DeltaRecord, Manifest] = {
-    val node = new ObjectMapper().readTree(text)
-    def entries(field: String): Seq[Entry] = Option(node.get(field)).map { arr =>
-      (0 until arr.size()).map { i =>
-        val e = arr.get(i)
-        if (e.isTextual) Entry(e.asText(), None)
-        else Entry(e.get("dir").asText(),
-          Option(e.get("base")).map(_.asText()))
-      }
-    }.getOrElse(Nil)
-    def strings(field: String): Seq[String] = Option(node.get(field)).map { arr =>
-      (0 until arr.size()).map(arr.get(_).asText())
-    }.getOrElse(Nil)
-    // present-vs-absent matters for a delta's renames: an absent key
-    // inherits the parent's mapping, a present (even empty) key SETS it
-    val renames = Option(node.get("renames")).map { arr =>
-      (0 until arr.size()).map { i =>
-        val r = arr.get(i)
-        (r.get("from").asText(), r.get("to").asText())
-      }
-    }
-    val txn = Option(node.get("txn")).map { t =>
-      val it = t.properties().iterator()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-      b.result()
-    }.getOrElse(Map.empty[String, Long])
-    val ts = Option(node.get("timestamp")).map(_.asLong()).getOrElse(0L)
-    val op = Option(node.get("op")).map(_.asText()).getOrElse("")
-    if (node.has("parent"))
-      Left(DeltaRecord(v, ts, entries("add"), entries("remove"),
-        strings("dvAdd"), strings("dvRemove"), renames, txn, op))
-    else
-      Right(Manifest(v, ts, entries("dirs"), strings("dv"),
-        renames.getOrElse(Nil), txn, op))
-  }
+  import ManagedTable.{DeltaRecord, Entry, Manifest, TableProps}
 
   /** The log file for version `v`, parsed — preferring a vacuum-written
     * `<v>.checkpoint.json` (always full/self-contained) over the commit
     * file itself, so a delta whose parents vacuum reaped stays readable. */
-  private def logFileAt(v: Long): Option[Either[DeltaRecord, Manifest]] = {
-    val cp = s"$logDir/$v.checkpoint.json"
-    val p =
-      if (FsUtils.exists(spark, cp)) cp
-      else {
-        val q = s"$logDir/$v.json"
-        if (FsUtils.exists(spark, q)) q else return None
-      }
-    Some(parseLog(v, FsUtils.readText(spark, p)))
-  }
+  private def logFileAt(v: Long): Option[Either[DeltaRecord, Manifest]] =
+    Seq(s"$logDir/$v.checkpoint.json", s"$logDir/$v.json")
+      .find(FsUtils.exists(spark, _))
+      .map(p => MetadataCodec.decodeLog(v, FsUtils.readText(spark, p)))
 
   /** Fold one action delta onto its parent's materialized snapshot.
     * Entry/dv order is reconstruction-exact: the committer verified
@@ -177,23 +121,17 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * timestamps or the whole history (history, time travel by timestamp,
     * change feeds, vacuum) pay this; the hot paths go through
     * [[versionsOnDisk]]/[[lastManifest]] instead. */
-  private def manifests(): Seq[Manifest] = {
-    val out = Seq.newBuilder[Manifest]
-    var prev: Option[Manifest] = None
-    versionsOnDisk().foreach { v =>
-      val m: Option[Manifest] = logFileAt(v) match {
-        case Some(Right(full)) => Some(full)
-        case Some(Left(d)) => prev match {
-          case Some(p) if p.version == d.version - 1 => Some(applyDelta(p, d))
-          // non-contiguous log (a listed-then-reaped race) — chain-walk
-          case _ => manifestAt(v)
-        }
-        case None => None // file raced away between listing and read
+  private def manifests(): Seq[Manifest] =
+    versionsOnDisk().foldLeft(Vector.empty[Manifest]) { (out, v) =>
+      logFileAt(v) match {
+        case Some(Right(full)) => out :+ full
+        case Some(Left(d)) if out.lastOption.exists(_.version == v - 1) =>
+          out :+ applyDelta(out.last, d)
+        // non-contiguous log (a listed-then-reaped race) — chain-walk
+        case Some(Left(_)) => out ++ manifestAt(v)
+        case None => out // file raced away between listing and read
       }
-      m.foreach { mm => out += mm; prev = Some(mm) }
     }
-    out.result()
-  }
 
   /** Committed version numbers, ascending — one metadata LISTING, no
     * manifest file is read (versions are the file names). O(versions)
@@ -266,17 +204,15 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   // forward probe. Correctness never depends on the hint's content.
   private def hintPath = s"$logDir/_last_checkpoint"
 
-  private def writeVersionHint(v: Long): Unit =
-    try FsUtils.writeTextAtomic(spark, hintPath, s"""{"version":$v}""")
-    catch { case _: Exception => () } // a lost hint only costs the fallback
+  /** Write a version hint file; a lost hint only costs a fallback. */
+  private def writeVersionFile(file: String, v: Long): Unit =
+    try FsUtils.writeTextAtomic(spark, file, MetadataCodec.encodeVersion(v))
+    catch { case _: Exception => () }
 
-  private def readVersionHint(): Option[Long] =
-    try {
-      if (!FsUtils.exists(spark, hintPath)) None
-      else Option(new ObjectMapper()
-        .readTree(FsUtils.readText(spark, hintPath)).get("version"))
-        .map(_.asLong())
-    } catch { case _: Exception => None }
+  /** A hint file's version; None when missing, torn or unreadable. */
+  private def readVersionFile(file: String): Option[Long] =
+    try MetadataCodec.decodeVersion(FsUtils.readText(spark, file))
+    catch { case _: Exception => None }
 
   /** The current snapshot's manifest: on the hint path, O(1) log reads
     * plus at most [[ManagedTable.checkpointInterval]]-1 delta replays —
@@ -309,7 +245,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   def exists: Boolean = currentVersion.nonEmpty
 
   def currentVersion: Option[Long] =
-    readVersionHint() match {
+    readVersionFile(hintPath) match {
       case Some(h) if FsUtils.exists(spark, s"$logDir/$h.json") =>
         var v = h
         while (FsUtils.exists(spark, s"$logDir/${v + 1}.json")) v += 1
@@ -593,50 +529,23 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   private def propsPath = s"$logDir/_properties.json"
 
   /** Table properties: CHECK constraints + schema-enforcement flag +
-    * optional bucket spec (column, n). Stored beside the manifest log;
-    * read per write (one tiny file — same cost class as the manifest
-    * listing). */
-  private def readProps(): (Boolean, Map[String, String],
-                            Option[ManagedTable.BucketSpec]) = {
-    if (!FsUtils.exists(spark, propsPath)) return (false, Map.empty, None)
-    val node = new ObjectMapper().readTree(FsUtils.readText(spark, propsPath))
-    val checks = Option(node.get("checks")).map { c =>
-      val it = c.properties().iterator()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-      b.result()
-    }.getOrElse(Map.empty)
-    val bucket = for {
-      b <- Option(node.get("bucket"))
-      t <- Option(b.get("type")).map(_.asText())
-    } yield ManagedTable.BucketSpec(b.get("column").asText(),
-      b.get("n").asInt(),
-      org.apache.spark.sql.types.DataType.fromDDL(t))
-    (Option(node.get("schemaEnforced")).exists(_.asBoolean(false)), checks,
-      bucket)
-  }
+    * optional bucket spec (column, n, key type). Stored beside the
+    * manifest log; read per write (one tiny file — same cost class as the
+    * manifest listing). */
+  private def readProps(): TableProps =
+    if (!FsUtils.exists(spark, propsPath)) TableProps()
+    else MetadataCodec.decodeProps(FsUtils.readText(spark, propsPath))
 
-  private def writeProps(enforced: Boolean, checks: Map[String, String],
-                         bucket: Option[ManagedTable.BucketSpec]): Unit = {
-    val mapper = new ObjectMapper()
-    val body = checks.map { case (k, v) =>
-      s"${mapper.writeValueAsString(k)}: ${mapper.writeValueAsString(v)}"
-    }.mkString("{", ",", "}")
-    val bucketJson = bucket.fold("") { s =>
-      s""","bucket":{"column":${mapper.writeValueAsString(s.column)},""" +
-        s""""n":${s.n},"type":${mapper.writeValueAsString(s.keyType.catalogString)}}"""
-    }
-    FsUtils.writeTextAtomic(spark, propsPath,
-      s"""{"schemaEnforced":$enforced,"checks":$body$bucketJson}""")
-  }
+  private def writeProps(p: TableProps): Unit =
+    FsUtils.writeTextAtomic(spark, propsPath, MetadataCodec.encodeProps(p))
 
   /** Registered CHECK constraints (name → SQL expression). */
-  def checks: Map[String, String] = readProps()._2
+  def checks: Map[String, String] = readProps().checks
 
   // ------------------------------------------------------------- bucketing
 
   /** The table's bucket transform, if set. */
-  def bucketSpec: Option[ManagedTable.BucketSpec] = readProps()._3
+  def bucketSpec: Option[ManagedTable.BucketSpec] = readProps().bucket
 
   /** Capture the key type from the current snapshot's schema. */
   def setBucket(column: String, n: Int): Unit = {
@@ -683,13 +592,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     require(!column.startsWith("__"),
       s"setBucket: cannot bucket by internal column $column")
     val spec = ManagedTable.BucketSpec(column, n, keyType)
-    val (enforced, cks, cur) = readProps()
-    if (cur.contains(spec)) return // idempotent re-set
+    val props = readProps()
+    if (props.bucket.contains(spec)) return // idempotent re-set
     require(!anyBucketedDirs(),
       s"setBucket on $path: existing dirs carry a previous bucket layout " +
         "whose stored values the new spec would mis-prune; dropBucket() " +
         "then optimize() to materialize an unbucketed layout first")
-    writeProps(enforced, cks, Some(spec))
+    writeProps(props.copy(bucket = Some(spec)))
   }
 
   /** Any current snapshot entry laid out with a bucket partition? (One
@@ -704,10 +613,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   /** Clear the bucket transform: future writes are unbucketed; existing
     * bucketed dirs keep reading correctly (the hidden column is dropped
     * on read regardless, and with no spec no read ever bucket-prunes). */
-  def dropBucket(): Unit = {
-    val (enforced, cks, _) = readProps()
-    writeProps(enforced, cks, None)
-  }
+  def dropBucket(): Unit = writeProps(readProps().copy(bucket = None))
 
   /** Add/replace a CHECK constraint (`ALTER TABLE ADD CONSTRAINT name
     * CHECK (expr)`): every subsequent write/append/merge batch must
@@ -720,13 +626,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       require(bad == 0,
         s"cannot add CHECK $name: existing rows violate ($expression)")
     }
-    val (enforced, cur, bucket) = readProps()
-    writeProps(enforced, cur + (name -> expression), bucket)
+    val props = readProps()
+    writeProps(props.copy(checks = props.checks + (name -> expression)))
   }
 
   def dropCheck(name: String): Unit = {
-    val (enforced, cur, bucket) = readProps()
-    writeProps(enforced, cur - name, bucket)
+    val props = readProps()
+    writeProps(props.copy(checks = props.checks - name))
   }
 
   /** Toggle schema enforcement. Off (default) the table behaves like
@@ -734,10 +640,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * On, a batch may only use the table's existing columns with equal
     * types — the Delta default, failing fast at write time instead of
     * poisoning future reads with an incompatible column type. */
-  def setSchemaEnforced(on: Boolean): Unit = {
-    val (_, cur, bucket) = readProps()
-    writeProps(on, cur, bucket)
-  }
+  def setSchemaEnforced(on: Boolean): Unit =
+    writeProps(readProps().copy(schemaEnforced = on))
 
   /** Write-time validation: CHECK constraints (one scan of the BATCH,
     * never the table) + optional schema enforcement against the current
@@ -746,8 +650,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     require(!df.columns.exists(_.equalsIgnoreCase(ManagedTable.BucketCol)),
       s"batch column ${ManagedTable.BucketCol} collides with the reserved " +
         "bucket-transform column")
-    val (enforced, cks, _) = readProps()
-    if (enforced && exists) {
+    val props = readProps()
+    if (props.schemaEnforced && exists) {
       val have = read().schema.map(f => f.name.toLowerCase -> f.dataType).toMap
       df.schema.foreach { f =>
         have.get(f.name.toLowerCase) match {
@@ -761,8 +665,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         }
       }
     }
-    if (cks.nonEmpty) {
-      val violated = cks.find { case (_, e) =>
+    if (props.checks.nonEmpty) {
+      val violated = props.checks.find { case (_, e) =>
         df.where(!expr(e) || expr(e).isNull).limit(1).count() > 0
       }
       violated.foreach { case (n, e) =>
@@ -1729,18 +1633,6 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   // footprint, never to a wrong result.
   private def optimizeWatermarkPath = s"$logDir/_optimize_watermark"
 
-  private def writeOptimizeWatermark(v: Long): Unit =
-    try FsUtils.writeTextAtomic(spark, optimizeWatermarkPath, s"""{"version":$v}""")
-    catch { case _: Exception => () }
-
-  private def readOptimizeWatermark(): Option[Long] =
-    try {
-      if (!FsUtils.exists(spark, optimizeWatermarkPath)) None
-      else Option(new ObjectMapper()
-        .readTree(FsUtils.readText(spark, optimizeWatermarkPath)).get("version"))
-        .map(_.asLong())
-    } catch { case _: Exception => None }
-
   /** OPTIMIZE [ZORDER BY cols]: compact the current snapshot's dir list
     * into ONE dir; a z-order request approximates to range-partition +
     * sortWithinPartitions on those columns — same data-skipping effect for
@@ -1770,7 +1662,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         Seq(Entry(writeData(compacted, partitionBy), None)),
         renames = Some(Nil))
     }
-    writeOptimizeWatermark(v)
+    writeVersionFile(optimizeWatermarkPath, v)
     v
   }
 
@@ -1798,7 +1690,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val v = withCommitRetry("optimizeIncremental") {
       val cur = lastManifest().get
       val baseline: Set[Entry] = (for {
-        w <- readOptimizeWatermark()
+        w <- readVersionFile(optimizeWatermarkPath)
         m <- manifestAt(w)
       } yield m.entries.toSet).getOrElse(Set.empty)
       val (carried, fresh) = cur.entries.partition(baseline.contains)
@@ -1827,7 +1719,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
           foldDvs(cur, carried))
       }
     }
-    writeOptimizeWatermark(v)
+    writeVersionFile(optimizeWatermarkPath, v)
     v
   }
 
@@ -1868,10 +1760,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // not of one snapshot — a clone losing its checks would accept
     // batches the source rejects, and one losing its bucket spec would
     // silently write unbucketed dirs
-    if (FsUtils.exists(spark, propsPath)) {
-      val (enforced, cks, bucket) = readProps()
-      target.writeProps(enforced, cks, bucket)
-    }
+    if (FsUtils.exists(spark, propsPath)) target.writeProps(readProps())
     target
   }
 
@@ -2013,7 +1902,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         logFileAt(m.version).exists(_.isLeft)
       if (needsRepair)
         FsUtils.writeTextAtomic(spark, s"$logDir/${m.version}.checkpoint.json",
-          fullManifestJson(m))
+          MetadataCodec.encodeFull(m))
     }
     FsUtils.deleteFiles(spark,
       orphanDirs ++ raceOrphans ++ dvOrphans ++ sidecarOrphans ++
@@ -2023,7 +1912,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // a version this vacuum just deleted, which would demote every read
     // to the full-listing fallback until the next commit — re-point it at
     // the surviving head now
-    retained.lastOption.foreach(m => writeVersionHint(m.version))
+    retained.lastOption.foreach(m => writeVersionFile(hintPath, m.version))
   }
 
   /** Scheme-insensitive path form for containment checks (`file:/x` and
@@ -2150,45 +2039,6 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     dir
   }
 
-  // Jackson-escaped strings throughout the writers: a quote or backslash
-  // in a dir path or a renamed column name written raw would poison every
-  // later parseLog of this version (reads parse with Jackson; writes must
-  // escape with it too).
-  private def js(s: String): String =
-    new ObjectMapper().writeValueAsString(s)
-
-  private def entryJson(e: Entry): String = e match {
-    case Entry(d, None)    => js(d)
-    case Entry(d, Some(b)) => s"""{"dir":${js(d)},"base":${js(b)}}"""
-  }
-
-  private def renamesJson(rs: Seq[(String, String)]): String =
-    rs.map { case (f, t) => s"""{"from":${js(f)},"to":${js(t)}}""" }
-      .mkString("[", ",", "]")
-
-  // Delta's `txn` action analogue: (appId -> version) stamped ATOMICALLY
-  // with the commit, so a streaming sink's replay guard survives a crash
-  // between data commit and checkpoint commit.
-  private def txnJson(txn: Map[String, Long]): String =
-    if (txn.isEmpty) ""
-    else txn.map { case (a, tv) => s"${js(a)}:$tv" }
-      .mkString(""","txn":{""", ",", "}")
-
-  /** The self-contained (FULL/checkpoint) body for a materialized
-    * manifest — today's pre-round-11 format, byte-compatible with old
-    * logs. Shared by the checkpoint-cadence commits and vacuum's
-    * chain-repair checkpoints. */
-  private def fullManifestJson(m: Manifest): String = {
-    val dirsJson = m.entries.map(entryJson).mkString("[", ",", "]")
-    val dvJson = if (m.dvs.isEmpty) ""
-      else m.dvs.map(js).mkString(""","dv":[""", ",", "]")
-    val renJson = if (m.renames.isEmpty) ""
-      else s""","renames":${renamesJson(m.renames)}"""
-    // DESCRIBE HISTORY's operation column — observability only
-    val opJson = s""","op":${js(m.op)}"""
-    s"""{"version":${m.version},"timestamp":${m.timestamp},"dirs":$dirsJson$dvJson$renJson${txnJson(m.txn)}$opJson}"""
-  }
-
   /** One optimistic commit attempt at exactly version `v` — true iff this
     * writer won the put-if-absent race for the manifest file (a manifest
     * still either exists completely or not at all; a crash mid-write can
@@ -2213,40 +2063,26 @@ final class ManagedTable(spark: SparkSession, val path: String) {
                         parent: Option[Manifest]): Boolean = {
     val ts = System.currentTimeMillis()
     val op = ManagedTable.currentOp.value
-    def full: String = fullManifestJson(Manifest(v, ts, entries, dvs,
+    def full: String = MetadataCodec.encodeFull(Manifest(v, ts, entries, dvs,
       renames, parent.map(_.txn).getOrElse(Map.empty) ++ txnDelta, op))
     val interval = ManagedTable.checkpointInterval(spark)
     val body: String = parent match {
       case Some(p) if p.version == v - 1 && interval > 1 && v % interval != 0 =>
-        val eSet = entries.toSet
-        val pESet = p.entries.toSet
-        val remove = p.entries.filterNot(eSet)
-        val add = entries.filterNot(pESet)
-        val dvSet = dvs.toSet
-        val pDvSet = p.dvs.toSet
-        val dvRemove = p.dvs.filterNot(dvSet)
-        val dvAdd = dvs.filterNot(pDvSet)
-        val reconstructs =
-          (p.entries.filterNot(remove.toSet) ++ add) == entries &&
-            (p.dvs.filterNot(dvRemove.toSet) ++ dvAdd) == dvs
-        if (!reconstructs) full
-        else {
-          val renJson = if (renames == p.renames) ""
-            else s""","renames":${renamesJson(renames)}"""
-          s"""{"version":$v,"timestamp":$ts,"parent":${v - 1}""" +
-            (if (add.isEmpty) "" else s""","add":${add.map(entryJson).mkString("[", ",", "]")}""") +
-            (if (remove.isEmpty) "" else s""","remove":${remove.map(entryJson).mkString("[", ",", "]")}""") +
-            (if (dvAdd.isEmpty) "" else s""","dvAdd":${dvAdd.map(js).mkString("[", ",", "]")}""") +
-            (if (dvRemove.isEmpty) "" else s""","dvRemove":${dvRemove.map(js).mkString("[", ",", "]")}""") +
-            renJson + txnJson(txnDelta) + s""","op":${js(op)}}"""
-        }
+        val d = DeltaRecord(v, ts, entries.filterNot(p.entries.toSet),
+          p.entries.filterNot(entries.toSet), dvs.filterNot(p.dvs.toSet),
+          p.dvs.filterNot(dvs.toSet),
+          if (renames == p.renames) None else Some(renames), txnDelta, op)
+        val replayed = applyDelta(p, d)
+        if (replayed.entries == entries && replayed.dvs == dvs)
+          MetadataCodec.encodeDelta(d)
+        else full
       case _ => full
     }
     val won = FsUtils.writeTextIfAbsent(spark, s"$logDir/$v.json", body)
     // refresh the _last_checkpoint hint AFTER the manifest is durable —
     // readers probing forward from it must always find the named version
     if (won) {
-      writeVersionHint(v)
+      writeVersionFile(hintPath, v)
       ManagedTable.seedHeadScans(spark, path, entries)
     }
     won
@@ -2346,7 +2182,7 @@ object ManagedTable {
                                      txn: Map[String, Long] = Map.empty,
                                      op: String = "")
 
-  /** One delta-encoded commit as parsed from disk: the ACTIONS against
+  /** One delta-encoded commit as written to disk: the ACTIONS against
     * the parent snapshot (version-1). `renames` is Some only when the
     * commit SET the mapping (None inherits); `txn` is this commit's
     * markers only (the fold keeps the materialized map cumulative). */
@@ -2356,6 +2192,11 @@ object ManagedTable {
                                         dvRemove: Seq[String],
                                         renames: Option[Seq[(String, String)]],
                                         txn: Map[String, Long], op: String)
+
+  /** The table properties kept in `_graft_log/_properties.json`. */
+  private[table] case class TableProps(schemaEnforced: Boolean = false,
+                                       checks: Map[String, String] = Map.empty,
+                                       bucket: Option[BucketSpec] = None)
 
   /** Live DV sidecar dirs allowed per snapshot before a vectorized DML
     * op merges the set into one ([[compactedDvs]]). 32 keeps read-side

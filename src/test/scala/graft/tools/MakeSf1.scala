@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * fact/dim keys shift by a per-replica stride on BOTH sides; the tiny
   * region/nation dims stay single-copy (exactly how TPC-H scales —
   * nations don't multiply with SF). Documents perturb per replica
-  * (letter→digit translate, the Probe convention) so the dedup family
+  * (letter→digit translate) so the dedup family
   * sees genuinely new text, not 10× verbatim copies; embeddings nudge by
   * a per-replica epsilon so k-means cells don't degenerate into
   * identical-vector cliques.
