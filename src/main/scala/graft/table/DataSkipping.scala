@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** File-level data skipping for [[ManagedTable]] — the engine's analogue of
@@ -44,7 +45,7 @@ import org.apache.spark.sql.functions._
   * file — correct, since no non-null value can match a comparison. Null
   * hunting predicates (`IS NULL`) use the null-count column instead.
   */
-object DataSkipping {
+object DataSkipping extends PredicateHelper {
 
   /** Stats are collected for the first N atomic columns (Delta's
     * `dataSkippingNumIndexedCols` default). A 2000-column table would
@@ -455,8 +456,8 @@ object DataSkipping {
                     else {
                       val ext = try {
                         val cast = Cast(Literal(
-                            org.apache.spark.unsafe.types.UTF8String
-                              .fromString(unescapePath(raw)), StringType),
+                            org.apache.spark.unsafe.types.UTF8String.fromString(
+                              ExternalCatalogUtils.unescapePathName(raw)), StringType),
                           dt, Option(sessionTz))
                         Option(cast.eval(null)).map(
                           org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -559,22 +560,6 @@ object DataSkipping {
     * (same magnitude as [[ManagedTable.MaxPruneFiles]]). */
   private val maxStatsListWarn = ManagedTable.MaxPruneFiles
 
-  /** Inverse of Spark's partition-path escaping (`%xx` sequences only). */
-  private def unescapePath(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val code = try Integer.parseInt(s.substring(i + 1, i + 3), 16)
-          catch { case _: NumberFormatException => -1 }
-        if (code >= 0) { sb.append(code.toChar); i += 3 }
-        else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   // ------------------------------------------------------- bloom skipping
   // Min/max stats cannot prune point lookups on high-cardinality columns
   // that aren't clustered (a doc_id equality hits every file's [min,max]
@@ -635,17 +620,12 @@ object DataSkipping {
         hashes.exists(bf.mightContainLong)
       }
     }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     def attrName(e: Expression): Option[String] = e match {
       case a: UnresolvedAttribute if a.nameParts.length == 1 =>
         Some(a.nameParts.head.toLowerCase)
       case _ => None
     }
-    val tests = conjuncts(
-      spark.sessionState.sqlParser.parseExpression(condition)).flatMap {
+    val tests = conjunctsOf(spark, condition).flatMap {
       case EqualTo(a, l: Literal) => attrName(a).map(_ -> Seq(l))
       case EqualTo(l: Literal, a) => attrName(a).map(_ -> Seq(l))
       case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
@@ -698,19 +678,14 @@ object DataSkipping {
   def bucketsFor(spark: SparkSession, condition: String, column: String,
                  dt: org.apache.spark.sql.types.DataType,
                  n: Int): Option[Set[Int]] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     def onKey(e: Expression): Boolean = e match {
       case a: UnresolvedAttribute if a.nameParts.length == 1 =>
         a.nameParts.head.equalsIgnoreCase(column)
       case _ => false
     }
-    val parsed = try {
-      spark.sessionState.sqlParser.parseExpression(condition)
-    } catch { case _: Exception => return None }
-    val perConjunct = conjuncts(parsed).flatMap {
+    val cs = try conjunctsOf(spark, condition)
+      catch { case _: Exception => return None }
+    val perConjunct = cs.flatMap {
       case EqualTo(a, l: Literal) if onKey(a) => Some(Seq(l))
       case EqualTo(l: Literal, a) if onKey(a) => Some(Seq(l))
       case In(a, vs) if onKey(a) && vs.nonEmpty &&
@@ -737,10 +712,6 @@ object DataSkipping {
     * unparseable condition proves nothing either. */
   def keyEquiConjunct(spark: SparkSession, condition: String,
                       column: String): Boolean = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     def is(e: Expression, alias: String): Boolean = e match {
       case a: UnresolvedAttribute => a.nameParts.length == 2 &&
         a.nameParts.head.equalsIgnoreCase(alias) &&
@@ -750,14 +721,19 @@ object DataSkipping {
     def keyPair(l: Expression, r: Expression): Boolean =
       (is(l, "source") && is(r, "updates")) ||
         (is(l, "updates") && is(r, "source"))
-    try conjuncts(spark.sessionState.sqlParser.parseExpression(condition))
-      .exists {
-        case EqualTo(l, r) => keyPair(l, r)
-        case EqualNullSafe(l, r) => keyPair(l, r)
-        case _ => false
-      }
+    try conjunctsOf(spark, condition).exists {
+      case EqualTo(l, r) => keyPair(l, r)
+      case EqualNullSafe(l, r) => keyPair(l, r)
+      case _ => false
+    }
     catch { case _: Exception => false }
   }
+
+  /** Top-level AND-conjuncts of `condition` as Catalyst parses it — the
+    * one splitter [[bloomKeep]], [[bucketsFor]] and [[keyEquiConjunct]]
+    * read their predicates from. Throws when `condition` does not parse. */
+  private def conjunctsOf(spark: SparkSession, condition: String): Seq[Expression] =
+    splitConjunctivePredicates(spark.sessionState.sqlParser.parseExpression(condition))
 
   /** Canonical filesystem path of a raw `input_file_name()` URI (or any
     * path string) for prefix matching and hand-off to the reader. */

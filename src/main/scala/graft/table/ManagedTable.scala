@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types._
@@ -47,12 +48,17 @@ import graft.common.FsUtils
   *   - APPEND writes only the new rows' files and a manifest referencing
   *     old + new dirs — O(new data), NOT O(table); the same holds for the
   *     registries' insert-if-absent merge;
-  *   - upsert-merge / UPDATE rewrite into a fresh dir (one declarative
-  *     plan — anti-join + union; AQE picks broadcast at runtime when the
-  *     update set is small); when the table is partitioned, the merge
-  *     rewrites ONLY partitions containing update keys and carries
-  *     untouched partition dirs by manifest reference — O(touched
-  *     partitions), Delta's file-pruned merge cost model;
+  *   - copy-on-write DML — merge upsert, CDC apply, DELETE, replaceWhere
+  *     and UPDATE — runs through ONE rewrite core ([[rewriteDml]]): each op
+  *     supplies only its row rewrite (upserts: one anti-join + union, AQE
+  *     picks broadcast at runtime when the batch is small), the batch
+  *     naming its touched keys, and its match condition. The core rewrites
+  *     ONLY the partitions (or, on an unpartitioned bucketed table, the
+  *     buckets) the op touches and carries the untouched dirs by manifest
+  *     reference — O(touched partitions), Delta's file-pruned merge cost
+  *     model — and otherwise rewrites the snapshot into one fresh dir.
+  *     The deletion-vector variants share one vectoring step
+  *     ([[vectorOut]]): O(matched rows), no data-file rewrite;
   *   - time travel reads any manifest's dir list (SnapshotDiff registry);
   *   - OPTIMIZE compacts the current dir list into one dir (ZORDER ≈
   *     range-partition + sortWithinPartitions for parquet min/max
@@ -314,12 +320,17 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       e.base.fold(spark.read)(b => spark.read.option("basePath", b)).parquet(e.dir)
     }
 
-  private def readEntries(entries: Seq[Entry],
-                          renames: Seq[(String, String)] = Nil): DataFrame =
+  /** The entries' scans as one logical read. `withMeta` adds per-row file
+    * provenance (`_metadata.file_path` + `_metadata.row_index`) — the join
+    * key deletion vectors address. */
+  private def readEntries(entries: Seq[Entry], renames: Seq[(String, String)],
+                          withMeta: Boolean = false): DataFrame =
     entries match {
       case Nil => spark.emptyDataFrame
-      case es => dropTombstones(es.map(e => applyRenames(scan(e), renames))
-        .reduce(_.unionByName(_, allowMissingColumns = true)))
+      case es => dropTombstones(es.map { e =>
+        val d = applyRenames(scan(e), renames)
+        if (withMeta) provenance(d) else d
+      }.reduce(_.unionByName(_, allowMissingColumns = true)))
     }
 
   // ------------------------------------------------------- deletion vectors
@@ -335,18 +346,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   private val DvFile = "__dv_file"
   private val DvPos  = "__dv_pos"
 
-  /** Entries scan carrying per-row file provenance (`_metadata.file_path`
-    * + `_metadata.row_index`) — the join key deletion vectors address. */
-  private def readEntriesWithMeta(entries: Seq[Entry],
-                                  renames: Seq[(String, String)] = Nil): DataFrame =
-    entries match {
-      case Nil => spark.emptyDataFrame
-      case es => dropTombstones(es.map { e =>
-        applyRenames(scan(e), renames)
-          .withColumn(DvFile, col("_metadata.file_path"))
-          .withColumn(DvPos, col("_metadata.row_index"))
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
-    }
+  private def provenance(df: DataFrame): DataFrame =
+    df.withColumn(DvFile, col("_metadata.file_path"))
+      .withColumn(DvPos, col("_metadata.row_index"))
 
   private def applyDv(withMeta: DataFrame, dvs: Seq[String]): DataFrame =
     withMeta.join(spark.read.parquet(dvs: _*), Seq(DvFile, DvPos), "left_anti")
@@ -360,14 +362,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // here keeps it physically-derived only (drop is a no-op on
     // unbucketed dirs)
     (if (m.dvs.isEmpty) readEntries(m.entries, m.renames)
-     else applyDv(readEntriesWithMeta(m.entries, m.renames), m.dvs)
-       .drop(DvFile, DvPos))
+     else readWithMeta(m).drop(DvFile, DvPos))
       .drop(ManagedTable.BucketCol)
 
   /** Like [[readSnapshot]] but keeps the provenance columns — DML ops use
     * it to derive NEW vectors from matched rows. */
   private def readWithMeta(m: Manifest): DataFrame = {
-    val base = readEntriesWithMeta(m.entries, m.renames)
+    val base = readEntries(m.entries, m.renames, withMeta = true)
     if (m.dvs.isEmpty) base else applyDv(base, m.dvs)
   }
 
@@ -460,13 +461,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   def deleteVectorized(condition: String): Long = {
     require(exists, s"deleteVectorized on absent table $path")
     withCommitRetry("deleteVectorized") {
-      val cur = lastManifest().get
-      val matched = readWithMeta(cur).where(expr(condition))
-      if (matched.isEmpty)
-        commitAgainst(Some(cur.version), cur.entries, cur.dvs)
-      else
-        commitAgainst(Some(cur.version), cur.entries,
-          compactedDvs(cur.dvs :+ writeDvData(matched)))
+      vectorOut(lastManifest().get, _.where(expr(condition)))(_ => None)
     }
   }
 
@@ -479,19 +474,14 @@ final class ManagedTable(spark: SparkSession, val path: String) {
                        partitionBy: Seq[String] = Nil): Long = {
     require(exists, s"updateVectorized on absent table $path")
     withCommitRetry("updateVectorized") {
-      val cur = lastManifest().get
-      val matched = readWithMeta(cur).where(expr(cond))
-      if (matched.isEmpty)
-        commitAgainst(Some(cur.version), cur.entries, cur.dvs)
-      else {
-        val images = set.foldLeft(matched.drop(DvFile, DvPos)) {
-          case (d, (c, valueExpr)) => d.withColumn(c, expr(valueExpr))
+      vectorOut(lastManifest().get, _.where(expr(cond)), partitionBy) {
+        _.map { matched =>
+          val images = set.foldLeft(matched.drop(DvFile, DvPos)) {
+            case (d, (c, valueExpr)) => d.withColumn(c, expr(valueExpr))
+          }
+          validateBatch(images)
+          images
         }
-        validateBatch(images)
-        val dvDir = writeDvData(matched)
-        commitAgainst(Some(cur.version),
-          cur.entries :+ Entry(writeData(images, partitionBy), None),
-          compactedDvs(cur.dvs :+ dvDir))
       }
     }
   }
@@ -514,15 +504,29 @@ final class ManagedTable(spark: SparkSession, val path: String) {
           commitAgainst(None, Seq(Entry(writeData(updates, partitionBy), None)),
             txn = txn)
         case Some(cur) =>
-          val matched = readWithMeta(cur).alias("source")
-            .join(updates.alias("updates"), expr(condition), "left_semi")
-          val dvs = if (matched.isEmpty) cur.dvs
-                    else compactedDvs(cur.dvs :+ writeDvData(matched))
-          commitAgainst(Some(cur.version),
-            cur.entries :+ Entry(writeData(updates, partitionBy), None), dvs,
-            txn = txn)
+          vectorOut(cur, _.alias("source")
+            .join(updates.alias("updates"), expr(condition), "left_semi"),
+            partitionBy, txn)(_ => Some(updates))
       }
     }
+  }
+
+  /** The one vectoring step of the DV DML ops: the rows `matching` picks
+    * from [[readWithMeta]]`(cur)` leave through one new DV sidecar (no
+    * sidecar when nothing matched), and `appended` — handed the matched
+    * rows, or None when there were none — names a frame to append as a
+    * fresh `partitionBy`-shaped dir. Every entry of `cur` carries by
+    * reference. */
+  private def vectorOut(cur: Manifest, matching: DataFrame => DataFrame,
+                        partitionBy: Seq[String] = Nil,
+                        txn: Map[String, Long] = Map.empty)(
+      appended: Option[DataFrame] => Option[DataFrame]): Long = {
+    val matched = Some(matching(readWithMeta(cur))).filterNot(_.isEmpty)
+    val images = appended(matched)
+    val dvs = matched.fold(cur.dvs)(m => compactedDvs(cur.dvs :+ writeDvData(m)))
+    commitAgainst(Some(cur.version),
+      cur.entries ++ images.map(i => Entry(writeData(i, partitionBy), None)),
+      dvs, txn = txn)
   }
 
   // ---------------------------------------------------------------- checks
@@ -817,11 +821,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * `source.eventId == updates.eventId`.
     *
     *   - upsert (whenMatchedUpdateAll + whenNotMatchedInsertAll): one
-    *     anti-join + union rewritten into a fresh snapshot dir; when
-    *     `partitionBy` is set the rewrite is pruned to partitions that
-    *     actually contain update rows ([[prunedMerge]]) — untouched
-    *     partition dirs carry over by reference, so a merge costs
-    *     O(touched partitions), not O(table);
+    *     anti-join + union through the rewrite core ([[rewriteDml]]) —
+    *     pruned to the partitions (or, unpartitioned, the buckets) the
+    *     updates name, untouched dirs carried by reference, so a merge
+    *     costs O(touched partitions), not O(table);
     *   - insert-only (registry anti-insert): only the NOT-matching update
     *     rows are appended — O(new data) like append.
     */
@@ -829,104 +832,17 @@ final class ManagedTable(spark: SparkSession, val path: String) {
             partitionBy: Seq[String] = Nil): Long = withCommitRetry("merge") {
     validateBatch(updates)
     requireFreshNames(updates, "merge")
-    lastManifest() match {
+    if (upsert)
+      upsertRewrite(updates, updates, condition, partitionBy, updates.columns.contains(_))
+    else lastManifest() match {
       case None =>
         commitAgainst(None, Seq(Entry(writeData(updates, partitionBy), None)))
       case Some(cur) =>
-        val pruned = if (upsert && partitionBy.nonEmpty)
-          prunedMerge(updates, condition, partitionBy)
-        else if (upsert && partitionBy.isEmpty)
-          bucketPrunedDml(updates, updates, updates, condition)
-        else None
-        pruned.getOrElse {
-          val target = readSnapshot(cur)
-          // no explicit broadcast hint on either side: updates batches and
-          // the target both grow without bound at scale, and a forced
-          // broadcast of the anti-join build side would OOM; AQE converts
-          // the exchange to a broadcast at runtime whenever the observed
-          // size is actually small
-          if (upsert)
-            commitAgainst(Some(cur.version), Seq(Entry(writeData(
-              target.alias("source")
-                .join(updates.alias("updates"), expr(condition), "left_anti")
-                .unionByName(updates, allowMissingColumns = true),
-              partitionBy), None)))
-          else
-            commitAgainst(Some(cur.version), cur.entries :+ Entry(writeData(
-              updates.alias("updates")
-                .join(target.alias("source"), expr(condition), "left_anti"),
-              partitionBy), None), cur.dvs)
-        }
+        commitAgainst(Some(cur.version), cur.entries :+ Entry(writeData(
+          updates.alias("updates")
+            .join(readSnapshot(cur).alias("source"), expr(condition), "left_anti"),
+          partitionBy), None), cur.dvs)
     }
-  }
-
-  /** Update-set size above which pruning degenerates to a full rewrite
-    * anyway (the touched-value list is driver-side metadata, so bound it). */
-  val MaxPrunedPartitions = 4096
-
-  /** Partition-pruned upsert on the FIRST partition column: rewrite only
-    * top-level partition dirs holding update rows, carry the rest by
-    * subdir reference. Returns None when the current snapshot's layout
-    * can't be split per-partition (e.g. unpartitioned legacy dirs) or the
-    * update touches more than [[MaxPrunedPartitions]] values — callers
-    * fall back to the full rewrite.
-    *
-    * Pruning contract: the join key must be PARTITION-STABLE — an update
-    * row only ever matches target rows in its own partition (the usual
-    * case: the partition column is part of, or functionally determined
-    * by, the merge key). A key that can match across partitions leaves
-    * the other partition's old row in place; use the unpartitioned full
-    * rewrite for such keys. Same contract as Delta's guidance to put the
-    * partition predicate in the merge condition for pruned merges. */
-  private def prunedMerge(updates: DataFrame, condition: String,
-                          partitionBy: Seq[String]): Option[Long] = {
-    if (!updates.columns.contains(partitionBy.head)) return None
-    prunedRewrite(lit(false), partitionBy,
-      // the rewritten slice: current rows of touched partitions, merged
-      // with ALL updates — the anti-join reads only touched partitions
-      slice => slice.alias("source")
-        .join(updates.alias("updates"), expr(condition), "left_anti")
-        .unionByName(updates, allowMissingColumns = true),
-      extraTouched = Some(updates.select(col(partitionBy.head))))
-  }
-
-  /** Bucket-pruned upsert on an UNPARTITIONED bucketed table
-    * ([[setBucket]]): rewrite only the `__gbucket=` dirs whose buckets the
-    * update keys hash into, carry the rest by subdir reference — the
-    * O(touched buckets) merge cost model, with no natural partition key
-    * required. Engages only when the merge condition contains a
-    * `source.key =/== updates.key` equality on the bucketed column (the
-    * hash is a function of the key, so matches can never cross buckets —
-    * the partition-stability contract holds by construction); any other
-    * condition shape falls back to the full rewrite. None → caller falls
-    * back (no spec, layout not splittable — e.g. pre-bucket dirs — or too
-    * many touched buckets). */
-  /** Bucket-pruned DML core shared by [[merge]] and [[applyChanges]]:
-    * engages only when the spec is set, the condition carries a TOP-LEVEL
-    * `source.key = updates.key` AND-conjunct ([[DataSkipping
-    * .keyEquiConjunct]] — an equality under OR/NOT proves nothing, a
-    * match through the other arm could live in an untouched bucket), and
-    * the batch has the key column. Touched buckets = `keys` hashed at the
-    * spec's canonical type ([[ManagedTable.BucketSpec.idOf]] — the batch's
-    * own column type is irrelevant, so type-drifted batches bucket
-    * identically to the layout); the rewritten slice anti-joins
-    * `antiFrame` and unions `unionFrame`, exactly the partition-pruned
-    * shapes. */
-  private def bucketPrunedDml(keys: DataFrame, antiFrame: DataFrame,
-                              unionFrame: DataFrame,
-                              condition: String): Option[Long] = {
-    val spec = bucketSpec.getOrElse(return None)
-    if (!DataSkipping.keyEquiConjunct(spark, condition, spec.column))
-      return None
-    val key = keys.columns.find(_.equalsIgnoreCase(spec.column))
-      .getOrElse(return None)
-    val bucketed = keys.withColumn(ManagedTable.BucketCol,
-      spec.idOf(col(s"`$key`")))
-    prunedRewrite(lit(false), Seq(ManagedTable.BucketCol),
-      slice => slice.drop(ManagedTable.BucketCol).alias("source")
-        .join(antiFrame.alias("updates"), expr(condition), "left_anti")
-        .unionByName(unionFrame, allowMissingColumns = true),
-      extraTouched = Some(bucketed.select(col(ManagedTable.BucketCol))))
   }
 
   /** Apply a CDC batch — rows tagged insert/update/delete in `opCol`
@@ -936,11 +852,12 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * change feed to the mirror table" step. Target rows matching ANY
     * change key leave the snapshot via one anti-join (same single pass
     * whether the change is U or D), then the upsert-image rows (I/U)
-    * union in. With `partitionBy` set, the rewrite prunes to partitions
-    * named by the batch's keys — same contract as [[merge]]. Within one
-    * batch the LAST op per key in `orderCol` order wins (CDC logs are
-    * ordered; without the in-batch collapse a U followed by its D would
-    * resurrect the row). */
+    * union in. The rewrite prunes like [[merge]]'s: to the partitions or
+    * buckets the batch's keys name (D keys included — their rows must
+    * leave; I keys included — a batch for a partition the table has never
+    * seen must still land). Within one batch the LAST op per key in
+    * `orderCol` order wins (CDC logs are ordered; without the in-batch
+    * collapse a U followed by its D would resurrect the row). */
   def applyChanges(changes: DataFrame, condition: String, opCol: String,
                    orderCol: String, partitionBy: Seq[String] = Nil): Long = {
     requireFreshNames(changes, "applyChanges")
@@ -972,38 +889,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val allKeys = latest.drop(opCol, orderCol)
     validateBatch(upserts)
     withCommitRetry("applyChanges") {
-      lastManifest() match {
-        case None =>
-          commitAgainst(None, Seq(Entry(writeData(upserts, partitionBy), None)))
-        case Some(cur) =>
-          val pruned = if (partitionBy.nonEmpty &&
-              changes.columns.contains(partitionBy.head))
-            // touched partitions = partitions NAMED BY THE BATCH (D keys
-            // included — their rows must leave those partitions; I keys
-            // included — a batch for a partition the table has never seen
-            // must still land). Discovery never scans the table. Pruning
-            // contract (same as [[merge]]'s): the join key must be
-            // partition-stable — a change row only ever matches target
-            // rows in its own partition.
-            prunedRewrite(lit(false), partitionBy,
-              slice => slice.alias("source")
-                .join(allKeys.alias("updates"), expr(condition), "left_anti")
-                .unionByName(upserts, allowMissingColumns = true),
-              extraTouched = Some(allKeys.select(col(partitionBy.head))))
-          else if (partitionBy.isEmpty)
-            // bucketed CDC mirror: a change batch keyed on the bucketed
-            // column rewrites only the buckets its keys (I, U and D
-            // alike) hash into — partition-stability holds by
-            // construction, the hash is a function of the key
-            bucketPrunedDml(allKeys, allKeys, upserts, condition)
-          else None
-          pruned.getOrElse(
-            commitAgainst(Some(cur.version), Seq(Entry(writeData(
-              readSnapshot(cur).alias("source")
-                .join(allKeys.alias("updates"), expr(condition), "left_anti")
-                .unionByName(upserts, allowMissingColumns = true),
-              partitionBy), None))))
-      }
+      upsertRewrite(allKeys, upserts, condition, partitionBy, changes.columns.contains(_))
     }
   }
 
@@ -1014,33 +900,15 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * manifests. With `partitionBy` set the rewrite is pruned to partitions
     * that contain matching rows — the touched-partition discovery scans
     * only the filter + partition columns, and untouched dirs carry over by
-    * manifest reference, so a targeted delete costs O(touched partitions).
-    * One documented degradation: when a delete empties a partition
-    * COMPLETELY the pruned path cannot name the emptied dir without
-    * re-implementing Spark's partition-value encoding, so it falls back to
-    * the full rewrite (partition-aligned bulk deletes are the one shape
-    * where a full rewrite of the survivors is proportional to the work
-    * anyway). Returns the new version. */
+    * manifest reference, so a targeted delete costs O(touched partitions);
+    * a partition the delete empties leaves the snapshot. Returns the new
+    * version. */
   def delete(condition: String, partitionBy: Seq[String] = Nil): Long = {
     require(exists, s"delete on absent table $path")
     withCommitRetry("delete") {
-      val cur = lastManifest().get
-      val pruned = if (partitionBy.nonEmpty)
-        prunedDelete(condition, partitionBy) else None
-      pruned.getOrElse( // not splittable / emptied partition → full rewrite
-        commitAgainst(Some(cur.version), Seq(Entry(writeData(
-          readSnapshot(cur).where(!expr(condition)), partitionBy), None))))
+      rewriteDml(partitionBy, _ => true, expr(condition))(_.where(!expr(condition)))
     }
   }
-
-  /** Partition-pruned delete on the FIRST partition column; None → caller
-    * falls back to the full rewrite (layout not splittable or too many
-    * touched partitions). A delete that EMPTIES a partition drops its dir
-    * exactly (prunedRewrite learns the encoded dir names from Spark). */
-  private def prunedDelete(condition: String,
-                           partitionBy: Seq[String]): Option[Long] =
-    prunedRewrite(expr(condition), partitionBy,
-      slice => slice.where(!expr(condition)))
 
   /** Predicate-scoped overwrite (Delta's `replaceWhere`): rows matching
     * `condition` leave the snapshot and the batch takes their place, in
@@ -1052,8 +920,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * partitions (either side alone is wrong: an existing partition the
     * batch doesn't refill must still drop its matches; a partition only
     * the batch names must merge with its untouched rows), untouched dirs
-    * carried by manifest reference — O(touched partitions). A replace
-    * that empties a partition falls back to the full rewrite. */
+    * carried by manifest reference — O(touched partitions). */
   def replaceWhere(df: DataFrame, condition: String,
                    partitionBy: Seq[String] = Nil): Long = {
     validateBatch(df)
@@ -1062,32 +929,113 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     require(stray == 0L,
       s"replaceWhere batch contains rows violating the predicate $condition")
     withCommitRetry("replaceWhere") {
-      lastManifest() match {
-        case None =>
-          commitAgainst(None, Seq(Entry(writeData(df, partitionBy), None)))
-        case Some(cur) =>
-          val pruned = if (partitionBy.nonEmpty &&
-              df.columns.contains(partitionBy.head))
-            prunedRewrite(expr(condition), partitionBy,
-              slice => slice.where(!expr(condition))
-                .unionByName(df, allowMissingColumns = true),
-              extraTouched = Some(df.select(col(partitionBy.head))))
-          else None
-          pruned.getOrElse(
-            commitAgainst(Some(cur.version), Seq(Entry(writeData(
-              readSnapshot(cur).where(!expr(condition))
-                .unionByName(df, allowMissingColumns = true),
-              partitionBy), None))))
+      rewriteDml(partitionBy, df.columns.contains(_), expr(condition),
+          batch = Some(df), firstWrite = Some(df)) {
+        _.where(!expr(condition)).unionByName(df, allowMissingColumns = true)
       }
     }
   }
 
-  /** Shared pruned-rewrite engine for DML on the FIRST partition column:
-    * discover partitions holding rows matching `cond` (column-pruned scan,
-    * bounded driver-side value list) plus any `extraTouched` key rows (the
-    * incoming batch's partitions for replaceWhere/applyChanges/merge), run
-    * `rewriteSlice` over ONLY those partitions into a fresh dir, and carry
-    * every other partition dir by manifest reference.
+  /** Delta-style UPDATE … SET on the current snapshot: one projection pass
+    * into a fresh snapshot dir. With `partitionBy` set the rewrite is
+    * pruned to partitions containing matching rows, like [[delete]].
+    * NOTE: assigning to the partition column itself would move rows
+    * between partitions, so that case always takes the full rewrite. */
+  def updateWhere(cond: String, set: Map[String, String],
+                  partitionBy: Seq[String] = Nil): Long = {
+    if (!exists) throw new AnalysisException("TABLE_OR_VIEW_NOT_FOUND", Map("relationName" -> path))
+    def apply(df: DataFrame): DataFrame =
+      set.foldLeft(df) { case (d, (c, valueExpr)) =>
+        d.withColumn(c, when(expr(cond), expr(valueExpr)).otherwise(col(c)))
+      }
+    // CHECK constraints see the post-update image of CHANGED rows only —
+    // one extra scan proportional to the matched slice, not the table
+    validateBatch(apply(read().where(expr(cond))))
+    withCommitRetry("update") {
+      rewriteDml(partitionBy, !set.contains(_), expr(cond))(apply)
+    }
+  }
+
+  /** The upsert shape [[merge]] and [[applyChanges]] share: every target
+    * row matching a `keys` row leaves via one anti-join and `images` union
+    * in. No explicit broadcast hint on either side: update batches and the
+    * target both grow without bound at scale, and a forced broadcast of
+    * the anti-join build side would OOM; AQE converts the exchange to a
+    * broadcast at runtime whenever the observed size is actually small. */
+  private def upsertRewrite(keys: DataFrame, images: DataFrame,
+                            condition: String, partitionBy: Seq[String],
+                            prunable: String => Boolean): Long =
+    rewriteDml(partitionBy, prunable, lit(false), Some(keys), Some(images),
+        bucketKeyedBy = Some(condition)) {
+      _.alias("source").join(keys.alias("updates"), expr(condition), "left_anti")
+        .unionByName(images, allowMissingColumns = true)
+    }
+
+  /** The one copy-on-write DML core. `rewrite` maps snapshot rows —
+    * deletion vectors subtracted, bucket column dropped — to the rows
+    * that replace them; it serves the pruned slice and the full rewrite
+    * alike. On a table with no head, `firstWrite` is the first snapshot.
+    * Otherwise, first match:
+    *
+    *   - PARTITION pruning ([[prunedRewrite]] on `partitionBy.head`) when
+    *     `partitionBy` is set and `prunable(partitionBy.head)`: the
+    *     touched partitions are those holding `matched` rows plus those
+    *     the `batch` rows name;
+    *   - BUCKET pruning on an unpartitioned table ([[setBucket]]) when
+    *     `bucketKeyedBy` holds the op's join condition, that condition
+    *     carries a TOP-LEVEL `source.key = updates.key` AND-conjunct on the
+    *     spec's key ([[DataSkipping.keyEquiConjunct]] — an equality under
+    *     OR/NOT proves nothing, a match through the other arm could live
+    *     in an untouched bucket) and `batch` has the key column. Touched
+    *     buckets = `batch` keys hashed at the spec's canonical type
+    *     ([[ManagedTable.BucketSpec.idOf]]), so type-drifted batches
+    *     bucket identically to the layout;
+    *   - ONE full rewrite of the snapshot into a fresh dir — also when
+    *     pruning returns None (layout not splittable, too many touched
+    *     values, the whole table emptied).
+    *
+    * Pruning contract: the match must be PARTITION-STABLE — a batch row
+    * only ever matches target rows in its own partition (the usual case:
+    * the partition column is part of, or functionally determined by, the
+    * key). A key that can match across partitions leaves the other
+    * partition's old row in place; use the unpartitioned full rewrite for
+    * such keys — Delta's guidance to put the partition predicate in the
+    * merge condition. Bucket pruning holds it by construction: the bucket
+    * is a function of the key. */
+  private def rewriteDml(partitionBy: Seq[String], prunable: String => Boolean,
+                         matched: Column, batch: Option[DataFrame] = None,
+                         firstWrite: Option[DataFrame] = None,
+                         bucketKeyedBy: Option[String] = None)(
+      rewrite: DataFrame => DataFrame): Long =
+    lastManifest() match {
+      case None =>
+        commitAgainst(None, Seq(Entry(writeData(firstWrite.get, partitionBy), None)))
+      case Some(cur) =>
+        val pruned = partitionBy.headOption match {
+          case Some(pcol) if prunable(pcol) => prunedRewrite(cur, matched,
+            partitionBy, rewrite, batch.map(_.select(col(pcol))))
+          case Some(_) => None
+          case None => for {
+            condition <- bucketKeyedBy
+            keys <- batch
+            spec <- bucketSpec
+            if DataSkipping.keyEquiConjunct(spark, condition, spec.column)
+            key <- keys.columns.find(_.equalsIgnoreCase(spec.column))
+            v <- prunedRewrite(cur, matched, Seq(ManagedTable.BucketCol), rewrite,
+              Some(keys.select(spec.idOf(col(s"`$key`")).as(ManagedTable.BucketCol))))
+          } yield v
+        }
+        pruned.getOrElse(commitAgainst(Some(cur.version),
+          Seq(Entry(writeData(rewrite(readSnapshot(cur)), partitionBy), None))))
+    }
+
+  /** [[rewriteDml]]'s pruned path on the FIRST partition column (or the
+    * bucket column): discover partitions of `cur` holding rows matching
+    * `cond` (column-pruned scan, bounded driver-side value list) plus any
+    * `extraTouched` key rows (the incoming batch's partitions or buckets),
+    * run `rewriteSlice` over ONLY those partitions into a fresh dir, and
+    * carry every other partition dir by manifest reference. None → the
+    * caller falls back to the full rewrite.
     *
     * Emptied partitions are handled EXACTLY, not by falling back: the
     * touched values' encoded dir names are learned from Spark itself (a
@@ -1101,11 +1049,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * here: an op that empties one touched partition while inserting a new
     * one keeps the counts equal and would silently resurrect the emptied
     * partition's rows. */
-  private def prunedRewrite(cond: Column, partitionBy: Seq[String],
+  private def prunedRewrite(cur: Manifest, cond: Column, partitionBy: Seq[String],
                             rewriteSlice: DataFrame => DataFrame,
-                            extraTouched: Option[DataFrame] = None): Option[Long] = {
+                            extraTouched: Option[DataFrame]): Option[Long] = {
     val pcol = partitionBy.head
-    val cur = lastManifest().get
     val prefix = pcol + "="
     // ONE metadata listing answers BOTH layout splittability and the
     // carry-candidate (name, entry) list — the separate splittableLayout
@@ -1144,21 +1091,19 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       return None
     // ONE logical snapshot relation serves key discovery, the presence
     // guard and the rewrite slice.
-    val baseRead =
-      if (cur.dvs.isEmpty) readEntries(cur.entries, cur.renames)
-      else readEntriesWithMeta(cur.entries, cur.renames)
+    val baseRead = readEntries(cur.entries, cur.renames, withMeta = cur.dvs.nonEmpty)
     def snapWhere(c: Column): DataFrame =
       if (cur.dvs.isEmpty) baseRead.where(c)
       else applyDv(baseRead.where(c), cur.dvs).drop(DvFile, DvPos)
-    // with cond = lit(false) (the merge/CDC paths) Catalyst folds this
+    // with cond = lit(false) (the upsert paths) Catalyst folds this
     // branch of the union to an empty relation — no scan tasks run
     val matchKeys = snapWhere(cond).select(col(pcol))
     // the union's resolved schema (not matchKeys') types the collected
     // rows: a batch whose key column is wider than the table's coerces
     val keyed = extraTouched.fold(matchKeys)(matchKeys.union)
     val touchedRows = keyed.distinct()
-      .limit(MaxPrunedPartitions + 1).collect()
-    if (touchedRows.length > MaxPrunedPartitions) return None
+      .limit(ManagedTable.MaxPrunedPartitions + 1).collect()
+    if (touchedRows.length > ManagedTable.MaxPrunedPartitions) return None
     if (touchedRows.isEmpty)
       return Some(commitAgainst(Some(cur.version), cur.entries, cur.dvs))
     val touchedVals = touchedRows.map(_.get(0))
@@ -1200,15 +1145,16 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       val existingNames = children.iterator.map(_._1).toSet
       val presentRows = snapWhere(sliceCond)
         .select(col(pcol).cast(keyed.schema.head.dataType).as(pcol))
-        .distinct().limit(MaxPrunedPartitions + 1).collect()
+        .distinct().limit(ManagedTable.MaxPrunedPartitions + 1).collect()
       val encodedPresent = encodePartitionNames(
         presentRows.toIndexedSeq, keyed.schema, pcol)
       if (!encodedPresent.forall(existingNames.contains)) return None
     }
 
     // the isin filter prunes the scan to touched partitions before the
-    // per-row rewrite applies
-    val out = rewriteSlice(snapWhere(sliceCond))
+    // per-row rewrite applies; the slice drops the bucket column like a
+    // full read does (writeData recomputes it)
+    val out = rewriteSlice(snapWhere(sliceCond).drop(ManagedTable.BucketCol))
     val newDir = writeData(out, partitionBy)
     val rewritten = FsUtils.listChildren(spark, newDir)._1
       .filter(_.startsWith(prefix)).toSet
@@ -1227,8 +1173,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
 
   /** Spark's own encoded `pcol=value` dir name for each key row: write a
     * one-int marker frame partitioned by `pcol` to a staging dir and read
-    * the subdir names back. Bounded by [[MaxPrunedPartitions]] rows; one
-    * tiny job per pruned DML call. The probe stages on the TABLE's own
+    * the subdir names back. Bounded by
+    * [[ManagedTable.MaxPrunedPartitions]] rows; one tiny job per pruned
+    * DML call. The probe stages on the TABLE's own
     * filesystem — process-local scratch is only sound single-node: on a
     * cluster the write task would land on an executor's local disk, the
     * driver's read-back would see NO subdirs, and the empty encoded set
@@ -1282,33 +1229,6 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         val old = readSnapshot(base)
         cur.exceptAll(old).withColumn("_change_type", lit("insert"))
           .unionByName(old.exceptAll(cur).withColumn("_change_type", lit("delete")))
-    }
-  }
-
-  /** Delta-style UPDATE … SET on the current snapshot: one projection pass
-    * into a fresh snapshot dir. With `partitionBy` set the rewrite is
-    * pruned to partitions containing matching rows, like [[delete]] —
-    * updates never remove rows, so the pruned path has no emptied-partition
-    * fallback. NOTE: assigning to the partition column itself would move
-    * rows between partitions, so that case always takes the full rewrite. */
-  def updateWhere(cond: String, set: Map[String, String],
-                  partitionBy: Seq[String] = Nil): Long = {
-    if (!exists) throw new AnalysisException("TABLE_OR_VIEW_NOT_FOUND", Map("relationName" -> path))
-    def apply(df: DataFrame): DataFrame =
-      set.foldLeft(df) { case (d, (c, valueExpr)) =>
-        d.withColumn(c, when(expr(cond), expr(valueExpr)).otherwise(col(c)))
-      }
-    // CHECK constraints see the post-update image of CHANGED rows only —
-    // one extra scan proportional to the matched slice, not the table
-    validateBatch(apply(read().where(expr(cond))))
-    withCommitRetry("update") {
-      val cur = lastManifest().get
-      val pruned = if (partitionBy.nonEmpty && !set.contains(partitionBy.head))
-        prunedRewrite(expr(cond), partitionBy, apply)
-      else None
-      pruned.getOrElse(
-        commitAgainst(Some(cur.version), Seq(Entry(writeData(
-          apply(readSnapshot(cur)), partitionBy), None))))
     }
   }
 
@@ -1549,9 +1469,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
                 .parquet(files: _*)
             },
             m.renames))
-          if (m.dvs.isEmpty) entryScan
-          else entryScan.withColumn(DvFile, col("_metadata.file_path"))
-            .withColumn(DvPos, col("_metadata.row_index"))
+          if (m.dvs.isEmpty) entryScan else provenance(entryScan)
         case (e, _, _, _) =>
           // fully-pruned entry: keep its SCHEMA as a zero-row slice —
           // under schema drift, dropping the entry entirely could lose
@@ -1700,10 +1618,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         // un-vectored files would resurrect deleted rows); DVs carry
         // over for the carried dirs — vector rows addressing rewritten
         // files become inert, exactly like [[compactSmall]]
-        val folded =
-          if (cur.dvs.isEmpty) readEntries(fresh, cur.renames)
-          else applyDv(readEntriesWithMeta(fresh, cur.renames), cur.dvs)
-            .drop(DvFile, DvPos)
+        val folded = readSnapshot(cur.copy(entries = fresh))
         val n = if (targetPartitions > 0) targetPartitions
           else {
             val bytes = fresh.map(e =>
@@ -1799,24 +1714,14 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       else {
         // subtract deletion vectors from the rewritten slice (rewriting
         // from un-vectored files would resurrect deleted rows); carried
-        // healthy dirs may still have vectored rows so dvs carry over
-        val smallEntries = small.map(_._1)
-        val folded = (if (cur.dvs.isEmpty) readEntries(smallEntries, cur.renames)
-                      else applyDv(readEntriesWithMeta(smallEntries, cur.renames), cur.dvs)
-                        .drop(DvFile, DvPos))
-        // bucketed tables repartition BY BUCKET so each bucket's rows land
-        // in one task — the rewrite then emits one file per non-empty
-        // bucket instead of (tasks × buckets) small files, which would
-        // re-create the small-file tail the compaction exists to fold
-        val merged = bucketSpec match {
-          case Some(spec)
-              if folded.columns.exists(_.equalsIgnoreCase(spec.column)) =>
-            val key = folded.columns.find(_.equalsIgnoreCase(spec.column)).get
-            folded.repartition(n, spec.idOf(col(s"`$key`")))
-          case _ => folded.repartition(n)
-        }
+        // healthy dirs may still have vectored rows so dvs carry over.
+        // clusterFor repartitions a bucketed table BY BUCKET, so the
+        // rewrite emits one file per non-empty bucket instead of (tasks ×
+        // buckets) small files — the tail this compaction exists to fold
+        val folded = readSnapshot(cur.copy(entries = small.map(_._1)))
         val healthyEntries = healthy.map(_._1)
-        val newEntry = Entry(writeData(merged, partitionBy), None)
+        val newEntry =
+          Entry(writeData(clusterFor(folded, Nil, n), partitionBy), None)
         // same DV fold as optimizeIncremental: the compacted slice's
         // vectors were materialized by the rewrite — shed them
         commitAgainst(Some(cur.version), healthyEntries :+ newEntry,
@@ -1971,7 +1876,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
             else {
               // '' doubling: a quote inside a partition VALUE must not
               // break (or inject into) the view body
-              val lit = unescapePathName(v).replace("'", "''")
+              val lit = ExternalCatalogUtils.unescapePathName(v).replace("'", "''")
               s"CAST($c AS STRING) = '$lit'"
             }
           }
@@ -1989,22 +1894,6 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     }
     spark.sql(
       s"CREATE OR REPLACE VIEW $databaseName.$tableName AS $body")
-  }
-
-  /** Inverse of Spark's partition-path escaping (`%xx` sequences only —
-    * NOT URL decoding; `+` stays `+`). */
-  private def unescapePathName(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val code = try Integer.parseInt(s.substring(i + 1, i + 3), 16) catch { case _: NumberFormatException => -1 }
-        if (code >= 0) { sb.append(code.toChar); i += 3 }
-        else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   private def writeData(df: DataFrame, partitionBy: Seq[String]): String = {
@@ -2169,6 +2058,11 @@ object ManagedTable {
     * paths through the driver. Overridable per session with
     * `graft.prune.maxFiles`. Measured: see PLANS.md (stats-prune cap). */
   val MaxPruneFiles = 262144
+
+  /** Touched-value count above which pruned DML degenerates to a full
+    * rewrite anyway (the touched-value list is driver-side metadata, so
+    * bound it). */
+  val MaxPrunedPartitions = 4096
 
   private[table] def maxPruneFiles(spark: SparkSession): Int =
     spark.conf.getOption("graft.prune.maxFiles").map(_.toInt)
