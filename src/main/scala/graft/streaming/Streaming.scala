@@ -43,14 +43,18 @@ object Streaming {
     catch { case _: Exception => java.util.UUID.randomUUID().toString }
 
   /** Shared auto-compaction cadence for the table-building sinks: every
-    * `compactEvery` batches (0 = never) fold each table's small per-batch
+    * `compactEvery`-th batch (0 = never). One definition so the guard
+    * can't drift between sinks. */
+  private def compactionDue(batchId: Long, compactEvery: Int): Boolean =
+    compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
+
+  /** At each [[compactionDue]] batch, fold each table's small per-batch
     * dirs via [[graft.table.ManagedTable.compactSmall]] (healthy dirs
     * carry by reference; a cadence point with nothing to fold commits
-    * nothing). One definition so the guard/placement can't drift between
-    * sinks. */
+    * nothing). */
   private def maybeCompact(batchId: Long, compactEvery: Int,
                            tables: graft.table.ManagedTable*): Unit =
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+    if (compactionDue(batchId, compactEvery))
       tables.foreach(t => if (t.exists) t.compactSmall())
 
   /** Watermarked tumbling-window aggregation: per (window, key) row count
@@ -144,7 +148,7 @@ object Streaming {
             .where(col("__rn") === 1).drop("__rn")
           if (vectorized) {
             table.mergeVectorized(deduped, mergeCondition, partitionBy)
-            if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+            if (compactionDue(batchId, compactEvery))
               table.optimize(partitionBy = partitionBy)
           } else
             table.merge(deduped, mergeCondition, upsert = true,
@@ -364,13 +368,6 @@ object Streaming {
       .runCaptured()
   }
 
-  /** Streaming CDC mirror: apply an I/U/D change stream onto a
-    * [[graft.table.ManagedTable]] — each micro-batch goes through
-    * [[graft.table.ManagedTable.applyChanges]], which collapses the batch
-    * last-op-wins per key and mirrors deletes + upserts in one version.
-    * The Delta `.writeStream` + CDC-merge recipe; with
-    * Trigger.AvailableNow it drains a change-log backlog incrementally
-    * with exactly-once-per-batch checkpointing (replays are no-ops). */
   /** Incremental materialized-view maintenance: keeps `target` equal to
     * `SELECT keyCols, aggs FROM <all events ever seen> GROUP BY keyCols`
     * without ever recomputing history. Each micro-batch partial-aggregates
@@ -468,6 +465,13 @@ object Streaming {
       .runCaptured()
   }
 
+  /** Streaming CDC mirror: apply an I/U/D change stream onto a
+    * [[graft.table.ManagedTable]] — each micro-batch goes through
+    * [[graft.table.ManagedTable.applyChanges]], which collapses the batch
+    * last-op-wins per key and mirrors deletes + upserts in one version.
+    * The Delta `.writeStream` + CDC-merge recipe; with
+    * Trigger.AvailableNow it drains a change-log backlog incrementally
+    * with exactly-once-per-batch checkpointing (replays are no-ops). */
   def streamApplyChanges(changes: DataFrame, table: graft.table.ManagedTable,
                          mergeCondition: String, opCol: String,
                          orderCol: String,

@@ -72,28 +72,38 @@ import graft.common.FsUtils
   * reference's MergeSchema (batch_delta.py:27,40), and each scan keeps its
   * own partition discovery, pruning and pushdown.
   *
-  * Read cost model: a data dir is written once under a fresh name and
-  * never modified, so resolving its scan — listing its files and
-  * inferring the schema from their footers, one Spark job — is done once
-  * per session while the dir belongs to the head snapshot. A dir this
-  * session has just written and committed skips the inference job: the
-  * commit registers it with the schema it was written with, which is the
-  * schema the footers hold (unpartitioned dirs of plain parquet types
-  * only; a partitioned or bucketed dir, whose partition columns are typed
-  * from the dir names, and any schema with field metadata, char/varchar,
-  * collations or other types keep inference). Every later
-  * read of that head (`read`, `readWhere`, the DML and merge reads)
-  * wraps the resolved relation in a new logical relation with fresh
-  * attribute ids, so self-joins and `exceptAll` of two reads plan as two
-  * scans. Each head resolution drops the relations of dirs that left the
-  * head, so reuse is bounded by the live snapshot; reads of older
-  * versions resolve fresh, and stats-pruned file-subset scans are built
-  * per read.
+  * Read cost model: every read of a snapshot's rows is built by ONE
+  * reader ([[readSnapshot]]) — per-entry scans, renames, the union by
+  * name, tombstones, the caller's filter, then the DV anti-join. A data
+  * dir is written once under a fresh name and never modified, so
+  * resolving its scan — listing its files and inferring the schema from
+  * their footers, one Spark job — is done once per session while the dir
+  * belongs to the head snapshot. A dir this session has just written and
+  * committed skips the inference job: the commit registers it with the
+  * schema it was written with, which is the schema the footers hold
+  * (unpartitioned dirs of plain parquet types only; a partitioned or
+  * bucketed dir, whose partition columns are typed from the dir names,
+  * and any schema with field metadata, char/varchar, collations or other
+  * types keep inference). Every later read of that head (`read`,
+  * `readWhere`, the DML and merge reads) wraps the resolved relation in a
+  * new logical relation with fresh attribute ids, so self-joins and
+  * `exceptAll` of two reads plan as two scans. Each head resolution drops
+  * the relations of dirs that left the head, so reuse is bounded by the
+  * live snapshot; reads of older versions resolve fresh, and stats-pruned
+  * file-subset scans are built per read.
+  *
+  * Commits: every operation that commits runs in ONE loop
+  * ([[withCommitRetry]]). Each attempt resolves the head once — walking
+  * the delta chain once — and validates, reads, names its dirs and
+  * commits against that head ([[commitAgainst]]: put-if-absent of version
+  * head+1). A lost race re-runs the attempt against the new head, at most
+  * [[ManagedTable.MaxCommitAttempts]] times: read-modify-write ops
+  * recompute, blind commits (append, write, restore) write their data
+  * once and only rebase the manifest.
   */
 final class ManagedTable(spark: SparkSession, val path: String) {
 
   private def logDir = s"$path/_graft_log"
-  private def dataDir(v: Long) = s"$path/d$v"
 
   import ManagedTable.{DeltaRecord, Entry, Manifest, TableProps}
 
@@ -320,17 +330,61 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       e.base.fold(spark.read)(b => spark.read.option("basePath", b)).parquet(e.dir)
     }
 
-  /** The entries' scans as one logical read. `withMeta` adds per-row file
-    * provenance (`_metadata.file_path` + `_metadata.row_index`) — the join
-    * key deletion vectors address. */
-  private def readEntries(entries: Seq[Entry], renames: Seq[(String, String)],
-                          withMeta: Boolean = false): DataFrame =
-    entries match {
-      case Nil => spark.emptyDataFrame
-      case es => dropTombstones(es.map { e =>
-        val d = applyRenames(scan(e), renames)
-        if (withMeta) provenance(d) else d
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
+  /** The one snapshot reader: every read of `m`'s rows — [[read]],
+    * [[readVersion]], [[readWhere]], the DV DML matches and the pruned DML
+    * slices — is built here, in this order:
+    *
+    *   - one scan per entry: its reused whole-dir relation; with
+    *     `pruneFor`, the files [[pruneEntries]] keeps for that condition,
+    *     or a zero-row slice of an entry it prunes entirely (the slice keeps
+    *     the entry's SCHEMA: under schema drift, dropping the entry could
+    *     lose columns the filter or the caller references);
+    *   - per scan: `pruneFor`'s bucket-id filter, the manifest's renames
+    *     and, under deletion vectors or `withMeta`, the provenance columns;
+    *   - the union by name, the tombstone drop and `filter`;
+    *   - the DV anti-join. `filter` stays BEFORE it: the scans keep their
+    *     pushdown, and a slice taken from un-vectored data would bring
+    *     deleted rows back.
+    *
+    * `withMeta` keeps the provenance columns (DML derives new vectors
+    * from them); `withBucket` keeps the hidden bucket partition
+    * ([[setBucket]]), which a logical read never surfaces — rewrites
+    * recompute it in [[writeData]]. */
+  private def readSnapshot(m: Manifest, filter: Option[Column] = None,
+                           pruneFor: Option[String] = None,
+                           withMeta: Boolean = false,
+                           withBucket: Boolean = false): DataFrame =
+    if (m.entries.isEmpty) spark.emptyDataFrame
+    else {
+      // an equality/IN conjunct on the bucketed key names the buckets that
+      // can match, hashed at the spec's CANONICAL type; Catalyst turns the
+      // isin into a partition filter, so other bucket dirs are pruned at
+      // planning time. Dirs written before setBucket lack the column and
+      // read unpruned. An EMPTY id set (contradictory conjuncts) prunes
+      // the whole scan — isin() of nothing is false
+      val bucketIds = for {
+        c <- pruneFor
+        spec <- bucketSpec
+        ids <- DataSkipping.bucketsFor(spark, c, spec.column, spec.keyType, spec.n)
+      } yield ids.toSeq.map(Int.box)
+      val kept: Seq[(Entry, Option[Seq[String]])] = pruneFor.fold(
+        m.entries.map(_ -> Option.empty[Seq[String]]))(c =>
+        pruneEntries(m.entries, c, withCounts = false).map(s => s._1 -> s._2))
+      val scans = kept.map { case (e, files) =>
+        val logical = applyRenames(files.filter(_.nonEmpty).fold(scan(e))(fs =>
+          spark.read.option("basePath", e.base.getOrElse(e.dir)).parquet(fs: _*)),
+          m.renames)
+        val bucketed = bucketIds.filter(_ => logical.schema.fieldNames
+            .exists(_.equalsIgnoreCase(ManagedTable.BucketCol)))
+          .fold(logical)(ids => logical.where(col(ManagedTable.BucketCol).isin(ids: _*)))
+        val s = if (withMeta || m.dvs.nonEmpty) provenance(bucketed) else bucketed
+        if (files.exists(_.isEmpty)) s.limit(0) else s
+      }
+      val rows = filter.foldLeft(dropTombstones(
+        scans.reduce(_.unionByName(_, allowMissingColumns = true))))(_.where(_))
+      val live = applyDv(rows, m.dvs)
+      val out = if (withMeta || m.dvs.isEmpty) live else live.drop(DvFile, DvPos)
+      if (withBucket) out else out.drop(ManagedTable.BucketCol)
     }
 
   // ------------------------------------------------------- deletion vectors
@@ -350,40 +404,19 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     df.withColumn(DvFile, col("_metadata.file_path"))
       .withColumn(DvPos, col("_metadata.row_index"))
 
-  private def applyDv(withMeta: DataFrame, dvs: Seq[String]): DataFrame =
-    withMeta.join(spark.read.parquet(dvs: _*), Seq(DvFile, DvPos), "left_anti")
+  /** `rows` minus the positions `dvs` vector out; `rows` itself when
+    * there are none — the common read stays a bare parquet scan. */
+  private def applyDv(rows: DataFrame, dvs: Seq[String]): DataFrame =
+    if (dvs.isEmpty) rows
+    else rows.join(spark.read.parquet(dvs: _*), Seq(DvFile, DvPos), "left_anti")
 
-  /** Snapshot read with `m`'s deletion vectors subtracted (plain
-    * [[readEntries]] when there are none — the common path stays a bare
-    * parquet scan with no provenance columns in the plan). */
-  private def readSnapshot(m: Manifest): DataFrame =
-    // the hidden bucket partition ([[setBucket]]) never surfaces in a
-    // logical read; rewrites recompute it in writeData, so dropping it
-    // here keeps it physically-derived only (drop is a no-op on
-    // unbucketed dirs)
-    (if (m.dvs.isEmpty) readEntries(m.entries, m.renames)
-     else readWithMeta(m).drop(DvFile, DvPos))
-      .drop(ManagedTable.BucketCol)
-
-  /** Like [[readSnapshot]] but keeps the provenance columns — DML ops use
-    * it to derive NEW vectors from matched rows. */
-  private def readWithMeta(m: Manifest): DataFrame = {
-    val base = readEntries(m.entries, m.renames, withMeta = true)
-    if (m.dvs.isEmpty) base else applyDv(base, m.dvs)
-  }
-
-  // Filtered snapshot reads for the pruned DML paths are built inside
-  // [[prunedRewrite]] from ONE shared snapshot relation (filter applied
-  // BEFORE the DV anti-join so scan-level pushdown/pruning is unaffected;
-  // rewriting a slice from un-vectored data would resurrect deleted rows).
-
-  /** DV sidecars live under `_graft_dv/` — outside the `d*` data-dir
-    * namespace, so data-dir globs (streamAppends) and the race-orphan
-    * sweep never confuse them with data; vacuum reaps them explicitly. */
-  private def writeDvData(matched: DataFrame): String = {
-    val v = currentVersion.map(_ + 1).getOrElse(0L)
-    val dir = s"$path/_graft_dv/dv$v-${java.util.UUID.randomUUID.toString.take(8)}"
-    matched.select(col(DvFile), col(DvPos)).write.mode("overwrite").parquet(dir)
+  /** Write one DV sidecar for the commit on top of `head`. Sidecars live
+    * under `_graft_dv/` — outside the `d*` data-dir namespace, so data-dir
+    * globs (streamAppends) and the race-orphan sweep never confuse them
+    * with data; vacuum reaps them explicitly. */
+  private def writeDvs(rows: DataFrame, head: Manifest): String = {
+    val dir = freshDir(s"$path/_graft_dv/dv", Some(head))
+    rows.select(col(DvFile), col(DvPos)).write.mode("overwrite").parquet(dir)
     dir
   }
 
@@ -413,13 +446,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       .map(p => c === p || c.startsWith(p + "/"))
       .reduceOption(_ || _).getOrElse(lit(false))
     val kept = spark.read.parquet(cur.dvs: _*).where(live)
-    if (kept.isEmpty) Nil
-    else {
-      val dir = s"$path/_graft_dv/dv${cur.version + 1}-${
-        java.util.UUID.randomUUID.toString.take(8)}"
-      kept.write.mode("overwrite").parquet(dir)
-      Seq(dir)
-    }
+    if (kept.isEmpty) Nil else Seq(writeDvs(kept, cur))
   }
 
   /** Bound the LIVE DV sidecar-dir count per snapshot (Delta's DV-file
@@ -434,13 +461,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * for the old snapshots that reference them (time travel intact) and
     * age out through vacuum's dv-orphan sweep, exactly like
     * [[foldDvs]]'s replaced sidecars. */
-  private def compactedDvs(dvs: Seq[String]): Seq[String] = {
-    if (dvs.size <= ManagedTable.dvCompactThreshold(spark)) return dvs
-    val dir = s"$path/_graft_dv/dv${currentVersion.map(_ + 1).getOrElse(0L)}" +
-      s"-merge-${java.util.UUID.randomUUID.toString.take(8)}"
-    spark.read.parquet(dvs: _*).write.mode("overwrite").parquet(dir)
-    Seq(dir)
-  }
+  private def compactedDvs(dvs: Seq[String], head: Manifest): Seq[String] =
+    if (dvs.size <= ManagedTable.dvCompactThreshold(spark)) dvs
+    else Seq(writeDvs(spark.read.parquet(dvs: _*), head))
 
   /** (dv dir count, deleted-position rows) of the current snapshot — the
     * observability hook specs assert against. */
@@ -460,8 +483,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * large fraction of the table leaves. */
   def deleteVectorized(condition: String): Long = {
     require(exists, s"deleteVectorized on absent table $path")
-    withCommitRetry("deleteVectorized") {
-      vectorOut(lastManifest().get, _.where(expr(condition)))(_ => None)
+    withCommitRetry("deleteVectorized") { h =>
+      vectorOut(h.get, _.where(expr(condition)))(_ => None)
     }
   }
 
@@ -473,13 +496,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   def updateVectorized(cond: String, set: Map[String, String],
                        partitionBy: Seq[String] = Nil): Long = {
     require(exists, s"updateVectorized on absent table $path")
-    withCommitRetry("updateVectorized") {
-      vectorOut(lastManifest().get, _.where(expr(cond)), partitionBy) {
+    withCommitRetry("updateVectorized") { h =>
+      vectorOut(h.get, _.where(expr(cond)), partitionBy) {
         _.map { matched =>
           val images = set.foldLeft(matched.drop(DvFile, DvPos)) {
             case (d, (c, valueExpr)) => d.withColumn(c, expr(valueExpr))
           }
-          validateBatch(images)
+          validateBatch(images, h)
           images
         }
       }
@@ -495,38 +518,35 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * SQL; the result is bit-identical to merge's. */
   def mergeVectorized(updates: DataFrame, condition: String,
                       partitionBy: Seq[String] = Nil,
-                      txn: Map[String, Long] = Map.empty): Long = {
-    validateBatch(updates)
-    requireFreshNames(updates, "mergeVectorized")
-    withCommitRetry("mergeVectorized") {
-      lastManifest() match {
+                      txn: Map[String, Long] = Map.empty): Long =
+    withCommitRetry("mergeVectorized") { h =>
+      validateBatch(updates, h)
+      requireFreshNames(updates, "mergeVectorized", h)
+      h match {
         case None =>
-          commitAgainst(None, Seq(Entry(writeData(updates, partitionBy), None)),
-            txn = txn)
+          commitAppended(None, writeData(updates, partitionBy, None), txn)
         case Some(cur) =>
           vectorOut(cur, _.alias("source")
             .join(updates.alias("updates"), expr(condition), "left_semi"),
             partitionBy, txn)(_ => Some(updates))
       }
     }
-  }
 
   /** The one vectoring step of the DV DML ops: the rows `matching` picks
-    * from [[readWithMeta]]`(cur)` leave through one new DV sidecar (no
-    * sidecar when nothing matched), and `appended` — handed the matched
-    * rows, or None when there were none — names a frame to append as a
-    * fresh `partitionBy`-shaped dir. Every entry of `cur` carries by
-    * reference. */
+    * from `cur`'s snapshot (provenance kept) leave through one new DV
+    * sidecar (no sidecar when nothing matched), and `appended` — handed
+    * the matched rows, or None when there were none — names a frame to
+    * append as a fresh `partitionBy`-shaped dir. Every entry of `cur`
+    * carries by reference. */
   private def vectorOut(cur: Manifest, matching: DataFrame => DataFrame,
                         partitionBy: Seq[String] = Nil,
                         txn: Map[String, Long] = Map.empty)(
       appended: Option[DataFrame] => Option[DataFrame]): Long = {
-    val matched = Some(matching(readWithMeta(cur))).filterNot(_.isEmpty)
+    val matched = Some(matching(readSnapshot(cur, withMeta = true))).filterNot(_.isEmpty)
     val images = appended(matched)
-    val dvs = matched.fold(cur.dvs)(m => compactedDvs(cur.dvs :+ writeDvData(m)))
-    commitAgainst(Some(cur.version),
-      cur.entries ++ images.map(i => Entry(writeData(i, partitionBy), None)),
-      dvs, txn = txn)
+    val dvs = matched.fold(cur.dvs)(m => compactedDvs(cur.dvs :+ writeDvs(m, cur), cur))
+    commitAgainst(Some(cur), cur.entries ++
+      images.map(i => Entry(writeData(i, partitionBy, Some(cur)), None)), dvs, txn = txn)
   }
 
   // ---------------------------------------------------------------- checks
@@ -553,9 +573,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
 
   /** Capture the key type from the current snapshot's schema. */
   def setBucket(column: String, n: Int): Unit = {
-    require(exists, s"setBucket($column, $n) on absent/empty table $path: " +
+    val head = lastManifest()
+    require(head.nonEmpty, s"setBucket($column, $n) on absent/empty table $path: " +
       "pass the key type explicitly (setBucket(column, n, keyType))")
-    val dt = read().schema.fields.find(_.name.equalsIgnoreCase(column))
+    val dt = readSnapshot(head.get).schema.fields.find(_.name.equalsIgnoreCase(column))
       .getOrElse(throw new IllegalArgumentException(
         s"setBucket: no column $column in $path")).dataType
     setBucket(column, n, dt)
@@ -572,7 +593,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     *   - [[merge]]/[[applyChanges]] keyed on the bucketed column rewrite
     *     ONLY the buckets holding batch keys (O(touched buckets), not
     *     O(table)) — the upsert-heavy-ingest cost model Delta needs
-    *     partition columns for, without requiring a natural partition key.
+    *     partition columns for, without requiring a natural partition key;
+    *     [[delete]], [[replaceWhere]] and [[updateWhere]] rewrite only the
+    *     buckets holding matched rows (plus the batch's).
     *
     * `keyType` is part of the layout: EVERY side (writes, lookup literals,
     * DML touched-bucket discovery) hashes the key cast to it, so a batch
@@ -625,8 +648,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * committing. The existing snapshot is validated now — a constraint
     * the current data violates is rejected, like Delta. */
   def setCheck(name: String, expression: String): Unit = {
-    if (exists) {
-      val bad = read().where(!expr(expression)).limit(1).count()
+    lastManifest().foreach { head =>
+      val bad = readSnapshot(head).where(!expr(expression)).limit(1).count()
       require(bad == 0,
         s"cannot add CHECK $name: existing rows violate ($expression)")
     }
@@ -648,15 +671,15 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     writeProps(readProps().copy(schemaEnforced = on))
 
   /** Write-time validation: CHECK constraints (one scan of the BATCH,
-    * never the table) + optional schema enforcement against the current
-    * snapshot's schema. */
-  private def validateBatch(df: DataFrame): Unit = {
+    * never the table) + optional schema enforcement against the schema of
+    * `head`, the snapshot the batch commits on. */
+  private def validateBatch(df: DataFrame, head: Option[Manifest]): Unit = {
     require(!df.columns.exists(_.equalsIgnoreCase(ManagedTable.BucketCol)),
       s"batch column ${ManagedTable.BucketCol} collides with the reserved " +
         "bucket-transform column")
     val props = readProps()
-    if (props.schemaEnforced && exists) {
-      val have = read().schema.map(f => f.name.toLowerCase -> f.dataType).toMap
+    if (props.schemaEnforced) head.foreach { h =>
+      val have = readSnapshot(h).schema.map(f => f.name.toLowerCase -> f.dataType).toMap
       df.schema.foreach { f =>
         have.get(f.name.toLowerCase) match {
           case None => throw new AnalysisException("FIELD_NOT_FOUND",
@@ -685,16 +708,19 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * `txn` stamps (appId -> version) markers into the commit atomically —
     * see [[lastTxn]]. */
   def write(df: DataFrame, partitionBy: Seq[String] = Nil,
-            txn: Map[String, Long] = Map.empty): Long = {
-    validateBatch(df)
-    // clean_write replaces the table's data AND schema mapping: the batch
-    // is the new logical truth, so renames reset (old manifests keep
-    // their own renames — time travel is unaffected)
+            txn: Map[String, Long] = Map.empty): Long =
     ManagedTable.inOp("write") {
-      commitEntries(Entry(writeData(df, partitionBy), None) :: Nil,
-        renames = Some(Nil), txn = txn)
+      val head = lastManifest()
+      validateBatch(df, head)
+      val dir = writeData(df, partitionBy, head)
+      // clean_write replaces the table's data AND schema mapping: the batch
+      // is the new logical truth, so renames reset (old manifests keep
+      // their own renames — time travel is unaffected). The commit is
+      // blind — it does not derive from the head — so a lost race only
+      // rebases the manifest
+      withCommitRetry("write", head)(
+        commitAgainst(_, Seq(Entry(dir, None)), renames = Some(Nil), txn = txn))
     }
-  }
 
   /** The newest (appId -> version) transaction marker committed for
     * `appId`, or None — Delta's `txnVersion` replay guard: a streaming
@@ -724,19 +750,24 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * the new head (Delta's blind-append fast path — N concurrent appends
     * all land, as N consecutive versions). */
   def append(df: DataFrame, partitionBy: Seq[String] = Nil,
-             txn: Map[String, Long] = Map.empty): Long = {
-    validateBatch(df)
-    requireFreshNames(df, "append")
+             txn: Map[String, Long] = Map.empty): Long =
     ManagedTable.inOp("append") {
-      val dir = writeData(df, partitionBy)
-      withCommitRetry("append") {
-        val prev = lastManifest()
-        commitAgainst(prev.map(_.version),
-          prev.map(_.entries).getOrElse(Nil) :+ Entry(dir, None),
-          prev.map(_.dvs).getOrElse(Nil), txn = txn)
+      val head = lastManifest()
+      validateBatch(df, head)
+      requireFreshNames(df, "append", head)
+      val dir = writeData(df, partitionBy, head)
+      withCommitRetry("append", head) { h =>
+        // a head the retry rebases onto may have renamed a batch column
+        requireFreshNames(df, "append", h)
+        commitAppended(h, dir, txn)
       }
     }
-  }
+
+  /** Commit `dir` as a new entry after `head`'s, its DVs carried. */
+  private def commitAppended(head: Option[Manifest], dir: String,
+                             txn: Map[String, Long] = Map.empty): Long =
+    commitAgainst(head, head.fold(Seq.empty[Entry])(_.entries) :+ Entry(dir, None),
+      head.fold(Seq.empty[String])(_.dvs), txn = txn)
 
   /** ALTER TABLE RENAME COLUMN as a manifest-only commit: zero data
     * movement at any table size. The ordered rename list lives in the
@@ -749,8 +780,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * files and clears the mapping. */
   def renameColumn(from: String, to: String): Long = {
     require(exists, s"renameColumn on absent table $path")
-    withCommitRetry("renameColumn") {
-      val cur = lastManifest().get
+    withCommitRetry("renameColumn") { h =>
+      val cur = h.get
       val schema = readSnapshot(cur).schema.fieldNames
       require(schema.exists(_.equalsIgnoreCase(from)),
         s"renameColumn: no column '$from' in $path (have ${schema.mkString(", ")})")
@@ -767,8 +798,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       require(!to.startsWith("__"),
         s"renameColumn: '$to' is in the reserved internal namespace (__*)")
       requireNotBucketKey(from, "renameColumn")
-      commitAgainst(Some(cur.version), cur.entries, cur.dvs,
-        Some(cur.renames :+ (from, to)))
+      commitAgainst(h, cur.entries, cur.dvs, Some(cur.renames :+ (from, to)))
     }
   }
 
@@ -791,13 +821,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * files still carry the physical column. */
   def dropColumn(name: String): Long = {
     require(exists, s"dropColumn on absent table $path")
-    withCommitRetry("dropColumn") {
-      val cur = lastManifest().get
+    withCommitRetry("dropColumn") { h =>
+      val cur = h.get
       val schema = readSnapshot(cur).schema.fieldNames
       require(schema.exists(_.equalsIgnoreCase(name)),
         s"dropColumn: no column '$name' in $path (have ${schema.mkString(", ")})")
       requireNotBucketKey(name, "dropColumn")
-      commitAgainst(Some(cur.version), cur.entries, cur.dvs,
+      commitAgainst(h, cur.entries, cur.dvs,
         Some(cur.renames :+
           (name, s"${ManagedTable.DroppedPrefix}v${cur.version + 1}_$name")))
     }
@@ -807,9 +837,11 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * SOURCE of a rename/drop mapping: the per-dir [[applyRenames]] would
     * re-capture the new column in that dir (the classic no-column-ids
     * hazard — Delta requires column mapping for the same reason). The
-    * caller's fix is OPTIMIZE (materializes the mapping, clears it). */
-  private def requireFreshNames(df: DataFrame, op: String): Unit =
-    lastManifest().map(_.renames).getOrElse(Nil).foreach { case (from, _) =>
+    * caller's fix is OPTIMIZE (materializes the mapping, clears it).
+    * Checked against `head`, the snapshot the batch commits on. */
+  private def requireFreshNames(df: DataFrame, op: String,
+                                head: Option[Manifest]): Unit =
+    head.fold(Seq.empty[(String, String)])(_.renames).foreach { case (from, _) =>
       require(!df.schema.fieldNames.exists(_.equalsIgnoreCase(from)),
         s"$op on $path: batch column '$from' matches a renamed/dropped " +
           "column's old name; run optimize() to materialize the column " +
@@ -829,20 +861,14 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     *     rows are appended — O(new data) like append.
     */
   def merge(updates: DataFrame, condition: String, upsert: Boolean = true,
-            partitionBy: Seq[String] = Nil): Long = withCommitRetry("merge") {
-    validateBatch(updates)
-    requireFreshNames(updates, "merge")
+            partitionBy: Seq[String] = Nil): Long = withCommitRetry("merge") { h =>
+    validateBatch(updates, h)
+    requireFreshNames(updates, "merge", h)
     if (upsert)
-      upsertRewrite(updates, updates, condition, partitionBy, updates.columns.contains(_))
-    else lastManifest() match {
-      case None =>
-        commitAgainst(None, Seq(Entry(writeData(updates, partitionBy), None)))
-      case Some(cur) =>
-        commitAgainst(Some(cur.version), cur.entries :+ Entry(writeData(
-          updates.alias("updates")
-            .join(readSnapshot(cur).alias("source"), expr(condition), "left_anti"),
-          partitionBy), None), cur.dvs)
-    }
+      upsertRewrite(h, updates, updates, condition, partitionBy, updates.columns.contains(_))
+    else commitAppended(h, writeData(h.fold(updates)(cur => updates.alias("updates")
+      .join(readSnapshot(cur).alias("source"), expr(condition), "left_anti")),
+      partitionBy, h))
   }
 
   /** Apply a CDC batch — rows tagged insert/update/delete in `opCol`
@@ -860,7 +886,6 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * collapse a U followed by its D would resurrect the row). */
   def applyChanges(changes: DataFrame, condition: String, opCol: String,
                    orderCol: String, partitionBy: Seq[String] = Nil): Long = {
-    requireFreshNames(changes, "applyChanges")
     import org.apache.spark.sql.expressions.Window
     // key columns = the `updates.<col>` references in the join condition,
     // extracted as whole identifiers (a substring test would make
@@ -887,9 +912,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // one pass: every changed key (U or D) leaves via the anti-join;
     // upsert images come back in the union
     val allKeys = latest.drop(opCol, orderCol)
-    validateBatch(upserts)
-    withCommitRetry("applyChanges") {
-      upsertRewrite(allKeys, upserts, condition, partitionBy, changes.columns.contains(_))
+    withCommitRetry("applyChanges") { h =>
+      validateBatch(upserts, h)
+      requireFreshNames(changes, "applyChanges", h)
+      upsertRewrite(h, allKeys, upserts, condition, partitionBy, changes.columns.contains(_))
     }
   }
 
@@ -905,8 +931,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * version. */
   def delete(condition: String, partitionBy: Seq[String] = Nil): Long = {
     require(exists, s"delete on absent table $path")
-    withCommitRetry("delete") {
-      rewriteDml(partitionBy, _ => true, expr(condition))(_.where(!expr(condition)))
+    withCommitRetry("delete") { h =>
+      rewriteDml(h, partitionBy, _ => true, expr(condition))(_.where(!expr(condition)))
     }
   }
 
@@ -923,13 +949,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * carried by manifest reference — O(touched partitions). */
   def replaceWhere(df: DataFrame, condition: String,
                    partitionBy: Seq[String] = Nil): Long = {
-    validateBatch(df)
-    requireFreshNames(df, "replaceWhere")
     val stray = df.where(!expr(condition)).limit(1).count()
     require(stray == 0L,
       s"replaceWhere batch contains rows violating the predicate $condition")
-    withCommitRetry("replaceWhere") {
-      rewriteDml(partitionBy, df.columns.contains(_), expr(condition),
+    withCommitRetry("replaceWhere") { h =>
+      validateBatch(df, h)
+      requireFreshNames(df, "replaceWhere", h)
+      rewriteDml(h, partitionBy, df.columns.contains(_), expr(condition),
           batch = Some(df), firstWrite = Some(df)) {
         _.where(!expr(condition)).unionByName(df, allowMissingColumns = true)
       }
@@ -939,8 +965,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   /** Delta-style UPDATE … SET on the current snapshot: one projection pass
     * into a fresh snapshot dir. With `partitionBy` set the rewrite is
     * pruned to partitions containing matching rows, like [[delete]].
-    * NOTE: assigning to the partition column itself would move rows
-    * between partitions, so that case always takes the full rewrite. */
+    * NOTE: assigning to the partition column (or the bucket key) itself
+    * would move rows between partitions, so that case always takes the
+    * full rewrite. */
   def updateWhere(cond: String, set: Map[String, String],
                   partitionBy: Seq[String] = Nil): Long = {
     if (!exists) throw new AnalysisException("TABLE_OR_VIEW_NOT_FOUND", Map("relationName" -> path))
@@ -948,11 +975,12 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       set.foldLeft(df) { case (d, (c, valueExpr)) =>
         d.withColumn(c, when(expr(cond), expr(valueExpr)).otherwise(col(c)))
       }
-    // CHECK constraints see the post-update image of CHANGED rows only —
-    // one extra scan proportional to the matched slice, not the table
-    validateBatch(apply(read().where(expr(cond))))
-    withCommitRetry("update") {
-      rewriteDml(partitionBy, !set.contains(_), expr(cond))(apply)
+    withCommitRetry("update") { h =>
+      // CHECK constraints see the post-update image of CHANGED rows only —
+      // one extra scan proportional to the matched slice, not the table
+      validateBatch(apply(readSnapshot(h.get).where(expr(cond))), h)
+      rewriteDml(h, partitionBy, c => !set.keys.exists(_.equalsIgnoreCase(c)),
+        expr(cond))(apply)
     }
   }
 
@@ -962,19 +990,20 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * target both grow without bound at scale, and a forced broadcast of
     * the anti-join build side would OOM; AQE converts the exchange to a
     * broadcast at runtime whenever the observed size is actually small. */
-  private def upsertRewrite(keys: DataFrame, images: DataFrame,
-                            condition: String, partitionBy: Seq[String],
+  private def upsertRewrite(head: Option[Manifest], keys: DataFrame,
+                            images: DataFrame, condition: String,
+                            partitionBy: Seq[String],
                             prunable: String => Boolean): Long =
-    rewriteDml(partitionBy, prunable, lit(false), Some(keys), Some(images),
+    rewriteDml(head, partitionBy, prunable, lit(false), Some(keys), Some(images),
         bucketKeyedBy = Some(condition)) {
       _.alias("source").join(keys.alias("updates"), expr(condition), "left_anti")
         .unionByName(images, allowMissingColumns = true)
     }
 
-  /** The one copy-on-write DML core. `rewrite` maps snapshot rows —
-    * deletion vectors subtracted, bucket column dropped — to the rows
-    * that replace them; it serves the pruned slice and the full rewrite
-    * alike. On a table with no head, `firstWrite` is the first snapshot.
+  /** The one copy-on-write DML core, against `head`. `rewrite` maps
+    * snapshot rows — deletion vectors subtracted, bucket column dropped —
+    * to the rows that replace them; it serves the pruned slice and the
+    * full rewrite alike. With no head, `firstWrite` is the first snapshot.
     * Otherwise, first match:
     *
     *   - PARTITION pruning ([[prunedRewrite]] on `partitionBy.head`) when
@@ -982,12 +1011,14 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     *     touched partitions are those holding `matched` rows plus those
     *     the `batch` rows name;
     *   - BUCKET pruning on an unpartitioned table ([[setBucket]]) when
-    *     `bucketKeyedBy` holds the op's join condition, that condition
-    *     carries a TOP-LEVEL `source.key = updates.key` AND-conjunct on the
-    *     spec's key ([[DataSkipping.keyEquiConjunct]] — an equality under
-    *     OR/NOT proves nothing, a match through the other arm could live
-    *     in an untouched bucket) and `batch` has the key column. Touched
-    *     buckets = `batch` keys hashed at the spec's canonical type
+    *     `prunable` holds for the spec's key — the `batch`'s own key
+    *     column, found case-insensitively, which a batch must have — and,
+    *     for the upserts, `bucketKeyedBy` (their join condition) carries a
+    *     TOP-LEVEL `source.key = updates.key` AND-conjunct on that key
+    *     ([[DataSkipping.keyEquiConjunct]] — an equality under OR/NOT
+    *     proves nothing, a match through the other arm could live in an
+    *     untouched bucket). The touched buckets are those holding `matched`
+    *     rows plus the `batch` keys hashed at the spec's canonical type
     *     ([[ManagedTable.BucketSpec.idOf]]), so type-drifted batches
     *     bucket identically to the layout;
     *   - ONE full rewrite of the snapshot into a fresh dir — also when
@@ -1002,31 +1033,31 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * such keys — Delta's guidance to put the partition predicate in the
     * merge condition. Bucket pruning holds it by construction: the bucket
     * is a function of the key. */
-  private def rewriteDml(partitionBy: Seq[String], prunable: String => Boolean,
-                         matched: Column, batch: Option[DataFrame] = None,
+  private def rewriteDml(head: Option[Manifest], partitionBy: Seq[String],
+                         prunable: String => Boolean, matched: Column,
+                         batch: Option[DataFrame] = None,
                          firstWrite: Option[DataFrame] = None,
                          bucketKeyedBy: Option[String] = None)(
       rewrite: DataFrame => DataFrame): Long =
-    lastManifest() match {
-      case None =>
-        commitAgainst(None, Seq(Entry(writeData(firstWrite.get, partitionBy), None)))
+    head match {
+      case None => commitAppended(None, writeData(firstWrite.get, partitionBy, None))
       case Some(cur) =>
         val pruned = partitionBy.headOption match {
           case Some(pcol) if prunable(pcol) => prunedRewrite(cur, matched,
             partitionBy, rewrite, batch.map(_.select(col(pcol))))
           case Some(_) => None
           case None => for {
-            condition <- bucketKeyedBy
-            keys <- batch
             spec <- bucketSpec
-            if DataSkipping.keyEquiConjunct(spark, condition, spec.column)
-            key <- keys.columns.find(_.equalsIgnoreCase(spec.column))
+            key <- batch.fold(Option(spec.column))(
+              _.columns.find(_.equalsIgnoreCase(spec.column)))
+            if prunable(key) &&
+              bucketKeyedBy.forall(DataSkipping.keyEquiConjunct(spark, _, spec.column))
             v <- prunedRewrite(cur, matched, Seq(ManagedTable.BucketCol), rewrite,
-              Some(keys.select(spec.idOf(col(s"`$key`")).as(ManagedTable.BucketCol))))
+              batch.map(_.select(spec.idOf(col(s"`$key`")).as(ManagedTable.BucketCol))))
           } yield v
         }
-        pruned.getOrElse(commitAgainst(Some(cur.version),
-          Seq(Entry(writeData(rewrite(readSnapshot(cur)), partitionBy), None))))
+        pruned.getOrElse(commitAgainst(head,
+          Seq(Entry(writeData(rewrite(readSnapshot(cur)), partitionBy, head), None))))
     }
 
   /** [[rewriteDml]]'s pruned path on the FIRST partition column (or the
@@ -1089,15 +1120,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     if (isBucket && !children.forall { case (n, _) =>
         n.stripPrefix(prefix).toIntOption.exists(v => prefix + v == n) })
       return None
-    // ONE logical snapshot relation serves key discovery, the presence
-    // guard and the rewrite slice.
-    val baseRead = readEntries(cur.entries, cur.renames, withMeta = cur.dvs.nonEmpty)
-    def snapWhere(c: Column): DataFrame =
-      if (cur.dvs.isEmpty) baseRead.where(c)
-      else applyDv(baseRead.where(c), cur.dvs).drop(DvFile, DvPos)
     // with cond = lit(false) (the upsert paths) Catalyst folds this
     // branch of the union to an empty relation — no scan tasks run
-    val matchKeys = snapWhere(cond).select(col(pcol))
+    val matchKeys = readSnapshot(cur, Some(cond), withBucket = true).select(col(pcol))
     // the union's resolved schema (not matchKeys') types the collected
     // rows: a batch whose key column is wider than the table's coerces
     val keyed = extraTouched.fold(matchKeys)(matchKeys.union)
@@ -1105,7 +1130,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       .limit(ManagedTable.MaxPrunedPartitions + 1).collect()
     if (touchedRows.length > ManagedTable.MaxPrunedPartitions) return None
     if (touchedRows.isEmpty)
-      return Some(commitAgainst(Some(cur.version), cur.entries, cur.dvs))
+      return Some(commitAgainst(Some(cur), cur.entries, cur.dvs))
     val touchedVals = touchedRows.map(_.get(0))
     // bucket ids are non-null ints by construction (pmod(hash(k), n) is
     // non-null even for null keys); anything else means a caller handed a
@@ -1143,7 +1168,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // names), so it skips the scan and both encode jobs.
     if (!isBucket) {
       val existingNames = children.iterator.map(_._1).toSet
-      val presentRows = snapWhere(sliceCond)
+      val presentRows = readSnapshot(cur, Some(sliceCond))
         .select(col(pcol).cast(keyed.schema.head.dataType).as(pcol))
         .distinct().limit(ManagedTable.MaxPrunedPartitions + 1).collect()
       val encodedPresent = encodePartitionNames(
@@ -1152,10 +1177,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     }
 
     // the isin filter prunes the scan to touched partitions before the
-    // per-row rewrite applies; the slice drops the bucket column like a
-    // full read does (writeData recomputes it)
-    val out = rewriteSlice(snapWhere(sliceCond).drop(ManagedTable.BucketCol))
-    val newDir = writeData(out, partitionBy)
+    // per-row rewrite applies
+    val newDir = writeData(rewriteSlice(readSnapshot(cur, Some(sliceCond))),
+      partitionBy, Some(cur))
     val rewritten = FsUtils.listChildren(spark, newDir)._1
       .filter(_.startsWith(prefix)).toSet
     // every touched old dir leaves the snapshot (rewritten-or-emptied);
@@ -1168,7 +1192,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val entries =
       if (rewritten.nonEmpty) carried :+ Entry(newDir, None) else carried
     if (entries.isEmpty) return None
-    Some(commitAgainst(Some(cur.version), entries, cur.dvs))
+    Some(commitAgainst(Some(cur), entries, cur.dvs))
   }
 
   /** Spark's own encoded `pcol=value` dir name for each key row: write a
@@ -1206,13 +1230,11 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * multiplicity: a table legitimately holding k duplicate rows that grew
     * to k+m reports exactly m changed rows (plain `except` is set-semantics
     * and would under-report the diff as empty). */
-  def changesSince(tsMillis: Long): DataFrame = {
-    if (!exists) return spark.emptyDataFrame
-    manifests().filter(_.timestamp < tsMillis).lastOption match {
-      case None       => read() // no snapshot predates the start → full feed
-      case Some(base) => read().exceptAll(readSnapshot(base))
+  def changesSince(tsMillis: Long): DataFrame =
+    changeFeed(tsMillis) {
+      case (cur, None)      => cur // no snapshot predates the start → full feed
+      case (cur, Some(old)) => cur.exceptAll(old)
     }
-  }
 
   /** Change feed WITH Delta-CDF-style `_change_type` markers: rows only in
     * the current snapshot are `insert`, rows only in the base snapshot are
@@ -1220,16 +1242,22 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * surfaces as its delete+insert pair — the table layer has no key
     * knowledge to pair them into `update_pre/postimage`, which is the
     * honest degradation of Delta's CDF off-Databricks. */
-  def changesWithType(tsMillis: Long): DataFrame = {
-    if (!exists) return spark.emptyDataFrame
-    manifests().filter(_.timestamp < tsMillis).lastOption match {
-      case None => read().withColumn("_change_type", lit("insert"))
-      case Some(base) =>
-        val cur = read()
-        val old = readSnapshot(base)
+  def changesWithType(tsMillis: Long): DataFrame =
+    changeFeed(tsMillis) {
+      case (cur, None) => cur.withColumn("_change_type", lit("insert"))
+      case (cur, Some(old)) =>
         cur.exceptAll(old).withColumn("_change_type", lit("insert"))
           .unionByName(old.exceptAll(cur).withColumn("_change_type", lit("delete")))
     }
+
+  /** `diff` of the head snapshot and the last snapshot committed BEFORE
+    * `tsMillis`, if any — both from one O(versions) log fold, whose last
+    * manifest is the head. An absent table has an empty feed. */
+  private def changeFeed(tsMillis: Long)(
+      diff: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
+    val all = manifests()
+    all.lastOption.fold(spark.emptyDataFrame)(head => diff(readSnapshot(head),
+      all.filter(_.timestamp < tsMillis).lastOption.map(readSnapshot(_))))
   }
 
   private def statsDirFor(e: Entry): String =
@@ -1433,57 +1461,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * opened; the residual filter still applies (pruning is planning-time
     * only, row-level filtering is unchanged). Falls back to a plain
     * filtered read when no stats exist. */
-  def readWhere(condition: String): DataFrame = lastManifest() match {
-    case None => spark.emptyDataFrame
-    case Some(m) =>
-      // bucket pruning ([[setBucket]]): an equality/IN conjunct on the
-      // bucketed key constrains the hidden partition to the literals'
-      // computed buckets — Catalyst turns the isin into a partition
-      // filter, so non-matching bucket dirs are pruned at planning time
-      // (per SCAN: dirs written before setBucket lack the column and
-      // read unpruned, which keeps mixed-age snapshots correct). The id
-      // set depends only on (condition, spec) — literals hash at the
-      // spec's CANONICAL type, matching the write layout regardless of
-      // any scan's physical key type — so it is computed once, not per
-      // entry (a bucket-pruned merge leaves up to n carried subdir
-      // entries in the snapshot).
-      val bucketIds: Option[Set[Int]] = bucketSpec.flatMap(spec =>
-        DataSkipping.bucketsFor(spark, condition, spec.column,
-          spec.keyType, spec.n))
-      def bucketFilter(scan: DataFrame): DataFrame = bucketIds match {
-        case Some(ids) if scan.schema.fieldNames
-            .exists(_.equalsIgnoreCase(ManagedTable.BucketCol)) =>
-          // an EMPTY id set (contradictory conjuncts) correctly prunes
-          // the whole scan — isin() of nothing is false
-          scan.where(
-            col(ManagedTable.BucketCol).isin(ids.toSeq.map(Int.box): _*))
-        case _ => scan
-      }
-      val dfs = pruneEntries(m.entries, condition, withCounts = false).map {
-        case (e, sel, _, _) if sel.forall(_.nonEmpty) =>
-          // Some(kept files) -> pruned scan; None -> full-dir scan
-          // (no/weak stats: the entry's reused whole-dir relation)
-          val entryScan = bucketFilter(applyRenames(
-            sel.fold(scan(e)) { files =>
-              spark.read.option("basePath", e.base.getOrElse(e.dir))
-                .parquet(files: _*)
-            },
-            m.renames))
-          if (m.dvs.isEmpty) entryScan else provenance(entryScan)
-        case (e, _, _, _) =>
-          // fully-pruned entry: keep its SCHEMA as a zero-row slice —
-          // under schema drift, dropping the entry entirely could lose
-          // columns the residual filter (or the caller) references
-          // (limit 0 plans to an empty relation, nothing is scanned)
-          readEntries(Seq(e), m.renames).limit(0)
-      }
-      val unioned = dropTombstones(
-        dfs.reduce(_.unionByName(_, allowMissingColumns = true)))
-        .where(expr(condition))
-      (if (m.dvs.isEmpty) unioned
-       else applyDv(unioned, m.dvs).drop(DvFile, DvPos))
-        .drop(ManagedTable.BucketCol)
-  }
+  def readWhere(condition: String): DataFrame =
+    lastManifest().fold(spark.emptyDataFrame)(
+      readSnapshot(_, Some(expr(condition)), pruneFor = Some(condition)))
 
   /** Structured-Streaming SOURCE over an APPEND-ONLY table: a parquet
     * file-stream on the table's data-dir glob. Every [[append]] commits a
@@ -1501,12 +1481,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * Partition columns live in dir names, not files, so stream
     * unpartitioned ingest tables (partition-shaping belongs downstream). */
   def streamAppends(): DataFrame = {
-    require(exists, s"streamAppends on absent table $path")
-    require(lastManifest().forall(_.dvs.isEmpty),
+    val head = lastManifest()
+    require(head.nonEmpty, s"streamAppends on absent table $path")
+    require(head.forall(_.dvs.isEmpty),
       s"streamAppends on $path: table has deletion vectors — a file-offset " +
         "source cannot subtract them (and would also surface dv sidecar " +
         "dirs); OPTIMIZE to materialize the vectors first")
-    require(lastManifest().forall(_.renames.isEmpty),
+    require(head.forall(_.renames.isEmpty),
       s"streamAppends on $path: table has a live column mapping — a raw " +
         "file-glob source reads physical names and would null out renamed " +
         "columns; OPTIMIZE to materialize the renames first")
@@ -1515,7 +1496,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         "layouts are unsupported as raw file-glob stream sources (same " +
         "caveat as explicit partitionBy, see above); stream the unbucketed " +
         "ingest table and bucket downstream")
-    spark.readStream.schema(read().schema).parquet(s"$path/d*")
+    spark.readStream.schema(readSnapshot(head.get).schema).parquet(s"$path/d*")
   }
 
   /** Shared OPTIMIZE clustering: a z-order request approximates to
@@ -1560,8 +1541,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   def optimize(zorderBy: Seq[String] = Nil, targetPartitions: Int = 0,
                partitionBy: Seq[String] = Nil): Long = {
     if (!exists) throw new AnalysisException("TABLE_OR_VIEW_NOT_FOUND", Map("relationName" -> path))
-    val v = withCommitRetry("optimize") {
-      val curM = lastManifest().get
+    val v = withCommitRetry("optimize") { h =>
+      val curM = h.get
       // readSnapshot: a full compaction MATERIALIZES the deletion vectors
       // (vectored rows drop out of the rewrite) and the fresh manifest
       // clears them — OPTIMIZE is the DV purge path, exactly like Delta
@@ -1576,8 +1557,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       // so the column mapping resets — OPTIMIZE is the "make renames
       // physical" path (and the escape hatch that frees a dropped name
       // for re-use)
-      commitAgainst(Some(curM.version),
-        Seq(Entry(writeData(compacted, partitionBy), None)),
+      commitAgainst(h, Seq(Entry(writeData(compacted, partitionBy, h), None)),
         renames = Some(Nil))
     }
     writeVersionFile(optimizeWatermarkPath, v)
@@ -1605,8 +1585,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
                           partitionBy: Seq[String] = Nil,
                           targetBytes: Long = 128L * 1024 * 1024): Long = {
     if (!exists) throw new AnalysisException("TABLE_OR_VIEW_NOT_FOUND", Map("relationName" -> path))
-    val v = withCommitRetry("optimizeIncremental") {
-      val cur = lastManifest().get
+    val v = withCommitRetry("optimizeIncremental") { h =>
+      val cur = h.get
       val baseline: Set[Entry] = (for {
         w <- readVersionFile(optimizeWatermarkPath)
         m <- manifestAt(w)
@@ -1626,12 +1606,11 @@ final class ManagedTable(spark: SparkSession, val path: String) {
             math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
           }
         val newEntry = Entry(writeData(clusterFor(folded, zorderBy, n),
-          partitionBy), None)
+          partitionBy, h), None)
         // DV sidecars fold to LIVE rows only (those addressing carried
         // dirs) — incremental-only maintenance must shed the vectors the
         // rewrite just materialized, or they accumulate forever
-        commitAgainst(Some(cur.version), carried :+ newEntry,
-          foldDvs(cur, carried))
+        commitAgainst(h, carried :+ newEntry, foldDvs(cur, carried))
       }
     }
     writeVersionFile(optimizeWatermarkPath, v)
@@ -1644,10 +1623,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * restore itself is a manifest write, no data moves. */
   def restore(v: Long): Long = {
     val m = resolveVersion(v) // vacuumed target → loud, cause-naming error
-    // the restored snapshot's column mapping travels with its data
-    ManagedTable.inOp("restore") {
-      commitEntries(m.entries, m.dvs, Some(m.renames))
-    }
+    // the restored snapshot's column mapping travels with its data; the
+    // commit is blind, so a lost race only rebases the manifest
+    withCommitRetry("restore")(commitAgainst(_, m.entries, m.dvs, Some(m.renames)))
   }
 
   /** Delta-style shallow CLONE: create a table at `targetPath` whose
@@ -1693,8 +1671,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
   def compactSmall(targetBytes: Long = 128L * 1024 * 1024,
                    partitionBy: Seq[String] = Nil): Long = {
     require(exists, s"compactSmall on absent table $path")
-    withCommitRetry("compactSmall") {
-      val cur = lastManifest().get
+    withCommitRetry("compactSmall") { h =>
+      val cur = h.get
       val sized = cur.entries.map { e =>
         (e, FsUtils.listFilesWithSize(spark, e.dir))
       }
@@ -1721,11 +1699,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         val folded = readSnapshot(cur.copy(entries = small.map(_._1)))
         val healthyEntries = healthy.map(_._1)
         val newEntry =
-          Entry(writeData(clusterFor(folded, Nil, n), partitionBy), None)
+          Entry(writeData(clusterFor(folded, Nil, n), partitionBy, h), None)
         // same DV fold as optimizeIncremental: the compacted slice's
         // vectors were materialized by the rewrite — shed them
-        commitAgainst(Some(cur.version), healthyEntries :+ newEntry,
-          foldDvs(cur, healthyEntries))
+        commitAgainst(h, healthyEntries :+ newEntry, foldDvs(cur, healthyEntries))
       }
     }
   }
@@ -1850,7 +1827,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     def logicalName(phys: String): String =
       renames.foldLeft(phys) { case (n, (f, t)) =>
         if (n.equalsIgnoreCase(f)) t else n }
-    val finalSchema = read().schema
+    val finalSchema = m.fold(new StructType())(readSnapshot(_).schema)
     def selectItems(e: Entry): String = {
       val phys = scan(e).schema
       val physByLogical = phys.fieldNames
@@ -1886,7 +1863,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     }
     val unioned = selects.mkString(" UNION ALL ")
     val body = if (dvs.isEmpty) unioned else {
-      val cols = read().schema.fieldNames.map(c => s"t.`$c`").mkString(", ")
+      val cols = finalSchema.fieldNames.map(c => s"t.`$c`").mkString(", ")
       val dvScan = dvs.map(d => s"SELECT * FROM parquet.`$d`")
         .mkString(" UNION ALL ")
       s"""SELECT $cols FROM ($unioned) t LEFT ANTI JOIN ($dvScan) dv
@@ -1896,14 +1873,19 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       s"CREATE OR REPLACE VIEW $databaseName.$tableName AS $body")
   }
 
-  private def writeData(df: DataFrame, partitionBy: Seq[String]): String = {
-    // next-version hint + random suffix: concurrent writers (and retried
-    // optimistic commits) must never share a data dir — parquet overwrite
-    // mode would clobber the other writer's files mid-job. Nothing parses
-    // the name back; manifests carry full paths. A dir whose commit LOSES
-    // its race is left unreferenced and reaped by vacuum's orphan sweep.
-    val v = currentVersion.map(_ + 1).getOrElse(0L)
-    val dir = s"${dataDir(v)}-${java.util.UUID.randomUUID.toString.take(8)}"
+  /** A fresh dir under `prefix` for data committed on top of `head`: the
+    * next version plus a random suffix. Concurrent writers (and retried
+    * optimistic commits) must never share a dir — parquet overwrite mode
+    * would clobber the other writer's files mid-job. Nothing parses the
+    * name back; manifests carry full paths. A dir whose commit LOSES its
+    * race is left unreferenced and reaped by vacuum's orphan sweeps. */
+  private def freshDir(prefix: String, head: Option[Manifest]): String =
+    s"$prefix${head.fold(0L)(_.version + 1)}-${java.util.UUID.randomUUID.toString.take(8)}"
+
+  /** Write `df` as a fresh data dir for the commit on top of `head`. */
+  private def writeData(df: DataFrame, partitionBy: Seq[String],
+                        head: Option[Manifest]): String = {
+    val dir = freshDir(s"$path/d", head)
     // bucket transform: the hidden bucket partition is ALWAYS recomputed
     // from the key column here (any stale __gbucket a rewrite carried in
     // is dropped first), so the layout can never drift from the data. The
@@ -1928,123 +1910,85 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     dir
   }
 
-  /** One optimistic commit attempt at exactly version `v` — true iff this
-    * writer won the put-if-absent race for the manifest file (a manifest
-    * still either exists completely or not at all; a crash mid-write can
-    * never corrupt the log).
+  /** The one commit: `entries` (with `dvs`) as the snapshot after `head`,
+    * at exactly version head+1, by put-if-absent on its log file — a
+    * manifest either exists completely or not at all, so a crash mid-write
+    * can never corrupt the log. Losing that version to a concurrent writer
+    * throws [[ManagedTable.ConcurrentWriteException]], and
+    * [[withCommitRetry]] re-runs the operation against the new head. This
+    * is Delta's optimistic-concurrency loop with recompute-on-conflict in
+    * place of logical conflict classification — always serializable,
+    * never a silent lost update.
+    *
+    * `renames` None carries `head`'s mapping forward (the op was computed
+    * against that snapshot, so its mapping is the valid one); Some sets it
+    * outright (clean_write resets, restore restores the target's, rename
+    * extends). `txn` is THIS commit's markers; materialized snapshots keep
+    * them CUMULATIVE (delta replay folds parent ++ delta, full manifests
+    * store the folded map), so [[lastTxn]] resolves from the head alone.
     *
     * What lands on disk (round-11 delta-encoded log): a DELTA action
     * manifest — add/remove entry actions, dv deltas, this commit's txn
-    * markers — when a parent snapshot exists and `v` is off the
-    * checkpoint cadence, so commit bytes are O(changed dirs); a FULL
-    * self-contained manifest every [[ManagedTable.checkpointInterval]]-th
-    * version (and always at v0), bounding delta replay. The delta is
-    * written ONLY when replaying it over the parent provably reproduces
-    * the intended entry/dv lists exactly (order included) — any
-    * reordering op falls back to a full manifest, so replay correctness
-    * never depends on op-specific ordering conventions. `txnDelta` is
-    * THIS commit's markers; the full form folds them over the parent's
-    * cumulative map (the O(head) [[lastTxn]] contract). */
-  private def tryCommit(v: Long, entries: Seq[Entry],
-                        dvs: Seq[String],
-                        renames: Seq[(String, String)],
-                        txnDelta: Map[String, Long],
-                        parent: Option[Manifest]): Boolean = {
+    * markers — when `head` exists and the version is off the checkpoint
+    * cadence, so commit bytes are O(changed dirs); a FULL self-contained
+    * manifest every [[ManagedTable.checkpointInterval]]-th version (and
+    * always at v0), bounding delta replay. The delta is written ONLY when
+    * replaying it over `head` provably reproduces the intended entry/dv
+    * lists exactly (order included) — any reordering op falls back to a
+    * full manifest, so replay correctness never depends on op-specific
+    * ordering conventions. */
+  private def commitAgainst(head: Option[Manifest], entries: Seq[Entry],
+                            dvs: Seq[String] = Nil,
+                            renames: Option[Seq[(String, String)]] = None,
+                            txn: Map[String, Long] = Map.empty): Long = {
+    val v = head.fold(0L)(_.version + 1)
+    val resolved = renames.getOrElse(head.fold(Seq.empty[(String, String)])(_.renames))
     val ts = System.currentTimeMillis()
     val op = ManagedTable.currentOp.value
     def full: String = MetadataCodec.encodeFull(Manifest(v, ts, entries, dvs,
-      renames, parent.map(_.txn).getOrElse(Map.empty) ++ txnDelta, op))
+      resolved, head.fold(Map.empty[String, Long])(_.txn) ++ txn, op))
     val interval = ManagedTable.checkpointInterval(spark)
-    val body: String = parent match {
-      case Some(p) if p.version == v - 1 && interval > 1 && v % interval != 0 =>
+    val body: String = head match {
+      case Some(p) if interval > 1 && v % interval != 0 =>
         val d = DeltaRecord(v, ts, entries.filterNot(p.entries.toSet),
           p.entries.filterNot(entries.toSet), dvs.filterNot(p.dvs.toSet),
           p.dvs.filterNot(dvs.toSet),
-          if (renames == p.renames) None else Some(renames), txnDelta, op)
+          if (resolved == p.renames) None else Some(resolved), txn, op)
         val replayed = applyDelta(p, d)
         if (replayed.entries == entries && replayed.dvs == dvs)
           MetadataCodec.encodeDelta(d)
         else full
       case _ => full
     }
-    val won = FsUtils.writeTextIfAbsent(spark, s"$logDir/$v.json", body)
+    if (!FsUtils.writeTextIfAbsent(spark, s"$logDir/$v.json", body))
+      throw new ManagedTable.ConcurrentWriteException(path, head.map(_.version))
     // refresh the _last_checkpoint hint AFTER the manifest is durable —
     // readers probing forward from it must always find the named version
-    if (won) {
-      writeVersionFile(hintPath, v)
-      ManagedTable.seedHeadScans(spark, path, entries)
-    }
-    won
-  }
-
-  /** Blind snapshot commit (clean_write / restore / append-rebase): the
-    * entries do not derive from the snapshot they land on, so losing a
-    * version-number race is harmless — take the next number and retry
-    * until the manifest lands. */
-  private def commitEntries(entries: Seq[Entry],
-                            dvs: Seq[String] = Nil,
-                            renames: Option[Seq[(String, String)]] = None,
-                            txn: Map[String, Long] = Map.empty): Long = {
-    var tries = 0
-    // None = inherit the head's renames (re-resolved per attempt so a
-    // racing rename is never silently shed); Some = set them outright
-    // (clean_write resets, restore restores the target's, rename extends).
-    // txn markers are CUMULATIVE in materialized snapshots (delta replay
-    // folds parent ++ delta; full manifests store the folded map) so
-    // [[lastTxn]] resolves from the head manifest alone. The head is
-    // re-read per attempt so renames, markers and the delta diff always
-    // fold over the manifest this commit actually lands on.
-    var h = lastManifest()
-    var v = h.map(_.version + 1).getOrElse(0L)
-    def resolved = renames.getOrElse(h.map(_.renames).getOrElse(Nil))
-    while (!tryCommit(v, entries, dvs, resolved, txn, h)) {
-      tries += 1
-      if (tries > 1000) throw new java.io.IOException(
-        s"commit contention on $path: gave up after $tries attempts")
-      h = lastManifest()
-      v = h.map(_.version + 1).getOrElse(0L)
-    }
+    writeVersionFile(hintPath, v)
+    ManagedTable.seedHeadScans(spark, path, entries)
     v
   }
 
-  /** Compare-and-swap commit for read-modify-write operations: `entries`
-    * were computed against snapshot `base`, so they are valid ONLY as
-    * version base+1. A concurrent writer winning that version number
-    * means this operation read a snapshot that is no longer current →
-    * [[ManagedTable.ConcurrentWriteException]], and [[withCommitRetry]]
-    * re-runs the whole operation against the new snapshot. This is
-    * Delta's optimistic-concurrency loop with recompute-on-conflict in
-    * place of logical conflict classification — always serializable,
-    * never a silent lost update. */
-  private def commitAgainst(base: Option[Long], entries: Seq[Entry],
-                            dvs: Seq[String] = Nil,
-                            renames: Option[Seq[(String, String)]] = None,
-                            txn: Map[String, Long] = Map.empty): Long = {
-    val v = base.map(_ + 1).getOrElse(0L)
-    // None = carry the BASE snapshot's renames forward (the op was
-    // computed against that snapshot, so its mapping is the valid one);
-    // txn markers fold over the base's cumulative map (see commitEntries)
-    val bm = base.flatMap(manifestAt)
-    val resolved = renames.getOrElse(bm.map(_.renames).getOrElse(Nil))
-    if (!tryCommit(v, entries, dvs, resolved, txn, bm))
-      throw new ManagedTable.ConcurrentWriteException(path, base)
-    v
-  }
-
-  /** Bounded re-run loop around a read-modify-write operation body whose
-    * commit is a [[commitAgainst]] CAS. */
-  private def withCommitRetry[T](op: String)(body: => T): T =
-    ManagedTable.inOp(op) {
-      var last: ManagedTable.ConcurrentWriteException = null
-      var attempt = 0
-      while (attempt < ManagedTable.MaxCommitAttempts) {
-        try return body
-        catch { case e: ManagedTable.ConcurrentWriteException =>
-          last = e; attempt += 1 }
+  /** The one commit loop: runs `attempt` against a head and, each time its
+    * [[commitAgainst]] loses a race, re-runs it against the head resolved
+    * anew — at most [[ManagedTable.MaxCommitAttempts]] attempts. The first
+    * attempt gets `first`: the head resolved once, or the one the caller
+    * already resolved to validate, name and write its data. Read-modify-
+    * write ops recompute against each head; blind commits (append, write,
+    * restore) only rebase their manifest onto it. */
+  private def withCommitRetry[T](op: String, first: => Option[Manifest] = lastManifest())(
+      attempt: Option[Manifest] => T): T = {
+    def run(head: Option[Manifest], lost: Int): T =
+      (try Right(attempt(head))
+       catch { case e: ManagedTable.ConcurrentWriteException => Left(e) }) match {
+        case Right(v) => v
+        case Left(e) if lost + 1 == ManagedTable.MaxCommitAttempts =>
+          throw new java.io.IOException(s"$op on $path lost " +
+            s"${ManagedTable.MaxCommitAttempts} optimistic-commit races", e)
+        case Left(_) => run(lastManifest(), lost + 1)
       }
-      throw new java.io.IOException(
-        s"$op on $path lost ${ManagedTable.MaxCommitAttempts} optimistic-commit races", last)
-    }
+    ManagedTable.inOp(op)(run(first, 0))
+  }
 }
 
 object ManagedTable {
@@ -2286,8 +2230,9 @@ object ManagedTable {
       pmod(hash(key.cast(keyType)), lit(n))
   }
 
-  /** Attempts a read-modify-write operation makes before giving up under
-    * sustained commit contention. */
+  /** Commit attempts an operation makes before giving up under sustained
+    * contention — read-modify-write ops and blind commits (append, write,
+    * restore) alike: ten lost races in a row. */
   val MaxCommitAttempts = 10
 
   /** An optimistic commit lost its race: the snapshot the operation was
