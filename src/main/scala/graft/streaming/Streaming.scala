@@ -196,9 +196,9 @@ object Streaming {
         try { if (!fresh.isEmpty) table.append(fresh) }
         finally fresh.unpersist()
         // append-only ingest grows one dir + one manifest entry per batch:
-        // at 10^5 micro-batches that is a 10^5-way union per read and a
-        // manifest listing every dir — Delta's auto-compaction cadence,
-        // same knob streamUpsert exposes.
+        // reads stay one scan per layout, but at 10^5 micro-batches that
+        // scan opens 10^5 small files and the manifest lists every dir —
+        // Delta's auto-compaction cadence, same knob streamUpsert exposes.
         maybeCompact(batchId, compactEvery, table)
         ()
       }
@@ -357,8 +357,8 @@ object Streaming {
         }
         }
         // both tables grow one dir + manifest entry per batch; fold the
-        // small dirs so reads stay a bounded union instead of a 10^5-way
-        // one at crawl scale. OUTSIDE the replay-skip guard: a cadence
+        // small dirs so file count and manifest size stay bounded at crawl
+        // scale. OUTSIDE the replay-skip guard: a cadence
         // point coinciding with a crash-replayed batch must still compact
         // (the skip guard would silently defer it a whole cadence period).
         maybeCompact(batchId, compactEvery, corpus, lsh)

@@ -3,8 +3,9 @@ package graft.table
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 
@@ -67,30 +68,36 @@ import graft.common.FsUtils
   *     retained manifest references (containment-aware: a dir with a
   *     referenced subdir — or inside a referenced dir — is never deleted).
   *
-  * A multi-dir snapshot reads as a `unionByName(allowMissingColumns)` of
-  * per-dir scans — schema drift across appends behaves like the
-  * reference's MergeSchema (batch_delta.py:27,40), and each scan keeps its
-  * own partition discovery, pruning and pushdown.
+  * A snapshot reads as ONE file relation per layout — its dirs of equal
+  * data and partition schemas — the way Delta scans a snapshot's file set
+  * as one table; an append-only or same-schema table is one scan however
+  * many dirs it has. Layouts union by name (`allowMissingColumns`), so
+  * schema drift across appends behaves like the reference's MergeSchema
+  * (batch_delta.py:27,40), and a column can be a data column in one dir
+  * and a hive partition in another. Partition pruning and pushdown apply
+  * to the whole scan.
   *
   * Read cost model: every read of a snapshot's rows is built by ONE
-  * reader ([[readSnapshot]]) — per-entry scans, renames, the union by
+  * reader ([[readSnapshot]]) — the layout scans, renames, the union by
   * name, tombstones, the caller's filter, then the DV anti-join. A data
   * dir is written once under a fresh name and never modified, so
-  * resolving its scan — listing its files and inferring the schema from
-  * their footers, one Spark job — is done once per session while the dir
+  * resolving it — listing its files and inferring the schema from their
+  * footers, one Spark job — is done once per session while the dir
   * belongs to the head snapshot. A dir this session has just written and
   * committed skips the inference job: the commit registers it with the
   * schema it was written with, which is the schema the footers hold
   * (unpartitioned dirs of plain parquet types only; a partitioned or
   * bucketed dir, whose partition columns are typed from the dir names,
   * and any schema with field metadata, char/varchar, collations or other
-  * types keep inference). Every later read of that head (`read`,
-  * `readWhere`, the DML and merge reads) wraps the resolved relation in a
-  * new logical relation with fresh attribute ids, so self-joins and
-  * `exceptAll` of two reads plan as two scans. Each head resolution drops
-  * the relations of dirs that left the head, so reuse is bounded by the
-  * live snapshot; reads of older versions resolve fresh, and stats-pruned
-  * file-subset scans are built per read.
+  * types keep inference). Every read of that head (`read`, `readWhere`,
+  * the DML and merge reads) builds its layout relations over the kept
+  * listings — a stats- or bloom-pruned read narrows them to the kept
+  * files, with no listing of its own — under fresh attribute ids, so
+  * self-joins and `exceptAll` of two reads plan as two scans. File counts
+  * and sizes (`pruneInfo`, compaction sizing) come from the same
+  * listings. Each head resolution drops the relations of dirs that left
+  * the head, so reuse is bounded by the live snapshot; reads of older
+  * versions resolve fresh.
   *
   * Commits: every operation that commits runs in ONE loop
   * ([[withCommitRetry]]). Each attempt resolves the head once — walking
@@ -323,22 +330,28 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     if (ts.isEmpty) df else df.drop(ts.toIndexedSeq: _*)
   }
 
-  /** One entry's whole-dir scan, reusing the entry's resolved relation
-    * while it belongs to the head snapshot ([[ManagedTable.headScan]]). */
-  private def scan(e: Entry): DataFrame =
-    ManagedTable.headScan(spark, path, e) {
-      e.base.fold(spark.read)(b => spark.read.option("basePath", b)).parquet(e.dir)
-    }
+  /** One entry's whole-dir file relation, reused while the entry belongs
+    * to the head snapshot ([[ManagedTable.headScan]]). */
+  private def relation(e: Entry): HadoopFsRelation =
+    ManagedTable.headScan(spark, path, e)
+
+  /** The data files of `e`'s dir, from its relation's cached listing
+    * (hidden and `_` files excluded). */
+  private def dataFiles(e: Entry): Seq[FileStatusWithMetadata] =
+    relation(e).location.listFiles(Nil, Nil).flatMap(_.files)
 
   /** The one snapshot reader: every read of `m`'s rows — [[read]],
     * [[readVersion]], [[readWhere]], the DV DML matches and the pruned DML
     * slices — is built here, in this order:
     *
-    *   - one scan per entry: its reused whole-dir relation; with
-    *     `pruneFor`, the files [[pruneEntries]] keeps for that condition,
-    *     or a zero-row slice of an entry it prunes entirely (the slice keeps
-    *     the entry's SCHEMA: under schema drift, dropping the entry could
-    *     lose columns the filter or the caller references);
+    *   - one scan per LAYOUT (equal data and partition schemas), in order
+    *     of first appearance so the oldest dir's columns lead: one file
+    *     relation over the reused listings of the layout's entries
+    *     ([[ManagedTable.SnapshotIndex]]); with `pruneFor`, each entry's
+    *     listing narrows to the files [[pruneEntries]] keeps for that
+    *     condition — an entry it prunes entirely adds no file but its
+    *     layout still adds its SCHEMA (under schema drift, dropping it
+    *     could lose columns the filter or the caller references);
     *   - per scan: `pruneFor`'s bucket-id filter, the manifest's renames
     *     and, under deletion vectors or `withMeta`, the provenance columns;
     *   - the union by name, the tombstone drop and `filter`;
@@ -367,18 +380,20 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         spec <- bucketSpec
         ids <- DataSkipping.bucketsFor(spark, c, spec.column, spec.keyType, spec.n)
       } yield ids.toSeq.map(Int.box)
-      val kept: Seq[(Entry, Option[Seq[String]])] = pruneFor.fold(
-        m.entries.map(_ -> Option.empty[Seq[String]]))(c =>
-        pruneEntries(m.entries, c, withCounts = false).map(s => s._1 -> s._2))
-      val scans = kept.map { case (e, files) =>
-        val logical = applyRenames(files.filter(_.nonEmpty).fold(scan(e))(fs =>
-          spark.read.option("basePath", e.base.getOrElse(e.dir)).parquet(fs: _*)),
-          m.renames)
+      val kept: Seq[(HadoopFsRelation, Option[Set[String]])] = pruneFor.fold(
+        m.entries.map(relation(_) -> Option.empty[Set[String]]))(c =>
+        pruneEntries(m.entries, c, withCounts = false)
+          .map(s => relation(s._1) -> s._2.map(_.toSet)))
+      def layout(r: HadoopFsRelation) = (r.dataSchema, r.partitionSchema)
+      val groups = kept.groupBy(k => layout(k._1))
+      val scans = kept.map(k => layout(k._1)).distinct.map(groups).map { group =>
+        val index = ManagedTable.SnapshotIndex(group.map(g => g._1.location -> g._2))
+        val logical = applyRenames(spark.baseRelationToDataFrame(
+          group.head._1.copy(location = index)(spark)), m.renames)
         val bucketed = bucketIds.filter(_ => logical.schema.fieldNames
             .exists(_.equalsIgnoreCase(ManagedTable.BucketCol)))
           .fold(logical)(ids => logical.where(col(ManagedTable.BucketCol).isin(ids: _*)))
-        val s = if (withMeta || m.dvs.nonEmpty) provenance(bucketed) else bucketed
-        if (files.exists(_.isEmpty)) s.limit(0) else s
+        if (withMeta || m.dvs.nonEmpty) provenance(bucketed) else bucketed
       }
       val rows = filter.foldLeft(dropTombstones(
         scans.reduce(_.unionByName(_, allowMissingColumns = true))))(_.where(_))
@@ -1069,8 +1084,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * caller falls back to the full rewrite.
     *
     * Emptied partitions are handled EXACTLY, not by falling back: the
-    * touched values' encoded dir names are learned from Spark itself (a
-    * one-int marker frame written `partitionBy(pcol)` — no hand-rolled
+    * touched values' encoded dir names come from Spark's own writer
+    * encoding ([[ManagedTable.partitionDirNames]] — no hand-rolled
     * partition-value encoding, so dates/timestamps/specials/nulls all get
     * Spark's own escaping), and every touched old dir is dropped whether
     * or not the rewrite produced a replacement — a touched partition with
@@ -1115,8 +1130,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // IS the bucket path's presence guard: with every name canonical, rows
     // holding bucket value v live exactly in dir `__gbucket=v`, so a
     // touched value with current rows always re-encodes to an existing
-    // dir — the invariant the partition path below must pay a scan and
-    // two encode jobs to establish.
+    // dir — the invariant the partition path below must pay a scan to
+    // establish.
     if (isBucket && !children.forall { case (n, _) =>
         n.stripPrefix(prefix).toIntOption.exists(v => prefix + v == n) })
       return None
@@ -1137,9 +1152,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // foreign frame — fall back rather than mis-encode
     if (isBucket && !touchedVals.forall(_.isInstanceOf[java.lang.Integer]))
       return None
+    val keyType = keyed.schema.head.dataType
     val encodedTouched: Set[String] =
       if (isBucket) touchedVals.map(v => prefix + v).toSet
-      else encodePartitionNames(touchedRows.toIndexedSeq, keyed.schema, pcol)
+      else ManagedTable.partitionDirNames(spark, pcol, keyType, touchedVals.toSeq)
     val nonNull = touchedVals.filter(_ != null)
     val hasNull = touchedVals.exists(_ == null)
     var sliceCond = if (nonNull.nonEmpty)
@@ -1165,14 +1181,14 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // rewrite on any mismatch — BEFORE the rewrite write, so the bail
     // costs one pruned key scan, not a wasted data write. The bucket path
     // established the same invariant structurally above (canonical int
-    // names), so it skips the scan and both encode jobs.
+    // names), so it skips the scan.
     if (!isBucket) {
       val existingNames = children.iterator.map(_._1).toSet
       val presentRows = readSnapshot(cur, Some(sliceCond))
-        .select(col(pcol).cast(keyed.schema.head.dataType).as(pcol))
+        .select(col(pcol).cast(keyType).as(pcol))
         .distinct().limit(ManagedTable.MaxPrunedPartitions + 1).collect()
-      val encodedPresent = encodePartitionNames(
-        presentRows.toIndexedSeq, keyed.schema, pcol)
+      val encodedPresent = ManagedTable.partitionDirNames(spark, pcol, keyType,
+        presentRows.toSeq.map(_.get(0)))
       if (!encodedPresent.forall(existingNames.contains)) return None
     }
 
@@ -1193,35 +1209,6 @@ final class ManagedTable(spark: SparkSession, val path: String) {
       if (rewritten.nonEmpty) carried :+ Entry(newDir, None) else carried
     if (entries.isEmpty) return None
     Some(commitAgainst(Some(cur), entries, cur.dvs))
-  }
-
-  /** Spark's own encoded `pcol=value` dir name for each key row: write a
-    * one-int marker frame partitioned by `pcol` to a staging dir and read
-    * the subdir names back. Bounded by
-    * [[ManagedTable.MaxPrunedPartitions]] rows; one tiny job per pruned
-    * DML call. The probe stages on the TABLE's own
-    * filesystem — process-local scratch is only sound single-node: on a
-    * cluster the write task would land on an executor's local disk, the
-    * driver's read-back would see NO subdirs, and the empty encoded set
-    * would silently carry every touched old dir (deleted rows resurrect,
-    * merged rows duplicate) — the same failure class as the round-9
-    * footer-staging fix. `_tmp-` under `_graft_stats` is outside the
-    * sidecar namespace and vacuum's sidecar-orphan sweep reaps crash
-    * leftovers. */
-  private def encodePartitionNames(rows: Seq[org.apache.spark.sql.Row],
-                                   keySchema: org.apache.spark.sql.types.StructType,
-                                   pcol: String): Set[String] = {
-    val probeDir = s"$path/_graft_stats/_tmp-pencode-${
-      java.util.UUID.randomUUID().toString.take(12)}"
-    try {
-      spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, keySchema)
-        .withColumn("__probe", lit(1))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy(pcol).parquet(probeDir)
-      FsUtils.listChildren(spark, probeDir)._1
-        .filter(_.startsWith(pcol + "=")).toSet
-    } finally FsUtils.deleteFiles(spark, Seq(probeDir))
   }
 
   /** Change-data-feed analogue (reference load/entrypoint.py:222-229):
@@ -1382,7 +1369,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         else {
           val blooms = spark.read.parquet(bd)
           val bloomedTypes = {
-            val schema = scan(e).schema
+            val schema = relation(e).schema
             blooms.schema.fieldNames.filter(_.startsWith("bloom_"))
               .map(_.stripPrefix("bloom_")).flatMap(c =>
                 schema.fields.find(_.name.equalsIgnoreCase(c))
@@ -1424,27 +1411,16 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         // BLOOM-ONLY pruning (collectBlooms without collectStats): the
         // file list is the dir listing, canonicalized to match the bloom
         // sidecar's paths, bounded by the same cap
-        val files = FsUtils.listFiles(spark, e.dir)
-          .filterNot { f =>
-            val nm = new Path(f).getName
-            nm.startsWith("_") || nm.startsWith(".")
-          }
+        val files = dataFiles(e).map(_.getPath.toUri.getPath)
         if (files.length > cap) (e, None, files.length.toLong, files.length.toLong)
         else {
-          val kept = bloomPrune(files.map(DataSkipping.canonPath))
+          val kept = bloomPrune(files)
           (e, Some(kept), kept.length.toLong, files.length.toLong)
         }
       } else {
-        // no sidecars: nothing to prune with — hand the whole dir to
-        // Spark's scan (its InMemoryFileIndex lists large dirs with a
-        // distributed job; no path array crosses this layer). The listing
-        // below runs only for pruneInfo observability.
-        val n =
-          if (!withCounts) -1L
-          else FsUtils.listFiles(spark, e.dir).count { f =>
-            val nm = new Path(f).getName
-            !nm.startsWith("_") && !nm.startsWith(".")
-          }.toLong
+        // no sidecars: nothing to prune with — the whole dir is read
+        // (no path array crosses this layer); only pruneInfo counts files
+        val n = if (withCounts) dataFiles(e).size.toLong else -1L
         (e, None, n, n)
       }
     }
@@ -1601,8 +1577,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         val folded = readSnapshot(cur.copy(entries = fresh))
         val n = if (targetPartitions > 0) targetPartitions
           else {
-            val bytes = fresh.map(e =>
-              FsUtils.listFilesWithSize(spark, e.dir).map(_._2).sum).sum
+            val bytes = fresh.flatMap(dataFiles).map(_.getLen).sum
             math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
           }
         val newEntry = Entry(writeData(clusterFor(folded, zorderBy, n),
@@ -1664,8 +1639,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * healthy dir carries over by manifest reference untouched. This is
     * the maintenance op a streaming/append-heavy table needs at 100 TB —
     * each AvailableNow batch appends a small dir, and compaction cost
-    * must track the SMALL tail, not the table. File sizes come from one
-    * metadata listing per entry; the rewrite sizes its output by total
+    * must track the SMALL tail, not the table. File sizes come from each
+    * entry's cached listing ([[dataFiles]]); the rewrite sizes its output by total
     * bytes / targetBytes. Returns the new version (a no-op commit when
     * nothing qualifies). */
   def compactSmall(targetBytes: Long = 128L * 1024 * 1024,
@@ -1673,13 +1648,11 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     require(exists, s"compactSmall on absent table $path")
     withCommitRetry("compactSmall") { h =>
       val cur = h.get
-      val sized = cur.entries.map { e =>
-        (e, FsUtils.listFilesWithSize(spark, e.dir))
+      val sized = cur.entries.map(e => (e, dataFiles(e).map(_.getLen)))
+      val (small, healthy) = sized.partition { case (_, sizes) =>
+        sizes.nonEmpty && sizes.sum / sizes.length < targetBytes / 2
       }
-      val (small, healthy) = sized.partition { case (_, files) =>
-        files.nonEmpty && files.map(_._2).sum / files.length < targetBytes / 2
-      }
-      val totalBytes = small.flatMap(_._2).map(_._2).sum
+      val totalBytes = small.flatMap(_._2).sum
       val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
       // nothing small, or already as packed as it gets (e.g. ONE small
       // single-file dir, or a just-compacted dir still under target) —
@@ -1829,7 +1802,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         if (n.equalsIgnoreCase(f)) t else n }
     val finalSchema = m.fold(new StructType())(readSnapshot(_).schema)
     def selectItems(e: Entry): String = {
-      val phys = scan(e).schema
+      val phys = relation(e).schema
       val physByLogical = phys.fieldNames
         .map(p => logicalName(p).toLowerCase -> p).toMap
       finalSchema.map { f =>
@@ -2012,6 +1985,20 @@ object ManagedTable {
     spark.conf.getOption("graft.prune.maxFiles").map(_.toInt)
       .getOrElse(MaxPruneFiles)
 
+  /** The `pcol=value` dir name Spark's partitioned writer gives each of
+    * `values` (of type `dt`): the value cast to a string in the session
+    * time zone and escaped by `getPartitionPathString`, exactly as
+    * `BaseDynamicPartitionDataWriter` names its dirs — a null or empty
+    * value names the default partition. Evaluated in process: no job. */
+  private[table] def partitionDirNames(spark: SparkSession, pcol: String,
+                                       dt: DataType, values: Seq[Any]): Set[String] = {
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    values.map { v =>
+      val s = Cast(Literal.create(v, dt), StringType, tz).eval()
+      ExternalCatalogUtils.getPartitionPathString(pcol, Option(s).map(_.toString).orNull)
+    }.toSet
+  }
+
   private[table] case class Entry(dir: String, base: Option[String])
   private[table] case class Manifest(version: Long, timestamp: Long,
                                      entries: Seq[Entry],
@@ -2063,7 +2050,7 @@ object ManagedTable {
     * manifest last resolved, and `rels` only ever holds members of it. */
   private final class HeadScans {
     var head: Set[Entry] = Set.empty
-    val rels = scala.collection.mutable.HashMap.empty[Entry, BaseRelation]
+    val rels = scala.collection.mutable.HashMap.empty[Entry, HadoopFsRelation]
   }
 
   /** Tables whose head relations are kept, least recently used dropped
@@ -2105,27 +2092,46 @@ object ManagedTable {
   private def scansOf(spark: SparkSession, path: String): Option[HeadScans] =
     Option(headScans.get((spark, path)))
 
-  /** `e`'s whole-dir scan as a new logical relation (fresh attribute ids,
-    * so self-joins and `exceptAll` of two reads resolve as with two
-    * separate scans) over the head's resolved relation, resolving it with
-    * `resolve` when absent. Only an entry of the current head is kept. */
-  private[table] def headScan(spark: SparkSession, path: String, e: Entry)(
-      resolve: => DataFrame): DataFrame =
-    headScans.synchronized(scansOf(spark, path).flatMap(_.rels.get(e))) match {
-      case Some(rel) => spark.baseRelationToDataFrame(rel)
-      case None =>
-        dirResolutions.incrementAndGet()
-        val df = resolve
-        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-          .queryExecution.analyzed match {
-            case lr: LogicalRelation => headScans.synchronized {
-              scansOf(spark, path).filter(_.head(e)).foreach(_.rels(e) = lr.relation)
-            }
-            case _ => // a DataSource V2 scan (parquet dropped from
-                      // spark.sql.sources.useV1SourceList) stays unshared
-          }
-        df
+  /** `e`'s whole-dir parquet file relation: the head's resolved one, or
+    * resolved now — with `schema` when given, else from the footers — as
+    * a V1 file source whatever `spark.sql.sources.useV1SourceList` says,
+    * `e.base` as the partition discovery's `basePath`. Only an entry of
+    * the current head is kept. */
+  private[table] def headScan(spark: SparkSession, path: String, e: Entry,
+                              schema: Option[StructType] = None): HadoopFsRelation =
+    headScans.synchronized(scansOf(spark, path).flatMap(_.rels.get(e))).getOrElse {
+      dirResolutions.incrementAndGet()
+      val rel = DataSource(spark, "parquet", Seq(e.dir), schema,
+          options = e.base.map("basePath" -> _).toMap)
+        .resolveRelation().asInstanceOf[HadoopFsRelation]
+      headScans.synchronized {
+        scansOf(spark, path).filter(_.head(e)).foreach(_.rels(e) = rel)
+      }
+      rel
     }
+
+  /** One snapshot layout's file set: the listings of its dirs' relations,
+    * each narrowed, on a pruned read, to the files kept (decoded paths,
+    * as [[DataSkipping.canonPath]] gives them; None keeps every file).
+    * Partition filters prune each dir by its own partition values. A case
+    * class, so two reads of one head plan equal relations (cache lookups
+    * match) under fresh attribute ids. */
+  private final case class SnapshotIndex(
+      dirs: Seq[(FileIndex, Option[Set[String]])]) extends FileIndex {
+    def rootPaths: Seq[Path] = dirs.flatMap(_._1.rootPaths)
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      dirs.flatMap { case (index, keep) =>
+        val parts = index.listFiles(partitionFilters, dataFilters)
+        keep.fold(parts)(k => parts.map(p =>
+          p.copy(files = p.files.filter(f => k(f.getPath.toUri.getPath)))))
+      }
+    private def files = listFiles(Nil, Nil).flatMap(_.files)
+    def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+    def refresh(): Unit = dirs.foreach(_._1.refresh())
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = dirs.head._1.partitionSchema
+  }
 
   /** After a commit lands `head`: make it the live entry set and resolve
     * each whole dir the committing operation wrote with the schema it was
@@ -2138,7 +2144,7 @@ object ManagedTable {
     Option(writtenSchemas.get).foreach { known =>
       head.foreach { e =>
         known.remove(e.dir).filter(_ => e.base.isEmpty).foreach { schema =>
-          headScan(spark, path, e)(spark.read.schema(schema).parquet(e.dir))
+          headScan(spark, path, e, Some(schema))
         }
       }
     }

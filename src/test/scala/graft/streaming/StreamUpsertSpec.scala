@@ -227,7 +227,7 @@ class StreamUpsertSpec extends SparkSuite {
 
   test("streamDedupIndex compactEvery folds per-batch dirs; results unchanged") {
     // append-only ingest leaves one dir + one manifest entry per batch —
-    // a 10^5-way union per read at crawl scale. compactEvery must fold
+    // 10^5 small files and manifest entries at crawl scale. compactEvery must fold
     // the small dirs without changing the indexed corpus.
     val w = graft.common.Scratch.dir("test", "stream_dedup_compact")
     graft.common.FsUtils.deleteFiles(spark, Seq(w))
