@@ -181,37 +181,27 @@ object FsUtils {
     }
   }
 
-  /** Recursive (path, byteSize) listing of data files under a prefix —
-    * marker files (`_SUCCESS`, checksums) excluded. Drives small-file
-    * detection for incremental compaction. Metadata-only. */
-  def listFilesWithSize(spark: SparkSession, prefix: String): Seq[(String, Long)] = relisting {
+  /** The data files under a prefix, recursively, in [[listFiles]] order —
+    * what a parquet dir's file index lists: a file is left out when any
+    * name on its path below the prefix is hidden (`.`) or a marker (`_`,
+    * unless it holds `=` like a hive partition dir `__gbucket=3`), so
+    * `_SUCCESS`, checksum sidecars and `_temporary` leftovers drop out.
+    * The managed table's resolver reads a data dir's files from this one
+    * listing. Metadata-only. */
+  def listDataFiles(spark: SparkSession, prefix: String): Seq[FileStatus] = relisting {
     listingOps.incrementAndGet()
     val f = fs(prefix, hadoopConf(spark))
     val p = new Path(prefix)
     if (!f.exists(p)) Nil
     else {
-      val out = ArrayBuffer[(String, Long)]()
+      val root = f.makeQualified(p).toUri.getPath.stripSuffix("/") + "/"
+      val out = ArrayBuffer[FileStatus]()
       walkFiles(f, p, { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith("."))
-          out += ((st.getPath.toString, st.getLen))
+        val below = st.getPath.toUri.getPath.stripPrefix(root).split('/')
+        if (!below.exists(n => n.startsWith(".") || (n.startsWith("_") && !n.contains("="))))
+          out += st
       })
       out.toSeq
-    }
-  }
-
-  /** Immediate children of a directory as (subdirectory names, file names).
-    * One non-recursive metadata listing — used by the managed table's
-    * partition-pruned merge to enumerate hive partition dirs. */
-  def listChildren(spark: SparkSession, dir: String): (Seq[String], Seq[String]) = relisting {
-    listingOps.incrementAndGet()
-    val f = fs(dir, hadoopConf(spark))
-    val p = new Path(dir)
-    if (!f.exists(p)) (Nil, Nil)
-    else {
-      val st = f.listStatus(p).toSeq
-      (st.filter(_.isDirectory).map(_.getPath.getName),
-        st.filter(_.isFile).map(_.getPath.getName))
     }
   }
 

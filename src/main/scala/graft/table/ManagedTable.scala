@@ -1,11 +1,20 @@
 package graft.table
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-import org.apache.spark.sql.execution.datasources.{DataSource, FileIndex,
-  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, PartitionSpec,
+  PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 
@@ -80,24 +89,22 @@ import graft.common.FsUtils
   * Read cost model: every read of a snapshot's rows is built by ONE
   * reader ([[readSnapshot]]) — the layout scans, renames, the union by
   * name, tombstones, the caller's filter, then the DV anti-join. A data
-  * dir is written once under a fresh name and never modified, so
-  * resolving it — listing its files and inferring the schema from their
-  * footers, one Spark job — is done once per session while the dir
-  * belongs to the head snapshot. A dir this session has just written and
-  * committed skips the inference job: the commit registers it with the
-  * schema it was written with, which is the schema the footers hold
-  * (unpartitioned dirs of plain parquet types only; a partitioned or
-  * bucketed dir, whose partition columns are typed from the dir names,
-  * and any schema with field metadata, char/varchar, collations or other
-  * types keep inference). Every read of that head (`read`, `readWhere`,
-  * the DML and merge reads) builds its layout relations over the kept
-  * listings — a stats- or bloom-pruned read narrows them to the kept
-  * files, with no listing of its own — under fresh attribute ids, so
-  * self-joins and `exceptAll` of two reads plan as two scans. File counts
-  * and sizes (`pruneInfo`, compaction sizing) come from the same
-  * listings. Each head resolution drops the relations of dirs that left
-  * the head, so reuse is bounded by the live snapshot; reads of older
-  * versions resolve fresh.
+  * dir is written once under a fresh name and never modified, so its
+  * FACTS — its data files and the footer of the first one — are resolved
+  * once per process: one listing and one footer read on the driver, no
+  * Spark job ([[ManagedTable.resolve]]). The op that writes a dir
+  * resolves it, so the first read after a commit lists nothing; a dir
+  * written by another process resolves on its first read. Every read —
+  * of the head or of an older version — derives each entry's scan from
+  * those facts under its session's conf (data schema from the footer,
+  * partition values parsed from the file paths) and builds its layout
+  * relations over them under fresh attribute ids, so self-joins and
+  * `exceptAll` of two reads plan as two scans; a stats- or bloom-pruned
+  * read narrows them to the kept files. File counts and sizes
+  * (`pruneInfo`, compaction sizing), bucket-layout checks and the
+  * pruned DML's partition subdirs come from the same facts. Deletion-
+  * vector sidecars read with their fixed schema, so no read runs a
+  * schema-inference job.
   *
   * Commits: every operation that commits runs in ONE loop
   * ([[withCommitRetry]]). Each attempt resolves the head once — walking
@@ -239,13 +246,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
 
   /** The current snapshot's manifest: on the hint path, O(1) log reads
     * plus at most [[ManagedTable.checkpointInterval]]-1 delta replays —
-    * constant in table size and commit count. Scopes the session's reused
-    * data-dir relations to its entries ([[ManagedTable.retainHeadScans]]). */
-  private def lastManifest(): Option[Manifest] = {
-    val m = currentVersion.flatMap(manifestAt)
-    ManagedTable.retainHeadScans(spark, path, m.fold(Seq.empty[Entry])(_.entries))
-    m
-  }
+    * constant in table size and commit count. */
+  private def lastManifest(): Option[Manifest] = currentVersion.flatMap(manifestAt)
 
   /** (version, commitTimestampMillis) pairs, ascending. */
   def history(): Seq[(Long, Long)] = manifests().map(m => (m.version, m.timestamp))
@@ -330,15 +332,51 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     if (ts.isEmpty) df else df.drop(ts.toIndexedSeq: _*)
   }
 
-  /** One entry's whole-dir file relation, reused while the entry belongs
-    * to the head snapshot ([[ManagedTable.headScan]]). */
-  private def relation(e: Entry): HadoopFsRelation =
-    ManagedTable.headScan(spark, path, e)
+  /** The data files of `e`'s dir, from its resolved facts. */
+  private def dataFiles(e: Entry): Seq[FileStatus] = ManagedTable.resolve(spark, e.dir).files
 
-  /** The data files of `e`'s dir, from its relation's cached listing
-    * (hidden and `_` files excluded). */
-  private def dataFiles(e: Entry): Seq[FileStatusWithMetadata] =
-    relation(e).location.listFiles(Nil, Nil).flatMap(_.files)
+  /** Each data file of `dir` as its path below `dir`, split at the first
+    * `/`: a file in a partition subdir gives (subdir name, rest). */
+  private def underDir(dir: String): Seq[Array[String]] = {
+    val facts = ManagedTable.resolve(spark, dir)
+    val root = facts.root.toUri.getPath + "/"
+    facts.files.map(_.getPath.toUri.getPath.stripPrefix(root).split("/", 2))
+  }
+
+  /** `e` as one scan's parts under this session's conf, derived from its
+    * dir's resolved facts as `DataSource` and `InMemoryFileIndex` derive
+    * them: partition columns typed by `PartitioningUtils.parsePartitions`
+    * over the files' dirs below `e.base.getOrElse(e.dir)`; the data schema
+    * read from the footer the way parquet inference reads it with
+    * `mergeSchema` off, partition columns dropped, every field nullable. */
+  private def scan(e: Entry): ManagedTable.DirScan = {
+    val facts = ManagedTable.resolve(spark, e.dir)
+    val conf = spark.sessionState.conf
+    val spec = ManagedTable.parsePartitions.invoke(PartitioningUtils,
+      facts.files.map(_.getPath.getParent).distinct,
+      Boolean.box(conf.partitionColumnTypeInferenceEnabled),
+      Set(e.base.fold(facts.root)(ManagedTable.qualified(spark, _))), None,
+      Boolean.box(conf.caseSensitiveAnalysis), Boolean.box(conf.validatePartitionColumns),
+      conf.sessionLocalTimeZone, Boolean.box(conf.ignoreInvalidPartitionPaths))
+      .asInstanceOf[PartitionSpec]
+    val byDir = facts.files.groupBy(_.getPath.getParent)
+    val parts = if (spec.partitionColumns.isEmpty) Seq(InternalRow.empty -> facts.files)
+      else spec.partitions.map(p => p.values -> byDir(p.path))
+    val fileSchema = ParquetFileFormat.readSchemaFromFooter(new Footer(facts.root,
+      facts.footer.getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA",
+        Map("format" -> "Parquet")))),
+      new ParquetToSparkSchemaConverter(assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+    val dataSchema = StructType(fileSchema.filterNot(f =>
+      spec.partitionColumns.exists(p => conf.resolver(p.name, f.name))))
+    ManagedTable.DirScan(facts.root, ManagedTable.nullable(dataSchema),
+      spec.partitionColumns, parts.map { case (values, files) =>
+        PartitionDirectory(values, files.map(FileStatusWithMetadata(_)))
+      })
+  }
 
   /** The one snapshot reader: every read of `m`'s rows — [[read]],
     * [[readVersion]], [[readWhere]], the DV DML matches and the pruned DML
@@ -346,9 +384,9 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     *
     *   - one scan per LAYOUT (equal data and partition schemas), in order
     *     of first appearance so the oldest dir's columns lead: one file
-    *     relation over the reused listings of the layout's entries
+    *     relation over the resolved files of the layout's entries
     *     ([[ManagedTable.SnapshotIndex]]); with `pruneFor`, each entry's
-    *     listing narrows to the files [[pruneEntries]] keeps for that
+    *     files narrow to the ones [[pruneEntries]] keeps for that
     *     condition — an entry it prunes entirely adds no file but its
     *     layout still adds its SCHEMA (under schema drift, dropping it
     *     could lose columns the filter or the caller references);
@@ -380,16 +418,20 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         spec <- bucketSpec
         ids <- DataSkipping.bucketsFor(spark, c, spec.column, spec.keyType, spec.n)
       } yield ids.toSeq.map(Int.box)
-      val kept: Seq[(HadoopFsRelation, Option[Set[String]])] = pruneFor.fold(
-        m.entries.map(relation(_) -> Option.empty[Set[String]]))(c =>
-        pruneEntries(m.entries, c, withCounts = false)
-          .map(s => relation(s._1) -> s._2.map(_.toSet)))
-      def layout(r: HadoopFsRelation) = (r.dataSchema, r.partitionSchema)
-      val groups = kept.groupBy(k => layout(k._1))
-      val scans = kept.map(k => layout(k._1)).distinct.map(groups).map { group =>
-        val index = ManagedTable.SnapshotIndex(group.map(g => g._1.location -> g._2))
-        val logical = applyRenames(spark.baseRelationToDataFrame(
-          group.head._1.copy(location = index)(spark)), m.renames)
+      val kept: Seq[ManagedTable.DirScan] = pruneFor.fold(m.entries.map(scan))(c =>
+        pruneEntries(m.entries, c, withCounts = false).map { s =>
+          val all = scan(s._1)
+          s._2.map(_.toSet).fold(all)(k => all.copy(parts = all.parts.map(p =>
+            p.copy(files = p.files.filter(f => k(f.getPath.toUri.getPath))))))
+        })
+      def layout(s: ManagedTable.DirScan) = (s.dataSchema, s.partitionSchema)
+      val groups = kept.groupBy(layout)
+      val scans = kept.map(layout).distinct.map(groups).map { group =>
+        val index = ManagedTable.SnapshotIndex(group.map(_.root),
+          group.head.partitionSchema, group.flatMap(_.parts))
+        val logical = applyRenames(spark.baseRelationToDataFrame(HadoopFsRelation(
+          index, index.partitionSchema, group.head.dataSchema, None,
+          new ParquetFileFormat, Map.empty)(spark)), m.renames)
         val bucketed = bucketIds.filter(_ => logical.schema.fieldNames
             .exists(_.equalsIgnoreCase(ManagedTable.BucketCol)))
           .fold(logical)(ids => logical.where(col(ManagedTable.BucketCol).isin(ids: _*)))
@@ -423,7 +465,12 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * there are none — the common read stays a bare parquet scan. */
   private def applyDv(rows: DataFrame, dvs: Seq[String]): DataFrame =
     if (dvs.isEmpty) rows
-    else rows.join(spark.read.parquet(dvs: _*), Seq(DvFile, DvPos), "left_anti")
+    else rows.join(dvRows(dvs), Seq(DvFile, DvPos), "left_anti")
+
+  /** The rows of DV sidecars `dvs`, read with their fixed schema (no
+    * footer-inference job). */
+  private def dvRows(dvs: Seq[String]): DataFrame =
+    spark.read.schema(s"$DvFile STRING, $DvPos BIGINT").parquet(dvs: _*)
 
   /** Write one DV sidecar for the commit on top of `head`. Sidecars live
     * under `_graft_dv/` — outside the `d*` data-dir namespace, so data-dir
@@ -460,7 +507,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val live = carried.map(e => DataSkipping.canonPath(e.dir)).distinct
       .map(p => c === p || c.startsWith(p + "/"))
       .reduceOption(_ || _).getOrElse(lit(false))
-    val kept = spark.read.parquet(cur.dvs: _*).where(live)
+    val kept = dvRows(cur.dvs).where(live)
     if (kept.isEmpty) Nil else Seq(writeDvs(kept, cur))
   }
 
@@ -478,13 +525,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * [[foldDvs]]'s replaced sidecars. */
   private def compactedDvs(dvs: Seq[String], head: Manifest): Seq[String] =
     if (dvs.size <= ManagedTable.dvCompactThreshold(spark)) dvs
-    else Seq(writeDvs(spark.read.parquet(dvs: _*), head))
+    else Seq(writeDvs(dvRows(dvs), head))
 
   /** (dv dir count, deleted-position rows) of the current snapshot — the
     * observability hook specs assert against. */
   def dvInfo(): (Int, Long) = lastManifest() match {
     case Some(m) if m.dvs.nonEmpty =>
-      (m.dvs.size, spark.read.parquet(m.dvs: _*).count())
+      (m.dvs.size, dvRows(m.dvs).count())
     case _ => (0, 0L)
   }
 
@@ -643,14 +690,10 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     writeProps(props.copy(bucket = Some(spec)))
   }
 
-  /** Any current snapshot entry laid out with a bucket partition? (One
-    * listing per entry — setBucket is rare DDL.) */
+  /** Any current snapshot entry laid out with a bucket partition? */
   private def anyBucketedDirs(): Boolean =
-    lastManifest().exists(_.entries.exists { e =>
-      new Path(e.dir).getName.startsWith(ManagedTable.BucketCol + "=") ||
-        FsUtils.listChildren(spark, e.dir)._1
-          .exists(_.startsWith(ManagedTable.BucketCol + "="))
-    })
+    lastManifest().exists(_.entries.exists(dataFiles(_).exists(
+      _.getPath.toUri.getPath.contains(s"/${ManagedTable.BucketCol}="))))
 
   /** Clear the bucket transform: future writes are unbucketed; existing
     * bucketed dirs keep reading correctly (the hidden column is dropped
@@ -723,19 +766,18 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * `txn` stamps (appId -> version) markers into the commit atomically —
     * see [[lastTxn]]. */
   def write(df: DataFrame, partitionBy: Seq[String] = Nil,
-            txn: Map[String, Long] = Map.empty): Long =
-    ManagedTable.inOp("write") {
-      val head = lastManifest()
-      validateBatch(df, head)
-      val dir = writeData(df, partitionBy, head)
-      // clean_write replaces the table's data AND schema mapping: the batch
-      // is the new logical truth, so renames reset (old manifests keep
-      // their own renames — time travel is unaffected). The commit is
-      // blind — it does not derive from the head — so a lost race only
-      // rebases the manifest
-      withCommitRetry("write", head)(
-        commitAgainst(_, Seq(Entry(dir, None)), renames = Some(Nil), txn = txn))
-    }
+            txn: Map[String, Long] = Map.empty): Long = {
+    val head = lastManifest()
+    validateBatch(df, head)
+    val dir = writeData(df, partitionBy, head)
+    // clean_write replaces the table's data AND schema mapping: the batch
+    // is the new logical truth, so renames reset (old manifests keep
+    // their own renames — time travel is unaffected). The commit is
+    // blind — it does not derive from the head — so a lost race only
+    // rebases the manifest
+    withCommitRetry("write", head)(
+      commitAgainst(_, Seq(Entry(dir, None)), renames = Some(Nil), txn = txn))
+  }
 
   /** The newest (appId -> version) transaction marker committed for
     * `appId`, or None — Delta's `txnVersion` replay guard: a streaming
@@ -765,18 +807,17 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * the new head (Delta's blind-append fast path — N concurrent appends
     * all land, as N consecutive versions). */
   def append(df: DataFrame, partitionBy: Seq[String] = Nil,
-             txn: Map[String, Long] = Map.empty): Long =
-    ManagedTable.inOp("append") {
-      val head = lastManifest()
-      validateBatch(df, head)
-      requireFreshNames(df, "append", head)
-      val dir = writeData(df, partitionBy, head)
-      withCommitRetry("append", head) { h =>
-        // a head the retry rebases onto may have renamed a batch column
-        requireFreshNames(df, "append", h)
-        commitAppended(h, dir, txn)
-      }
+             txn: Map[String, Long] = Map.empty): Long = {
+    val head = lastManifest()
+    validateBatch(df, head)
+    requireFreshNames(df, "append", head)
+    val dir = writeData(df, partitionBy, head)
+    withCommitRetry("append", head) { h =>
+      // a head the retry rebases onto may have renamed a batch column
+      requireFreshNames(df, "append", h)
+      commitAppended(h, dir, txn)
     }
+  }
 
   /** Commit `dir` as a new entry after `head`'s, its DVs carried. */
   private def commitAppended(head: Option[Manifest], dir: String,
@@ -1100,23 +1141,19 @@ final class ManagedTable(spark: SparkSession, val path: String) {
                             extraTouched: Option[DataFrame]): Option[Long] = {
     val pcol = partitionBy.head
     val prefix = pcol + "="
-    // ONE metadata listing answers BOTH layout splittability and the
-    // carry-candidate (name, entry) list — the separate splittableLayout
-    // walk re-listed every entry a second time, and those per-dir round
-    // trips were a dominant fixed cost of a small bucketed merge
-    // (round-9 verdict item 3; PLANS.md "bucketed-merge fixed costs").
+    // the entries' resolved files answer BOTH layout splittability and
+    // the carry-candidate (name, entry) list, with no listing of their own.
     // splittable = every entry is either already a single-partition subdir
-    // reference or a dir containing ONLY pcol=… subdirs (+ marker files).
+    // reference or a dir whose data files all sit in pcol=… subdirs
     val childBuilder = Seq.newBuilder[(String, Entry)]
     val splittable = cur.entries.forall { e =>
       val name = new Path(e.dir).getName
       if (name.startsWith(prefix)) { childBuilder += name -> e; true }
       else {
-        val (dirs, files) = FsUtils.listChildren(spark, e.dir)
-        dirs.foreach(sub => childBuilder +=
+        val below = underDir(e.dir)
+        below.map(_.head).distinct.foreach(sub => childBuilder +=
           sub -> Entry(s"${e.dir}/$sub", Some(e.base.getOrElse(e.dir))))
-        dirs.forall(_.startsWith(prefix)) &&
-          files.forall(f => f.startsWith("_") || f.startsWith("."))
+        below.forall(b => b.length == 2 && b.head.startsWith(prefix))
       }
     }
     if (!splittable) return None
@@ -1196,14 +1233,13 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // per-row rewrite applies
     val newDir = writeData(rewriteSlice(readSnapshot(cur, Some(sliceCond))),
       partitionBy, Some(cur))
-    val rewritten = FsUtils.listChildren(spark, newDir)._1
-      .filter(_.startsWith(prefix)).toSet
+    val rewritten = underDir(newDir).map(_.head).filter(_.startsWith(prefix)).toSet
     // every touched old dir leaves the snapshot (rewritten-or-emptied);
     // `rewritten` also covers partitions the op newly introduced
     val drop = encodedTouched ++ rewritten
     val carried = children.collect { case (n, e) if !drop.contains(n) => e }
-    // a fresh dir with no data subdirs is unreadable (schema inference has
-    // nothing to see) — commit carried entries only; a table emptied
+    // a fresh dir with no data subdirs is unreadable (it has no footer to
+    // read a schema from) — commit carried entries only; a table emptied
     // ENTIRELY falls back to the full rewrite, which owns that edge
     val entries =
       if (rewritten.nonEmpty) carried :+ Entry(newDir, None) else carried
@@ -1335,8 +1371,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * by [[ManagedTable.MaxPruneFiles]]: when more files than that survive
     * the stats filter, pruning is SKIPPED for the entry (None) — a
     * selection that weak saves little scan time, and the full-dir read
-    * hands file enumeration back to Spark's own (distributed) listing
-    * instead of shipping a multi-million-path array through the driver.
+    * takes the entry's resolved files instead of shipping a
+    * multi-million-path array through the driver.
     * This is the same ceiling treatment the registry path handout got
     * (`PathBatchSize`, SURVEY §2.4).
     * When bloom sidecars exist ([[collectBlooms]]), equality/IN conjuncts
@@ -1369,7 +1405,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         else {
           val blooms = spark.read.parquet(bd)
           val bloomedTypes = {
-            val schema = relation(e).schema
+            val schema = scan(e).schema
             blooms.schema.fieldNames.filter(_.startsWith("bloom_"))
               .map(_.stripPrefix("bloom_")).flatMap(c =>
                 schema.fields.find(_.name.equalsIgnoreCase(c))
@@ -1409,7 +1445,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         }
       } else if (FsUtils.exists(spark, bd)) {
         // BLOOM-ONLY pruning (collectBlooms without collectStats): the
-        // file list is the dir listing, canonicalized to match the bloom
+        // file list is the dir's resolved files, canonicalized to match the bloom
         // sidecar's paths, bounded by the same cap
         val files = dataFiles(e).map(_.getPath.toUri.getPath)
         if (files.length > cap) (e, None, files.length.toLong, files.length.toLong)
@@ -1619,7 +1655,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     val m = lastManifest()
     // CAS at the target's version 0: of two racing clones to one path,
     // exactly one wins and the other fails loudly
-    ManagedTable.inOp("clone") {
+    ManagedTable.currentOp.withValue("clone") {
       target.commitAgainst(None, m.map(_.entries).getOrElse(Nil),
         m.map(_.dvs).getOrElse(Nil), Some(m.map(_.renames).getOrElse(Nil)))
     }
@@ -1640,7 +1676,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     * the maintenance op a streaming/append-heavy table needs at 100 TB —
     * each AvailableNow batch appends a small dir, and compaction cost
     * must track the SMALL tail, not the table. File sizes come from each
-    * entry's cached listing ([[dataFiles]]); the rewrite sizes its output by total
+    * entry's resolved files ([[dataFiles]]); the rewrite sizes its output by total
     * bytes / targetBytes. Returns the new version (a no-op commit when
     * nothing qualifies). */
   def compactSmall(targetBytes: Long = 128L * 1024 * 1024,
@@ -1802,7 +1838,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
         if (n.equalsIgnoreCase(f)) t else n }
     val finalSchema = m.fold(new StructType())(readSnapshot(_).schema)
     def selectItems(e: Entry): String = {
-      val phys = relation(e).schema
+      val phys = scan(e).schema
       val physByLogical = phys.fieldNames
         .map(p => logicalName(p).toLowerCase -> p).toMap
       finalSchema.map { f =>
@@ -1877,9 +1913,8 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     }
     val w = toWrite.write.mode("overwrite")
     (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(dir)
-    // partition columns would be typed by inference from the dir names,
-    // so only an unpartitioned dir's schema is known without reading it
-    if (parts.isEmpty) ManagedTable.noteWritten(dir, toWrite.schema)
+    // resolved now, so the first read after the commit lists nothing
+    ManagedTable.resolve(spark, dir)
     dir
   }
 
@@ -1938,7 +1973,6 @@ final class ManagedTable(spark: SparkSession, val path: String) {
     // refresh the _last_checkpoint hint AFTER the manifest is durable —
     // readers probing forward from it must always find the named version
     writeVersionFile(hintPath, v)
-    ManagedTable.seedHeadScans(spark, path, entries)
     v
   }
 
@@ -1960,7 +1994,7 @@ final class ManagedTable(spark: SparkSession, val path: String) {
             s"${ManagedTable.MaxCommitAttempts} optimistic-commit races", e)
         case Left(_) => run(lastManifest(), lost + 1)
       }
-    ManagedTable.inOp(op)(run(first, 0))
+    ManagedTable.currentOp.withValue(op)(run(first, 0))
   }
 }
 
@@ -1968,8 +2002,7 @@ object ManagedTable {
   /** Ceiling on the pruned file list collected to the driver by
     * [[ManagedTable.readWhere]]'s stats skipping: when more than this
     * many files survive the stats filter, pruning is skipped for the
-    * entry and the scan enumerates the directory itself (Spark's
-    * InMemoryFileIndex lists large dirs with a distributed job). At
+    * entry and the scan reads all of the entry's resolved files. At
     * ~150 bytes/path this bounds the list at ~40 MB; a selection keeping
     * more files than this prunes too little to pay for shipping the
     * paths through the driver. Overridable per session with
@@ -2042,117 +2075,104 @@ object ManagedTable {
   private[table] val chainWalkHook =
     new java.util.concurrent.atomic.AtomicReference[Long => Unit](_ => ())
 
-  // --------------------------------------------- head-scoped scan reuse
-  // See "Read cost model" in the class doc. Entries outside the head
-  // (time travel to older versions) always resolve fresh.
+  // ------------------------------------------------ resolved data dirs
+  // See "Read cost model" in the class doc.
 
-  /** One table's reusable relations: `head` is the entry set of the head
-    * manifest last resolved, and `rels` only ever holds members of it. */
-  private final class HeadScans {
-    var head: Set[Entry] = Set.empty
-    val rels = scala.collection.mutable.HashMap.empty[Entry, HadoopFsRelation]
+  /** What a data dir holds, as far as a read needs it: its qualified
+    * path, its data files (one [[FsUtils.listDataFiles]] listing) and the
+    * footer of the first one, read in process — the file Spark's parquet
+    * inference reads with `mergeSchema` off (None when the dir holds no
+    * data file). */
+  private[table] final case class DirFacts(root: Path, files: Seq[FileStatus],
+                                           footer: Option[ParquetMetadata])
+
+  /** Data files [[resolve]] keeps over all dirs, least recently used dirs
+    * dropped first (a dir counts as at least one file). */
+  private[table] val MaxResolvedFiles = 1 << 15
+
+  /** Resolved dirs by qualified path, process-wide. A dir's facts never go
+    * stale: the engine writes each data dir once, under a fresh
+    * `d<v>-<uuid8>` name, and never modifies it, so no session, table or
+    * head scopes them. Guarded by its own lock; `cachedFiles` is the sum
+    * of the kept dirs' weights. */
+  private val resolved = new java.util.LinkedHashMap[Path, DirFacts](16, 0.75f, true)
+  private var cachedFiles = 0L
+
+  private def weight(f: DirFacts): Int = math.max(1, f.files.size)
+
+  private def qualified(spark: SparkSession, dir: String): Path = {
+    val p = new Path(dir)
+    p.getFileSystem(FsUtils.hadoopConf(spark)).makeQualified(p)
   }
 
-  /** Tables whose head relations are kept, least recently used dropped
-    * first: a JVM that touches many tables (a test suite, a long-lived
-    * service) keeps the heads of the latest ones only, whatever the number
-    * of sessions. A relation holds its own Hadoop `Configuration` copy. */
-  private[table] val MaxScannedTables = 64
-
-  /** Keyed by (session, table path): a relation plans with the conf of the
-    * session that resolved it, so it is never shared across sessions. It
-    * also references that session, so the entries of a session whose
-    * context has stopped are dropped at the next head resolution rather
-    * than left to the eviction order. Guarded by its own lock. */
-  private val headScans =
-    new java.util.LinkedHashMap[(SparkSession, String), HeadScans](16, 0.75f, true) {
-      override def removeEldestEntry(
-          eldest: java.util.Map.Entry[(SparkSession, String), HeadScans]): Boolean =
-        size > MaxScannedTables
+  /** `dir`'s facts: kept ones, or listed and read now and kept. */
+  private[table] def resolve(spark: SparkSession, dir: String): DirFacts = {
+    val root = qualified(spark, dir)
+    resolved.synchronized(Option(resolved.get(root))).getOrElse {
+      val files = FsUtils.listDataFiles(spark, root.toString)
+      val conf = spark.sessionState.newHadoopConf()
+      keep(DirFacts(root, files, files.headOption.map(f => ParquetFooterReader
+        .readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))))
     }
+  }
 
-  /** Whole-dir relations resolved by table reads, reused ones excluded —
-    * the counter specs use to pin reuse, like [[FsUtils.listingOps]]. */
-  private[table] val dirResolutions = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Make `head` the table's live entry set, dropping every other relation
-    * (and the table itself when it has no head). */
-  private[table] def retainHeadScans(spark: SparkSession, path: String,
-                                     head: Seq[Entry]): Unit =
-    headScans.synchronized {
-      headScans.keySet.removeIf(_._1.sparkContext.isStopped)
-      if (head.isEmpty) headScans.remove((spark, path))
-      else {
-        val t = headScans.computeIfAbsent((spark, path), _ => new HeadScans)
-        t.head = head.toSet
-        t.rels.filterInPlace((e, _) => t.head(e))
-      }
+  /** Keep `facts`, dropping the least recently used dirs while more than
+    * [[MaxResolvedFiles]] files are kept (never the newest). */
+  private[table] def keep(facts: DirFacts): DirFacts = resolved.synchronized {
+    Option(resolved.put(facts.root, facts)).foreach(old => cachedFiles -= weight(old))
+    cachedFiles += weight(facts)
+    val eldest = resolved.values.iterator
+    while (cachedFiles > MaxResolvedFiles && resolved.size > 1) {
+      cachedFiles -= weight(eldest.next())
+      eldest.remove()
     }
+    facts
+  }
 
-  private def scansOf(spark: SparkSession, path: String): Option[HeadScans] =
-    Option(headScans.get((spark, path)))
+  /** Spark's partition discovery, `PartitioningUtils.parsePartitions`
+    * (package-private; the overload `InMemoryFileIndex` calls, with the
+    * time zone by id). */
+  private val parsePartitions = PartitioningUtils.getClass.getMethods.find(m =>
+    m.getName == "parsePartitions" && m.getParameterTypes()(6) == classOf[String]).get
 
-  /** `e`'s whole-dir parquet file relation: the head's resolved one, or
-    * resolved now — with `schema` when given, else from the footers — as
-    * a V1 file source whatever `spark.sql.sources.useV1SourceList` says,
-    * `e.base` as the partition discovery's `basePath`. Only an entry of
-    * the current head is kept. */
-  private[table] def headScan(spark: SparkSession, path: String, e: Entry,
-                              schema: Option[StructType] = None): HadoopFsRelation =
-    headScans.synchronized(scansOf(spark, path).flatMap(_.rels.get(e))).getOrElse {
-      dirResolutions.incrementAndGet()
-      val rel = DataSource(spark, "parquet", Seq(e.dir), schema,
-          options = e.base.map("basePath" -> _).toMap)
-        .resolveRelation().asInstanceOf[HadoopFsRelation]
-      headScans.synchronized {
-        scansOf(spark, path).filter(_.head(e)).foreach(_.rels(e) = rel)
-      }
-      rel
-    }
+  /** One entry as a scan under one session's conf: its dir, data and
+    * partition schemas and its files by partition. */
+  private final case class DirScan(root: Path, dataSchema: StructType,
+                                          partitionSchema: StructType,
+                                          parts: Seq[PartitionDirectory]) {
+    def schema: StructType = StructType(dataSchema ++ partitionSchema)
+  }
 
-  /** One snapshot layout's file set: the listings of its dirs' relations,
-    * each narrowed, on a pruned read, to the files kept (decoded paths,
-    * as [[DataSkipping.canonPath]] gives them; None keeps every file).
-    * Partition filters prune each dir by its own partition values. A case
-    * class, so two reads of one head plan equal relations (cache lookups
-    * match) under fresh attribute ids. */
-  private final case class SnapshotIndex(
-      dirs: Seq[(FileIndex, Option[Set[String]])]) extends FileIndex {
-    def rootPaths: Seq[Path] = dirs.flatMap(_._1.rootPaths)
+  /** `s` with every field, element and value nullable: Spark's own
+    * `asNullable` (package-private), which `DataSource` applies to a file
+    * relation's data schema. */
+  private def nullable(s: StructType): StructType =
+    classOf[StructType].getMethod("asNullable").invoke(s).asInstanceOf[StructType]
+
+  /** One snapshot layout's file set: its entries' files by partition,
+    * each narrowed, on a pruned read, to the files kept. Partition filters
+    * prune the partitions here, as `PartitioningAwareFileIndex` does. A
+    * case class, so two reads of one head plan equal relations (cache
+    * lookups match) under fresh attribute ids. */
+  private final case class SnapshotIndex(rootPaths: Seq[Path], partitionSchema: StructType,
+                                         parts: Seq[PartitionDirectory]) extends FileIndex {
     def listFiles(partitionFilters: Seq[Expression],
-                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      dirs.flatMap { case (index, keep) =>
-        val parts = index.listFiles(partitionFilters, dataFilters)
-        keep.fold(parts)(k => parts.map(p =>
-          p.copy(files = p.files.filter(f => k(f.getPath.toUri.getPath)))))
-      }
-    private def files = listFiles(Nil, Nil).flatMap(_.files)
-    def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
-    def refresh(): Unit = dirs.foreach(_._1.refresh())
-    def sizeInBytes: Long = files.map(_.getLen).sum
-    def partitionSchema: StructType = dirs.head._1.partitionSchema
-  }
-
-  /** After a commit lands `head`: make it the live entry set and resolve
-    * each whole dir the committing operation wrote with the schema it was
-    * written with ([[noteWritten]]), so the next read of the dir runs no
-    * footer-inference job. Counted in [[dirResolutions]] like any other
-    * resolution; dirs without a known schema resolve on first read. */
-  private[table] def seedHeadScans(spark: SparkSession, path: String,
-                                   head: Seq[Entry]): Unit = {
-    retainHeadScans(spark, path, head)
-    Option(writtenSchemas.get).foreach { known =>
-      head.foreach { e =>
-        known.remove(e.dir).filter(_ => e.base.isEmpty).foreach { schema =>
-          headScan(spark, path, e, Some(schema))
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val names = partitionSchema.fieldNames
+      partitionFilters.filter(_.references.forall(a => names.contains(a.name)))
+        .reduceOption(And).fold(parts) { cond =>
+          val keep = Predicate.createInterpreted(cond.transform {
+            case a: AttributeReference =>
+              val i = names.indexOf(a.name)
+              BoundReference(i, partitionSchema(i).dataType, nullable = true)
+          })
+          parts.filter(p => keep.eval(p.values))
         }
-      }
     }
+    def inputFiles: Array[String] = parts.flatMap(_.files).map(_.getPath.toUri.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = parts.flatMap(_.files).map(_.getLen).sum
   }
-
-  /** Relations currently kept for the table at `path` (spec access). */
-  private[table] def headScanCount(spark: SparkSession, path: String): Int =
-    headScans.synchronized(scansOf(spark, path).fold(0)(_.rels.size))
 
   /** Commits between FULL (self-contained) manifests in the log: every
     * Nth version is written full, the rest as O(changed dirs) action
@@ -2172,47 +2192,6 @@ object ManagedTable {
     * (`DESCRIBE HISTORY`'s operation column). Thread-local so concurrent
     * writers on one JVM each record their own op. */
   private val currentOp = new scala.util.DynamicVariable[String]("commit")
-
-  /** The schema each data dir written by the in-flight operation was
-    * written with, by dir; null outside an operation. A plain thread-local
-    * scoped by [[inOp]] (not inherited by threads the op starts), so no
-    * entry outlives the operation that wrote the dir. */
-  private val writtenSchemas =
-    new ThreadLocal[scala.collection.mutable.Map[String, StructType]]
-
-  /** Run one table operation: stamps `op` into its commits and collects
-    * the schemas of the dirs it writes for [[seedHeadScans]]. A nested
-    * operation shares the outermost one's schemas. */
-  private[table] def inOp[T](op: String)(body: => T): T =
-    currentOp.withValue(op) {
-      if (writtenSchemas.get != null) body
-      else {
-        writtenSchemas.set(scala.collection.mutable.HashMap.empty)
-        try body finally writtenSchemas.remove()
-      }
-    }
-
-  /** Record that `dir` was just written from a frame of `schema`, when a
-    * read of its footers would infer exactly that schema back. */
-  private[table] def noteWritten(dir: String, schema: StructType): Unit =
-    Option(writtenSchemas.get).filter(_ => footerRoundTrips(schema))
-      .foreach(_(dir) = schema)
-
-  /** Types whose Spark schema a parquet write stores in the footer and
-    * inference reads back unchanged. Anything else — char/varchar, a
-    * collation, variant, UDTs, field metadata — keeps inference. */
-  private def footerRoundTrips(dt: DataType): Boolean = dt match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType |
-         FloatType | DoubleType | BinaryType | DateType | TimestampType |
-         TimestampNTZType | _: DecimalType => true
-    case s: StringType =>
-      s == StringType && !s.isInstanceOf[CharType] && !s.isInstanceOf[VarcharType]
-    case ArrayType(e, _) => footerRoundTrips(e)
-    case MapType(k, v, _) => footerRoundTrips(k) && footerRoundTrips(v)
-    case StructType(fs) =>
-      fs.forall(f => f.metadata == Metadata.empty && footerRoundTrips(f.dataType))
-    case _ => false
-  }
 
   /** Tombstone prefix for dropped columns: a drop is a rename to a name
     * reads always exclude, so old data dirs keep their files untouched

@@ -24,7 +24,7 @@ trait SparkSuite extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   /** `body`'s result and the number of Spark jobs started while it ran,
     * counted by a listener — the spec-side job counter, like
-    * `ManagedTable.dirResolutions` for scans. */
+    * `FsUtils.listingOps` for listings. */
   def jobsDuring[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     org.apache.spark.TestBus.drain(sc)
@@ -44,10 +44,16 @@ trait SparkSuite extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   /** Resolve a ManagedTable data dir by its version-hint prefix (dir names
     * are `d<v>-<random>`; exactly one per version in single-writer tests). */
   def dataDirOf(root: String, v: Int): String = {
-    val hits = graft.common.FsUtils.listChildren(spark, root)._1
-      .filter(_.startsWith(s"d$v-"))
+    val hits = childDirs(root).filter(_.startsWith(s"d$v-"))
     assert(hits.size == 1, s"expected one d$v-* dir under $root, got $hits")
     s"$root/${hits.head}"
+  }
+
+  /** Names of the subdirectories of `dir`, through Hadoop's FileSystem. */
+  def childDirs(dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(_.isDirectory).map(_.getPath.getName)
   }
 }
 

@@ -93,12 +93,16 @@ class FsUtilsSpec extends SparkSuite {
     assert(FsUtils.listFiles(spark, w) === hadoopListFiles(w))
     assert(FsUtils.listFiles(spark, w, ".json") === hadoopListFiles(w, ".json"))
     assert(FsUtils.listFiles(spark, w, ".json").size === 5)
-    // listFilesWithSize: same order, marker files out, lengths intact
-    FsUtils.writeText(spark, s"$w/a/_SUCCESS", "")
-    assert(FsUtils.listFilesWithSize(spark, w).map(_._1) ===
-      hadoopListFiles(w).filterNot(_.endsWith("_SUCCESS")))
-    assert(FsUtils.listFilesWithSize(spark, w).forall { case (p, n) =>
-      n === p.stripPrefix("file:").stripPrefix(s"$w/").length })
+    // listDataFiles: same order, marker files and dirs out (a `_` dir
+    // holding `=` is a partition dir and stays), lengths intact
+    Seq("a/_SUCCESS", "_temporary/0/t.json", "__gbucket=1/b.json")
+      .foreach(f => FsUtils.writeText(spark, s"$w/$f", f))
+    val data = FsUtils.listDataFiles(spark, w).map(_.getPath.toString)
+    assert(data === hadoopListFiles(w).filterNot(p =>
+      p.endsWith("_SUCCESS") || p.contains("/_temporary/")))
+    assert(data.exists(_.endsWith("__gbucket=1/b.json")))
+    assert(FsUtils.listDataFiles(spark, w).forall { f =>
+      f.getLen === f.getPath.toString.stripPrefix("file:").stripPrefix(s"$w/").length })
   }
 
   test("listFiles of a single file, an absent prefix and a dir of .crc sidecars") {
@@ -107,7 +111,7 @@ class FsUtilsSpec extends SparkSuite {
     assert(FsUtils.listFiles(spark, s"$w/one.json") === hadoopListFiles(s"$w/one.json"))
     assert(FsUtils.listFiles(spark, s"$w/one.json").size === 1)
     assert(FsUtils.listFiles(spark, s"$w/absent") === Nil)
-    assert(FsUtils.listFilesWithSize(spark, s"$w/absent") === Nil)
+    assert(FsUtils.listDataFiles(spark, s"$w/absent") === Nil)
     // parquet through the local checksum FS leaves .crc sidecars that
     // both listings hide
     spark.range(4).repartition(2).write.parquet(s"$w/pq")
@@ -115,7 +119,7 @@ class FsUtilsSpec extends SparkSuite {
       .asScala.exists(_.getFileName.toString.endsWith(".crc")))
     assert(FsUtils.listFiles(spark, s"$w/pq") === hadoopListFiles(s"$w/pq"))
     assert(!FsUtils.listFiles(spark, s"$w/pq").exists(_.endsWith(".crc")))
-    assert(FsUtils.listFilesWithSize(spark, s"$w/pq").map(_._1) ===
+    assert(FsUtils.listDataFiles(spark, s"$w/pq").map(_.getPath.toString) ===
       hadoopListFiles(s"$w/pq", ".parquet"))
   }
 

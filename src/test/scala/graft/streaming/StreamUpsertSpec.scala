@@ -353,7 +353,7 @@ class StreamUpsertSpec extends SparkSuite {
     // the micro-batch's fresh dir holds <= 2 of 16 bucket dirs; the other
     // buckets carried by manifest reference
     val newest = dataDirOf(s"$w/table", 1)
-    val touched = graft.common.FsUtils.listChildren(spark, newest)._1
+    val touched = childDirs(newest)
       .filter(_.startsWith(ManagedTable.BucketCol + "="))
     assert(touched.nonEmpty && touched.size <= 2,
       s"expected <=2 touched bucket dirs, got ${touched.size}")

@@ -19,11 +19,11 @@ class BucketTransformSpec extends SparkSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   private def bucketDirs(dir: String): Seq[String] =
-    graft.common.FsUtils.listChildren(spark, dir)._1
+    childDirs(dir)
       .filter(_.startsWith(ManagedTable.BucketCol + "="))
 
   private def dataDirs(path: String): Seq[String] =
-    graft.common.FsUtils.listChildren(spark, path)._1
+    childDirs(path)
       .filter(_.startsWith("d")).map(d => s"$path/$d")
 
   test("bucketed point lookup matches the plain read and plans a partition filter") {

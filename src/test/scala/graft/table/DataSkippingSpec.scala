@@ -125,15 +125,15 @@ class DataSkippingSpec extends SparkSuite {
         .selectExpr("id", "md5(CAST(id AS STRING)) AS pad").coalesce(1))
     }
     val before = t.read().collect().map(_.toString).sorted.toSeq
-    val healthyFiles = graft.common.FsUtils
-      .listFilesWithSize(spark, dataDirOf(t.path, 0)).sortBy(_._1)
+    def files(dir: String) = graft.common.FsUtils.listDataFiles(spark, dir)
+      .map(f => (f.getPath.toString, f.getLen)).sortBy(_._1)
+    val healthyFiles = files(dataDirOf(t.path, 0))
     val v = t.compactSmall(targetBytes = 64 * 1024)
     assert(t.currentVersion.contains(v))
     // data unchanged
     assert(t.read().collect().map(_.toString).sorted.toSeq === before)
     // healthy dir untouched, byte-identical, still referenced
-    assert(graft.common.FsUtils.listFilesWithSize(spark, dataDirOf(t.path, 0))
-      .sortBy(_._1) === healthyFiles)
+    assert(files(dataDirOf(t.path, 0)) === healthyFiles)
     // the five tiny dirs collapsed into one entry: total data files shrink
     val (_, total) = t.pruneInfo("id >= 0")
     assert(total === 2, s"expected healthy + 1 compacted entry, got $total files")

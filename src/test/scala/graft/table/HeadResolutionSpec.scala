@@ -72,4 +72,41 @@ class HeadResolutionSpec extends SparkSuite {
     assert(t.read().as[(Int, String)].collect().sortBy(_._1).toSeq ===
       Seq((1, "a"), (2, "b"), (3, "c")))
   }
+
+  test("an append that loses every commit race gives up after 10 and leaves an orphan vacuum reaps") {
+    val t = table()
+    t.write(Seq((1, "a")).toDF("id", "v"))
+    t.append(Seq((2, "b")).toDF("id", "v")) // head v1 is a delta
+    val racer = ManagedTable(spark, t.path)
+    val racing = new AtomicBoolean
+    val raced = new AtomicInteger
+    // one racing append per head walk: the walk's first step reads the
+    // parent of the head it resolves; the racer's own walks do not race
+    ManagedTable.chainWalkHook.set { pv =>
+      if (!racing.get && racer.currentVersion.contains(pv + 1) &&
+          racing.compareAndSet(false, true)) {
+        try racer.append(Seq((100 + raced.incrementAndGet(), "racer")).toDF("id", "v"))
+        finally racing.set(false)
+      }
+    }
+    val e = try intercept[java.io.IOException] {
+      t.append(Seq((-1, "loser")).toDF("id", "v"))
+    } finally ManagedTable.chainWalkHook.set(_ => ())
+    assert(e.getMessage.contains(s"lost ${ManagedTable.MaxCommitAttempts} optimistic-commit races"))
+    assert(e.getCause.isInstanceOf[ManagedTable.ConcurrentWriteException])
+    assert(raced.get === ManagedTable.MaxCommitAttempts)
+    val last = 1L + ManagedTable.MaxCommitAttempts
+    assert(t.currentVersion.contains(last))
+    val expected = Seq((1, "a"), (2, "b")) ++ (101 to 110).map(i => (i, "racer"))
+    def rows = t.read().as[(Int, String)].collect().sortBy(_._1).toSeq
+    assert(rows === expected)
+    // the loser's data dir is on disk, referenced by no manifest
+    val referenced = t.manifestAt(last).get.entries
+      .map(e => new org.apache.hadoop.fs.Path(e.dir).getName).toSet
+    def dataDirs = childDirs(t.path).filter(_.startsWith("d")).toSet
+    assert((dataDirs -- referenced).size === 1)
+    t.vacuum(0, enforceRetention = false)
+    assert(dataDirs === referenced)
+    assert(rows === expected)
+  }
 }

@@ -3,6 +3,7 @@ package graft.table
 import java.nio.file.Files
 
 import graft.SparkSuite
+import graft.common.FsUtils
 
 class ManagedTableSpec extends SparkSuite {
   import spark.implicits._
@@ -72,7 +73,7 @@ class ManagedTableSpec extends SparkSuite {
     assert(rows.filter(_._1 == "p0").forall(_._2 >= 10))
     // untouched partitions carried byte-identical in the OLD dir
     assert(Seq("p1", "p2").map(p => fileMap(s"$d0/part=$p")) === untouchedBefore)
-    val (d1dirs, _) = graft.common.FsUtils.listChildren(spark, dataDirOf(root, 1))
+    val d1dirs = childDirs(dataDirOf(root, 1))
     assert(d1dirs === Seq("part=p0"))
   }
 
@@ -90,7 +91,7 @@ class ManagedTableSpec extends SparkSuite {
     assert(rows.filter(r => r._1 == "p0" && r._2 < 10).forall(_._3 === 11.0))
     assert(rows.filter(r => r._1 != "p0" || r._2 >= 10).forall(_._3 === 1.0))
     assert(Seq("p1", "p2").map(p => fileMap(s"$d0/part=$p")) === untouchedBefore)
-    val (d1dirs, _) = graft.common.FsUtils.listChildren(spark, dataDirOf(root, 1))
+    val d1dirs = childDirs(dataDirOf(root, 1))
     assert(d1dirs === Seq("part=p0"))
   }
 
@@ -111,7 +112,7 @@ class ManagedTableSpec extends SparkSuite {
     assert(rows.filter(_._1 != "p0").forall(_._3 == "old"))
     // untouched partitions carried byte-identical; only p0 rewritten
     assert(Seq("p1", "p2").map(p => fileMap(s"$d0/part=$p")) === untouchedBefore)
-    val (d1dirs, _) = graft.common.FsUtils.listChildren(spark, dataDirOf(root, 1))
+    val d1dirs = childDirs(dataDirOf(root, 1))
     assert(d1dirs === Seq("part=p0"))
     // a batch that reaches into a partition the predicate doesn't cover
     // is rejected before anything commits
@@ -192,7 +193,7 @@ class ManagedTableSpec extends SparkSuite {
     assert(!rows.exists(_._2 == 3))
     assert(rows.find(_._2 == 300).get._3 === "new")
     assert(Seq("p1", "p2").map(p => fileMap(s"$d0/part=$p")) === untouchedBefore)
-    val (d1dirs, _) = graft.common.FsUtils.listChildren(spark, dataDirOf(root, 1))
+    val d1dirs = childDirs(dataDirOf(root, 1))
     assert(d1dirs === Seq("part=p0"))
   }
 
@@ -378,68 +379,69 @@ class ManagedTableSpec extends SparkSuite {
     assert(FsUtils.listingOps.get() === again)
   }
 
-  // ---- head-scoped scan reuse: each data dir of the head resolves once
+  // ---- resolved data dirs: each dir is listed once per process
 
   private def headEntries(t: ManagedTable): Int =
     t.manifestAt(t.currentVersion.get).get.entries.size
+
+  /** `body`'s result, asserting it listed nothing through [[FsUtils]]. */
+  private def listsNothing[T](body: => T): T = {
+    val before = FsUtils.listingOps.get()
+    val out = body
+    assert(FsUtils.listingOps.get() === before)
+    out
+  }
 
   test("repeated reads of an unchanged head resolve no data dir again") {
     val root = tmp() + "/t"
     val t = ManagedTable(spark, root)
     t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))
     t.append(Seq((3, "c")).toDF("id", "v"))
-    assert(t.read().count() === 3)
-    val before = ManagedTable.dirResolutions.get()
-    assert(t.read().count() === 3)
-    assert(t.readWhere("id = 3").count() === 1)
-    // a new handle on the same path shares the session's relations
-    assert(ManagedTable(spark, root).read().count() === 3)
-    assert(ManagedTable.dirResolutions.get() === before)
-    // an append resolves only its own new dir; the carried ones are reused
+    listsNothing {
+      assert(t.read().count() === 3)
+      assert(t.read().count() === 3)
+      assert(t.readWhere("id = 3").count() === 1)
+      // a new handle on the same path reads the same resolved dirs
+      assert(ManagedTable(spark, root).read().count() === 3)
+    }
+    // an append lists only its own new dir, when it writes it; the
+    // carried ones are reused and the read lists nothing
+    val before = FsUtils.listingOps.get()
     t.append(Seq((4, "d")).toDF("id", "v"))
-    assert(t.read().count() === 4)
-    assert(ManagedTable.dirResolutions.get() === before + 1)
-    assert(ManagedTable.headScanCount(spark, root) === headEntries(t))
+    assert(FsUtils.listingOps.get() === before + 1)
+    listsNothing(assert(t.read().count() === 4))
     // once an overwrite retires them, time travel to the old version
-    // resolves its three dirs fresh each time and keeps none of them
+    // reads its three dirs from the same facts, with no listing or job
     t.write(Seq((9, "z")).toDF("id", "v"))
     assert(t.read().count() === 1)
-    val atHead = ManagedTable.dirResolutions.get()
-    assert(t.readVersion(2).count() === 4)
-    assert(t.readVersion(2).count() === 4)
-    assert(ManagedTable.dirResolutions.get() === atHead + 6)
-    assert(ManagedTable.headScanCount(spark, root) === 1)
+    listsNothing {
+      assert(t.readVersion(2).count() === 4)
+      assert(jobsDuring(t.readVersion(2))._2 === 0)
+    }
   }
 
   test("merge, optimize, restore and vacuum: the next read sees exactly the new head") {
     val root = tmp() + "/t"
     val t = ManagedTable(spark, root)
     def rows: Seq[(Int, String)] =
-      t.read().as[(Int, String)].collect().sortBy(_._1).toSeq
-    def bounded(): Unit =
-      assert(ManagedTable.headScanCount(spark, root) <= headEntries(t))
+      listsNothing(t.read().as[(Int, String)].collect().sortBy(_._1).toSeq)
     t.write(Seq((1, "a"), (2, "b")).toDF("id", "v"))             // v0
     t.append(Seq((3, "c")).toDF("id", "v"))                      // v1
     val v1 = Seq((1, "a"), (2, "b"), (3, "c"))
     assert(rows === v1)
-    bounded()
     t.merge(Seq((1, "A"), (4, "d")).toDF("id", "v"),
       "source.id == updates.id")                                  // v2
     val v2 = Seq((1, "A"), (2, "b"), (3, "c"), (4, "d"))
     assert(rows === v2)
     assert(t.readWhere("id = 1").as[(Int, String)].collect().toSeq === Seq((1, "A")))
-    bounded()
     t.optimize()                                                  // v3
     assert(rows === v2)
     assert(headEntries(t) === 1)
-    bounded()
     t.restore(1)                                                  // v4
     assert(rows === v1)
     assert(t.readWhere("id = 1").as[(Int, String)].collect().toSeq === Seq((1, "a")))
-    bounded()
     t.vacuum(0, enforceRetention = false)
     assert(rows === v1)
-    bounded()
   }
 
   test("a table deleted and recreated at the same path reads the new rows") {
@@ -450,26 +452,28 @@ class ManagedTableSpec extends SparkSuite {
     val t = ManagedTable(spark, root)
     assert(!t.exists)
     assert(t.read().isEmpty)
-    assert(ManagedTable.headScanCount(spark, root) === 0)
     t.write(Seq((2, "new"), (3, "new")).toDF("id", "v"))
     assert(t.read().as[(Int, String)].collect().sortBy(_._1).toSeq ===
       Seq((2, "new"), (3, "new")))
   }
 
-  test("head relations are kept for a bounded number of tables") {
-    val src = ManagedTable(spark, tmp() + "/src")
-    src.write(Seq((1, "a")).toDF("id", "v"))
-    src.read()
-    assert(ManagedTable.headScanCount(spark, src.path) === 1)
-    // zero-copy clones: each is a new table path over the same data dir
-    val clones = (0 to ManagedTable.MaxScannedTables)
-      .map(i => src.cloneTo(s"${src.path}-c$i"))
-    clones.foreach(_.read())
-    assert(ManagedTable.headScanCount(spark, src.path) === 0)
-    assert(ManagedTable.headScanCount(spark, clones.last.path) === 1)
-    // an evicted table resolves again on its next read and stays correct
-    assert(src.read().count() === 1)
-    assert(ManagedTable.headScanCount(spark, src.path) === 1)
+  test("an evicted resolved dir re-resolves and reads the same rows") {
+    val t = ManagedTable(spark, tmp() + "/t")
+    t.write(Seq((1, "a")).toDF("id", "v"))
+    t.append(Seq((2, "b")).toDF("id", "v"))
+    def rows = t.read().as[(Int, String)].collect().sortBy(_._1).toSeq
+    listsNothing(assert(rows === Seq((1, "a"), (2, "b"))))
+    // a dir of MaxResolvedFiles files, resolved last, pushes every other
+    // dir out, least recently used first
+    val file = FsUtils.listDataFiles(spark, dataDirOf(t.path, 0)).head
+    ManagedTable.keep(ManagedTable.DirFacts(new org.apache.hadoop.fs.Path("file:/filler"),
+      Seq.fill(ManagedTable.MaxResolvedFiles)(file), None))
+    // the table's two dirs resolve again on the next read, which is correct
+    val before = FsUtils.listingOps.get()
+    assert(rows === Seq((1, "a"), (2, "b")))
+    assert(FsUtils.listingOps.get() === before + 2)
+    // and they are kept again: the filler left to make room for them
+    listsNothing(assert(rows === Seq((1, "a"), (2, "b"))))
   }
 
   test("a freshly committed dir reads with no inference job and the inferred schema") {
@@ -506,12 +510,12 @@ class ManagedTableSpec extends SparkSuite {
     assert(inferred(3).fieldNames.contains("price"))
     assert(r3.schema === inferred(3))
     assert(r3.where("price = 1").count() === 2)
-    // a partitioned write keeps inference: its partition column is typed
-    // from the dir names
+    // a partitioned dir too: its partition column is typed from the dir
+    // names in process
     t.append(typed.withColumnRenamed("amount", "price").where("id = 0"),
       partitionBy = Seq("id"))
     val (r4, j4) = jobsDuring(t.read())
-    assert(j4 >= 1)
+    assert(j4 === 0)
     assert(r4.count() === 6)
   }
 
@@ -674,8 +678,8 @@ class ManagedTableSpec extends SparkSuite {
     val clone = src.cloneTo(src.path + "-clone")
     // zero-copy: the clone's manifest references the source's data dir
     assert(clone.read().count() === 2)
-    assert(graft.common.FsUtils.listFilesWithSize(spark, clone.path)
-      .forall(_._1.contains("_graft_log")), "clone must hold no data files")
+    assert(graft.common.FsUtils.listFiles(spark, clone.path)
+      .forall(_.contains("_graft_log")), "clone must hold no data files")
     // divergence: clone upsert doesn't touch the source, and vice versa
     clone.merge(Seq((3, "c")).toDF("id", "v"), "source.id == updates.id")
     src.merge(Seq((4, "d")).toDF("id", "v"), "source.id == updates.id")
@@ -744,7 +748,7 @@ class ManagedTableSpec extends SparkSuite {
     t.write(Seq.tabulate(40)(i => (s"p${i % 2}", i)).toDF("part", "id").repartition(8),
       partitionBy = Seq("part"))
     t.optimize(targetPartitions = 1, partitionBy = Seq("part"))
-    val (dirs, _) = graft.common.FsUtils.listChildren(spark, dataDirOf(root, 1))
+    val dirs = childDirs(dataDirOf(root, 1))
     assert(dirs.sorted === Seq("part=p0", "part=p1"))
     assert(t.read().count() === 40)
   }
@@ -852,7 +856,7 @@ class ManagedTableSpec extends SparkSuite {
     assert(manifest.contains("part=p1") && manifest.contains("part=p2"))
     assert(!manifest.contains("part=p0\"") || manifest.contains("d1"))
     // the rewritten dir holds ONLY the touched partition
-    val (d1dirs, _) = graft.common.FsUtils.listChildren(spark, dataDirOf(root, 1))
+    val d1dirs = childDirs(dataDirOf(root, 1))
     assert(d1dirs === Seq("part=p0"))
     // the partition column survives the carried subdir reads
     assert(t.read().where($"part" === "p2").count() === 10)

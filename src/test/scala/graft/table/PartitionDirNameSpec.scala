@@ -9,7 +9,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
-import graft.common.FsUtils
 
 /** [[ManagedTable.partitionDirNames]] names partition dirs in process; a
   * real `partitionBy` write is the oracle: for every value set, the names
@@ -23,7 +22,7 @@ class PartitionDirNameSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft-pname").toString + "/w"
     df.withColumn("one", org.apache.spark.sql.functions.lit(1))
       .write.partitionBy("k").parquet(dir)
-    val written = FsUtils.listChildren(spark, dir)._1.filter(_.startsWith("k=")).toSet
+    val written = childDirs(dir).filter(_.startsWith("k=")).toSet
     val computed = ManagedTable.partitionDirNames(spark, "k",
       df.schema("k").dataType, df.select(col("k")).collect().toSeq.map(_.get(0)))
     (written, computed)
@@ -35,14 +34,16 @@ class PartitionDirNameSpec extends SparkSuite {
   }
 
   // the characters Spark escapes, hex digits (escaped-looking values),
-  // control characters and plain ASCII. ASCII only: `escapePathName`
-  // leaves non-ASCII characters as they are, and a JVM whose path
-  // encoding is not UTF-8 cannot create such file names for the oracle
+  // control characters, plain ASCII and non-ASCII letters, CJK and emoji
+  // (outside the BMP), which `escapePathName` leaves as they are
   private val cpGen: Gen[Int] = Gen.frequency(
     4 -> Gen.oneOf("%'=/:#".map(_.toInt)),
     2 -> Gen.oneOf("0123456789ABCDEFabcdef".map(_.toInt)),
     3 -> Gen.choose(0x20, 0x7E),
-    1 -> Gen.choose(0x01, 0x1F))
+    1 -> Gen.choose(0x01, 0x1F),
+    2 -> Gen.choose(0xA0, 0x24F),
+    1 -> Gen.choose(0x4E00, 0x4FFF),
+    1 -> Gen.choose(0x1F600, 0x1F64F))
 
   private val strGen: Gen[String] = for {
     n <- Gen.choose(0, 12)
@@ -53,7 +54,8 @@ class PartitionDirNameSpec extends SparkSuite {
     val values = (0 until 300).flatMap(i =>
       strGen.apply(Gen.Parameters.default, Seed(11L + i))).map(Option(_)) ++
       Seq(Some(""), None, Some("%"), Some("%25"), Some("O'Brien"),
-        Some("a=b/c:d#e"), Some(" lead"), Some("del" + 0x7f.toChar))
+        Some("a=b/c:d#e"), Some(" lead"), Some("del" + 0x7f.toChar),
+        Some("é"), Some("日本語"), Some("a😀b"))
     assertSame(values.toDF("k"))
   }
 
